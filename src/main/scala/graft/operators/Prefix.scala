@@ -70,20 +70,26 @@ object Prefix {
     * ~200 KB at parts = 32). See the rationale at the use site in
     * [[withSliceId]].
     *
-    * SCOPE AND INVALIDATION CONTRACT (r15, closing the r14 ADVICE): both
-    * this memo and [[sliceLayoutCache]] assume the SOURCE DATA BEHIND A
-    * CANONICAL PLAN IS IMMUTABLE FOR THE SESSION — the long-established
-    * shared-ingest assumption of [[graft.QueryCatalog]]'s wide/docs/embs
-    * caches. Canonical-plan equality cannot observe a same-path REWRITE
-    * (`mode("overwrite")` writers such as ScaleGen/Bucketing): a re-read
-    * after a rewrite would be served stale bounds / a stale layout —
-    * results stay CORRECT (any sorted bounds give a valid monotone slice
-    * assignment; the layout is re-persisted from the new data only after
-    * invalidation) but slicing can silently degrade. Callers that rewrite
-    * a source mid-session must call [[invalidate]] (or use a new
-    * session). Outer maps are keyed per session and purged when a
-    * session's context stops, so stopped sessions pin no plans or cached
-    * RDDs (r14 ADVICE low). */
+    * SCOPE AND INVALIDATION CONTRACT: both this memo and
+    * [[sliceLayoutCache]] are keyed by canonical plan, and canonical-plan
+    * equality cannot observe a same-path REWRITE of a source. What a
+    * re-read after a rewrite sees (checked on Spark 4.1.2):
+    *   - a rewrite through Spark's own writer
+    *     (`write.mode("overwrite").parquet(path)`, as ScaleGen does)
+    *     makes Spark recache every cached plan over that path, so a
+    *     persisted layout is rebuilt and the re-read returns the NEW
+    *     rows. (`NamedData.writeBucketed` drops its table through Spark
+    *     first, which uncaches every plan over it.) The memoized bounds
+    *     stay those of the old data; any sorted bounds give a valid
+    *     monotone slice assignment, so results stay correct and only the
+    *     balance of the slices can degrade;
+    *   - a replacement OUTSIDE Spark (another process, a file copy) is
+    *     invisible to the CacheManager: the persisted layout keeps
+    *     serving the OLD rows.
+    * Only external replacement needs [[invalidate]] (or a new session)
+    * before the re-read. Outer maps are keyed per session and purged
+    * when a session's context stops, so stopped sessions pin no plans or
+    * cached RDDs (r14 ADVICE low). */
   private val sliceBoundsCache = scala.collection.concurrent.TrieMap[
     org.apache.spark.sql.SparkSession,
     scala.collection.concurrent.TrieMap[
@@ -105,8 +111,9 @@ object Prefix {
     * the cached relation by canonical-plan equality (`sameResult`), so no
     * expression ids ever cross query boundaries. Values are computed from
     * the parquet inputs on first use and die with the session — nothing
-    * survives a run. Insertion-ordered per session with a bounded cap:
-    * overflow unpersists the OLDEST layout only (never a full clear). */
+    * survives a run. Access-ordered per session with a bounded cap:
+    * overflow unpersists the LEAST RECENTLY USED layout only (never a
+    * full clear). */
   private val sliceLayoutCache = scala.collection.concurrent.TrieMap[
     org.apache.spark.sql.SparkSession,
     scala.collection.mutable.LinkedHashMap[
@@ -115,8 +122,9 @@ object Prefix {
   private val sliceLayoutMax = 16
 
   /** Drop every memoized slice bound and persisted slice layout of
-    * `spark` — the invalidation hook for callers that REWRITE a source
-    * path mid-session (see the contract on [[sliceBoundsCache]]). */
+    * `spark` — the invalidation hook for callers that replace a source
+    * path OUTSIDE Spark mid-session (see the contract on
+    * [[sliceBoundsCache]]). */
   def invalidate(spark: org.apache.spark.sql.SparkSession): Unit = {
     sliceBoundsCache.remove(spark)
     sliceLayoutCache.remove(spark).foreach { m =>
@@ -128,10 +136,12 @@ object Prefix {
     }
   }
 
-  /** Test/probe introspection: registered layout count for `spark`. */
-  private[graft] def sliceLayoutCount(
-      spark: org.apache.spark.sql.SparkSession): Int =
-    sliceLayoutCache.get(spark).map(m => m.synchronized(m.size)).getOrElse(0)
+  /** Test introspection: the registered layouts of `spark`, least
+    * recently used first. */
+  private[graft] def sliceLayouts(
+      spark: org.apache.spark.sql.SparkSession): Seq[DataFrame] =
+    sliceLayoutCache.get(spark).map(m => m.synchronized(m.values.toList))
+      .getOrElse(Nil)
 
   private def purgeStoppedSessions(): Unit = {
     sliceBoundsCache.keys.filter(_.sparkContext.isStopped)
@@ -172,14 +182,18 @@ object Prefix {
       // evaluations (cache substitution happens after analysis), so one
       // layout registers exactly once per session
       val key = laid.queryExecution.analyzed.canonicalized
-      if (!perSession.contains(key)) {
-        if (perSession.size >= sliceLayoutMax) {
-          val oldest = perSession.head._1
-          scala.util.Try(perSession(oldest).unpersist(blocking = false))
-          perSession.remove(oldest)
-        }
-        laid.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        perSession(key) = laid
+      perSession.remove(key) match {
+        // a hit moves to the end, so eviction takes the least recently
+        // used layout; the first-registered frame stays the stored value
+        case Some(first) => perSession(key) = first
+        case None =>
+          if (perSession.size >= sliceLayoutMax) {
+            val (lru, lruDf) = perSession.head
+            scala.util.Try(lruDf.unpersist(blocking = false))
+            perSession.remove(lru)
+          }
+          laid.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          perSession(key) = laid
       }
     }
     laid
@@ -554,23 +568,10 @@ object Prefix {
     * moves the data at least twice. Offsets beyond 256 fall back to the
     * r7 positional join (the edge collect is parts·|n| rows — bounded
     * only while |n| is small).
-    */
-  def positionalLag(df: DataFrame, keyCol: String, orderCol: Column,
-                    inNames: Seq[String], n: Int,
-                    outNames: Seq[String]): DataFrame =
-    positionalLag(df, keyCol, orderCol, inNames, n, outNames,
-      fuse = "none")
-
-  /** Boolean-flag form kept for callers of the r9 fused-diff API. */
-  def positionalLag(df: DataFrame, keyCol: String, orderCol: Column,
-                    inNames: Seq[String], n: Int,
-                    outNames: Seq[String], fuseDiff: Boolean): DataFrame =
-    positionalLag(df, keyCol, orderCol, inNames, n, outNames,
-      fuse = if (fuseDiff) "diff" else "none")
-
-  /** As [[positionalLag]], but with a fused per-cell combine: `fuse =
-    * "diff"` emits the DIFFERENCE `value − donor` (the pandas `.diff()`
-    * cell), `"pct"` the RATIO `value / donor − 1` (the pandas
+    *
+    * `fuse = "none"` (the default) emits the donor values themselves.
+    * Fused per-cell combines: `fuse = "diff"` emits the DIFFERENCE
+    * `value − donor` (the pandas `.diff()` cell), `"pct"` the RATIO `value / donor − 1` (the pandas
     * `.pct_change()` cell) instead of the donor itself — std-mode
     * semantics: a missing donor (edge row or NULL lagged value) combines
     * as NaN; a NULL current value stays NULL. r9: fusing the combine into
@@ -598,7 +599,7 @@ object Prefix {
     * aggregate. DoubleType columns only when fused. */
   def positionalLag(df: DataFrame, keyCol: String, orderCol: Column,
                     inNames: Seq[String], n: Int,
-                    outNames: Seq[String], fuse: String,
+                    outNames: Seq[String], fuse: String = "none",
                     winMinPeriods: Int = 0,
                     winQ: Double = Double.NaN,
                     centerLead: Int = 0,

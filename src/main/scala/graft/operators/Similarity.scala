@@ -202,21 +202,6 @@ object Similarity {
     cur
   }
 
-  /** Probe-facing view of the bounded LSH cells (id, `__kb`, `__kd`):
-    * lets scale probes account cell-size distributions and candidate
-    * pairs (Σ n·(n−1)/2 per cell) without re-deriving the split. */
-  private[graft] def lshCells(embs: DataFrame, nPlanes: Int,
-                              idCol: String, embCol: String, seed: Long,
-                              exact: Boolean, maxBucketSize: Int,
-                              subPlanes: Int): DataFrame = {
-    val dim = 64
-    val planes = hyperplanes(dim, nPlanes, seed)
-    val b0 = embs.select(col(idCol).as("id"), col(embCol).as("e"),
-      lshBucket(col(embCol), planes, exact).as("bucket"))
-    boundCells(b0, maxBucketSize, subPlanes, seed, dim)
-      .select(col("id"), col("__kb"), col("__kd"))
-  }
-
   /** Hard-negative mining (contrastive-training data): the global top-k
     * CROSS-label pairs among the LSH candidates, by exact cosine.
     *

@@ -287,7 +287,7 @@ class PrefixSpec extends SparkSpec {
     }
     def run(): Seq[java.lang.Double] =
       Prefix.positionalLag(df, "k", col("k"), Seq("v"), 2, Seq("d"),
-          fuseDiff = true)
+          fuse = "diff")
         .orderBy(col("k")).select(col("d")).collect()
         .map(r => if (r.isNullAt(0)) null else Double.box(r.getDouble(0)))
         .toSeq

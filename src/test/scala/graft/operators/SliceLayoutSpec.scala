@@ -19,7 +19,10 @@ import org.apache.spark.sql.types._
   *      mapPartitions emitter (the per-query exchange + sort is gone);
   *   3. reuse: two different shared queries over the same base register
   *      exactly one layout; and the per-session registry stays bounded
-  *      by its cap under distinct bases.
+  *      by its cap under distinct bases, evicting the least recently
+  *      used layout;
+  *   4. freshness: a Spark overwrite of a parquet source is seen by the
+  *      next shared-layout scan over a re-read of that path.
   */
 class SliceLayoutSpec extends SparkSpec {
 
@@ -165,10 +168,10 @@ class SliceLayoutSpec extends SparkSpec {
     val d2 = Seq((col("a") * 2).as(names(0)), (col("b") * 3).as(names(1)))
     Prefix.positionalLagShared(df, d1, "rid", col("rid"), names, 2,
       names.map(_ + "_w"), fuse = "winsum", winMinPeriods = 1).count()
-    val afterOne = Prefix.sliceLayoutCount(spark)
+    val afterOne = Prefix.sliceLayouts(spark).size
     Prefix.ewmScan(df, "rid", col("rid"), names, 0.5,
       names.map(_ + "_e"), "mean", 0, shared = Some(d2)).count()
-    assert(Prefix.sliceLayoutCount(spark) == afterOne,
+    assert(Prefix.sliceLayouts(spark).size == afterOne,
       "a second shared query over the same base registered a new layout")
     // distinct bases may not grow the registry past its cap
     (0 until 20).foreach { i =>
@@ -179,9 +182,50 @@ class SliceLayoutSpec extends SparkSpec {
     // the shared suite session may already sit AT the cap from earlier
     // suites' compiled formulas, so pin the bound and that registration
     // happens at all — not growth relative to an unknown start
-    assert(Prefix.sliceLayoutCount(spark) <= 16,
-      s"layout registry exceeded its cap: ${Prefix.sliceLayoutCount(spark)}")
-    assert(Prefix.sliceLayoutCount(spark) >= 1,
+    assert(Prefix.sliceLayouts(spark).size <= 16,
+      s"layout registry exceeded its cap: ${Prefix.sliceLayouts(spark).size}")
+    assert(Prefix.sliceLayouts(spark).size >= 1,
       "layouts were never registered")
+  }
+
+  test("a layout touched between distinct-base churn is never evicted") {
+    val cache = spark.sharedState.cacheManager
+    def layout(df: DataFrame): DataFrame =
+      Prefix.sliceLayout(df, "rid", col("rid"), 4, rev = false)
+    // sizes unlike the cap test's, so every churn base is a miss
+    val hotBase = frame(41)
+    val hot = layout(hotBase)
+    (0 until 20).foreach { i =>
+      layout(frame(100 + i))
+      layout(hotBase) // a hit: moves the hot layout to the end
+    }
+    assert(Prefix.sliceLayouts(spark).exists(_ eq hot),
+      "the hot layout was evicted from the registry")
+    assert(cache.lookupCachedData(
+        hot.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined,
+      "the hot layout is no longer persisted")
+  }
+
+  test("a Spark overwrite of the source is seen by a re-read scan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-slc")
+    val path = dir.resolve("src.parquet").toString
+    def write(v: Double): Unit =
+      spark.range(10).select(col("id").as("rid"), lit(v).as("v"))
+        .write.mode("overwrite").parquet(path)
+    def scan(): (Double, Double) = {
+      val r = Prefix.positionalLagShared(spark.read.parquet(path),
+        Seq(col("v").as("vv")), "rid", col("rid"), Seq("vv"), 2,
+        Seq("vv_w"), fuse = "winsum", winMinPeriods = 1)
+        .agg(sum("v"), sum("vv_w")).head()
+      (r.getDouble(0), r.getDouble(1))
+    }
+    try {
+      write(1.0)
+      // window sums over ten rows, window 3: 1 + 2 + 8·3 = 27 per unit
+      assert(scan() == (10.0, 27.0))
+      write(4.0)
+      assert(scan() == (40.0, 108.0),
+        "the re-read scan served the rows from before the overwrite")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }
