@@ -2895,12 +2895,8 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         val conf = ctx.base.get.sparkSession.conf
         val fuseMax = conf.getOption("graft.rolling.fuseMaxWindow")
           .map(_.toInt).getOrElse(257)
-        val lagParts = conf.get("spark.sql.shuffle.partitions").toInt
-        val maxCells = conf.getOption("graft.lag.maxEdgeCells")
-          .map(_.toLong).getOrElse(4000000L)
-        val lagWidth = cols.size
-        val fusedOk = n <= math.min(fuseMax, 257) &&
-          lagParts.toLong * (n - 1) * lagWidth <= maxCells
+        val fusedOk = n <= fuseMax && graft.operators.Prefix.lagStreams(
+          ctx.base.get.sparkSession, n - 1, cols.size)
         if (n == 1) {
           // a 1-position window is the cell itself (minp is forced to 1);
           // var/std divide by ddof n−1 = 0 → NaN everywhere (pandas)
@@ -3220,8 +3216,8 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
             .otherwise(c.cast("double")).as(vIn(i))
         }
         ctx.base = Some(graft.operators.Prefix.runningQuantile(
-          ctx.base.get, ctx.rowIdOut, rid, vIn, qv, qInterp,
-          vIn.map(_ + "_q"), minp, shared = Some(derived)))
+          ctx.base.get, derived, ctx.rowIdOut, rid, vIn, qv, qInterp,
+          vIn.map(_ + "_q"), minp))
         CMatrix(cols.zipWithIndex.map { case ((l, _), i) =>
           (l, col(vIn(i) + "_q"))
         }, isBool = false)
@@ -3284,8 +3280,8 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
             }
           val scanIns = sIn ++ dIn ++ (if (wantCorr) xIn ++ yIn else Nil)
           ctx.base = Some(graft.operators.Prefix.ewmScan(ctx.base.get,
-            ctx.rowIdOut, rid, scanIns, 0.0, scanIns.map(_ + "_w"),
-            "var", minp, shared = Some(derived)))
+            derived, ctx.rowIdOut, rid, scanIns, 0.0, scanIns.map(_ + "_w"),
+            "var", minp))
           CMatrix(union.map { l =>
             val i = shared.indexOf(l)
             if (i < 0) (l, litOf(Double.NaN))
@@ -3576,11 +3572,11 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
                                case _ => "var" }
           ctx.base = Some(
             if (adjust) graft.operators.Prefix.ewmScan(ctx.base.get,
-              ctx.rowIdOut, rid, valIn, alpha, valIn.map(_ + "_w"),
-              stat, minp, shared = Some(derived))
+              derived, ctx.rowIdOut, rid, valIn, alpha,
+              valIn.map(_ + "_w"), stat, minp)
             else graft.operators.Prefix.ewmScanRecursive(ctx.base.get,
-              ctx.rowIdOut, rid, valIn, alpha, valIn.map(_ + "_w"),
-              stat, minp, shared = Some(derived)))
+              derived, ctx.rowIdOut, rid, valIn, alpha,
+              valIn.map(_ + "_w"), stat, minp))
           CMatrix(cols.zipWithIndex.map { case ((lbl, _), i) =>
             val c = col(valIn(i) + "_w")
             (lbl, if (m == "std") sqrt(c) else c)
@@ -3710,11 +3706,11 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           val scanIns = sIn ++ dIn ++ (if (wantCorr) xIn ++ yIn else Nil)
           ctx.base = Some(
             if (adjust) graft.operators.Prefix.ewmScan(ctx.base.get,
-              ctx.rowIdOut, rid, scanIns, alpha, scanIns.map(_ + "_w"),
-              "var", minp, shared = Some(derived))
+              derived, ctx.rowIdOut, rid, scanIns, alpha,
+              scanIns.map(_ + "_w"), "var", minp)
             else graft.operators.Prefix.ewmScanRecursive(ctx.base.get,
-              ctx.rowIdOut, rid, scanIns, alpha, scanIns.map(_ + "_w"),
-              "var", minp, shared = Some(derived)))
+              derived, ctx.rowIdOut, rid, scanIns, alpha,
+              scanIns.map(_ + "_w"), "var", minp))
           CMatrix(union.map { l =>
             val i = shared.indexOf(l)
             if (i < 0) (l, litOf(Double.NaN))

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 /** Distributed running aggregates over a GLOBAL ordering without ever
   * collapsing row-scaled data onto one window partition.
@@ -162,18 +163,8 @@ object Prefix {
   private[graft] def sliceLayout(base: DataFrame, keyCol: String,
                                  orderCol: Column, parts: Int,
                                  rev: Boolean): DataFrame = {
-    val okey = "__slc_ord"
-    require(!base.columns.contains(okey) &&
-      !base.columns.contains("__pfx_pid"),
-      s"sliceLayout: base must not already carry $okey/__pfx_pid")
-    val sliced = withSliceId(base.withColumn(okey, orderCol), col(okey),
-      Nil, Nil, descending = false, nullsLast = false,
-      tieCols = Seq(col(keyCol)), parts)
-    val streamOrd =
-      if (rev) Seq(col(okey).desc_nulls_last, col(keyCol).desc)
-      else Seq(col(okey).asc_nulls_first, col(keyCol).asc)
-    val laid = sliced.repartition(parts, col("__pfx_pid"))
-      .sortWithinPartitions((col("__pfx_pid").asc +: streamOrd): _*)
+    val laid = layOut(slicedBy(base, keyCol, orderCol, parts), keyCol,
+      parts, rev)
     purgeStoppedSessions()
     val perSession = sliceLayoutCache.getOrElseUpdate(base.sparkSession,
       scala.collection.mutable.LinkedHashMap.empty)
@@ -199,6 +190,234 @@ object Prefix {
     laid
   }
 
+  /** `base` + `__slc_ord` (the order copy) + `__pfx_pid`: the
+    * deterministic slice id of the (orderCol, keyCol) total order. */
+  private def slicedBy(base: DataFrame, keyCol: String, orderCol: Column,
+                       parts: Int): DataFrame = {
+    require(!base.columns.contains("__slc_ord") &&
+      !base.columns.contains("__pfx_pid"),
+      "slice scans: base must not already carry __slc_ord/__pfx_pid")
+    withSliceId(base.withColumn("__slc_ord", orderCol), col("__slc_ord"),
+      Nil, Nil, descending = false, nullsLast = false,
+      tieCols = Seq(col(keyCol)), parts)
+  }
+
+  /** The total processing order: (order asc nulls first, key asc) — or
+    * its exact mirror for `rev` (lead processing). NaN doubles sort
+    * greatest either way (Spark's convention), matching the slice
+    * placement in [[withSliceId]]. */
+  private def streamOrder(keyCol: String, rev: Boolean): Seq[Column] =
+    if (rev) Seq(col("__slc_ord").desc_nulls_last, col(keyCol).desc)
+    else Seq(col("__slc_ord").asc_nulls_first, col(keyCol).asc)
+
+  /** ONE hash exchange on the slice id + a within-partition sort on
+    * (pid, stream order): every slice is one contiguous run of one
+    * partition. */
+  private def layOut(sliced: DataFrame, keyCol: String, parts: Int,
+                     rev: Boolean): DataFrame =
+    sliced.repartition(parts, col("__pfx_pid"))
+      .sortWithinPartitions((col("__pfx_pid").asc +:
+        streamOrder(keyCol, rev)): _*)
+
+  private def withDerived(df: DataFrame, derived: Seq[Column]): DataFrame =
+    if (derived.isEmpty) df else df.select(col("*") +: derived: _*)
+
+  // ---- the slice-scan skeleton: layout → partials → combine → emit ----
+  //
+  // The four slice scans (positional lag, ewm adjust=True/False, running
+  // quantile) share one flow: lay the frame out by slice, run a narrow
+  // per-slice partial pass, combine the ≤ parts partials on the driver
+  // into each slice's incoming state, and emit every row in one fully
+  // parallel pass that seeds each slice from its incoming state. Each
+  // operator supplies only its monoid — a [[SlicePartial]], the driver
+  // combine, and a [[SliceKernel]]; [[SliceScan]] owns the rest.
+
+  /** Schema-only (analysis, no job) DoubleType check of a scan's value
+    * columns: the `derived` projections when given, else the named
+    * columns of `base`. */
+  private def requireDoubles(base: DataFrame, derived: Seq[Column],
+                             inNames: Seq[String], who: String): Unit = {
+    val types =
+      if (derived.isEmpty) inNames.map(base.schema(_).dataType)
+      else base.select(derived: _*).schema.map(_.dataType)
+    inNames.zip(types).foreach { case (nm, t) =>
+      require(t == DoubleType,
+        s"$who requires DoubleType columns, got $t for $nm")
+    }
+  }
+
+  /** The input of one slice scan over `base` with the value columns
+    * `inNames` — `derived` projections (pre-aliased to `inNames`), or
+    * columns of `base` itself when `derived` is empty. `persist`: the
+    * session-shared layout ([[sliceLayout]]) with the derived columns
+    * projected ABOVE it, so no per-query exchange or sort remains.
+    * Otherwise (one-shot intermediates, where a persisted layout would
+    * only add cache) the frame is laid out below one exchange of its
+    * own. `doubles` names the operator whose inputs must be DoubleType. */
+  private def sliceScan(base: DataFrame, derived: Seq[Column],
+                        keyCol: String, orderCol: Column,
+                        inNames: Seq[String],
+                        doubles: Option[String] = None,
+                        rev: Boolean = false,
+                        persist: Boolean = true): SliceScan = {
+    require(derived.isEmpty || derived.length == inNames.length,
+      "derived projections and inNames must align")
+    doubles.foreach(requireDoubles(base, derived, inNames, _))
+    val parts = base.sparkSession.conf
+      .get("spark.sql.shuffle.partitions").toInt
+    if (persist) {
+      val laid = withDerived(
+        sliceLayout(base, keyCol, orderCol, parts, rev), derived)
+      new SliceScan(laid, laid, parts, inNames)
+    } else {
+      val sliced = withDerived(slicedBy(base, keyCol, orderCol, parts),
+        derived)
+      new SliceScan(sliced, layOut(sliced, keyCol, parts, rev), parts,
+        inNames)
+    }
+  }
+
+  /** One slice's partial state on the executor: `step` absorbs the
+    * narrow row (pid, inNames…) in stream order, `result` exports the
+    * slice's payload array for the driver combine. */
+  private abstract class SlicePartial {
+    def step(r: Row): Unit
+    def result: Seq[Any]
+  }
+
+  /** One partition's emit state: `enter` seeds a slice run from its
+    * incoming state, `cells` writes the row's outputs at out(at…). The
+    * kernel is resolved once per partition — each operator's per-cell
+    * loop stays its own monomorphic compilation unit (r10: a per-cell
+    * mode dispatch ran interpreted-slow). Held emission (the centered
+    * lag): `out` is the held row due now, or null; `finish` completes a
+    * run's still-held rows, oldest first. */
+  private abstract class SliceKernel {
+    def enter(pid: Int): Unit
+    def cells(r: Row, out: Array[Any], at: Int): Unit
+    def finish(held: scala.collection.mutable.ArrayDeque[Array[Any]],
+               at: Int): Unit = ()
+  }
+
+  /** A laid-out slice-scan input (see [[sliceScan]]): `sliced` is the
+    * pre-exchange frame edge collects read (the layout itself when
+    * persisted), `laid` the slice-partitioned, stream-sorted frame. */
+  private final class SliceScan(val sliced: DataFrame, val laid: DataFrame,
+                                val parts: Int, inNames: Seq[String]) {
+    /** Field indices of the value columns in the laid-out rows. */
+    val inIdx: Array[Int] = inNames.map(laid.schema.fieldIndex).toArray
+
+    /** The partial pass: one payload per slice from a NARROW projection
+      * (pid, inNames…) of the layout — ≤ `parts` rows reach the
+      * driver. */
+    def partials[T](elem: DataType)(
+        fresh: () => SlicePartial): Map[Int, Seq[T]] = {
+      val pSchema = StructType(Seq(
+        StructField("pid", IntegerType, nullable = false),
+        StructField("p", ArrayType(elem, containsNull = false),
+          nullable = false)))
+      val rows = laid.select(col("__pfx_pid") +: inNames.map(col): _*)
+        .mapPartitions { it =>
+          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+          var curPid = Int.MinValue
+          var acc: SlicePartial = null
+          it.foreach { r =>
+            val pid = r.getInt(0)
+            if (pid != curPid) {
+              if (acc != null) out += Row(curPid, acc.result)
+              curPid = pid
+              acc = fresh()
+            }
+            acc.step(r)
+          }
+          if (acc != null) out += Row(curPid, acc.result)
+          out.iterator
+        }(Encoders.row(pSchema))
+        .collect()
+      slicePartials[T](rows, parts)
+    }
+
+    /** The emit pass: every laid-out row plus `outFields`, written by a
+      * fresh `kernel` per partition; `hold` > 0 delays each row's cells
+      * by `hold` rows of its slice (the centered lag). Drops the layout
+      * columns. */
+    def emit(outFields: Seq[StructField], hold: Int = 0)(
+        kernel: () => SliceKernel): DataFrame = {
+      val inSchema = laid.schema
+      val pidIdx = inSchema.fieldIndex("__pfx_pid")
+      val at = inSchema.length
+      val outSchema = StructType(inSchema.fields ++ outFields)
+      val total = outSchema.length
+      laid.mapPartitions { it =>
+        val k = kernel()
+        var curPid = Int.MinValue
+        def fields(r: Row): Array[Any] = {
+          val out = new Array[Any](total)
+          var i = 0
+          while (i < at) { out(i) = r.get(i); i += 1 }
+          out
+        }
+        def row(out: Array[Any]): Row =
+          new org.apache.spark.sql.catalyst.expressions
+            .GenericRowWithSchema(out, outSchema)
+        if (hold == 0) it.map { r =>
+          val pid = r.getInt(pidIdx)
+          if (pid != curPid) { k.enter(pid); curPid = pid }
+          val out = fields(r)
+          k.cells(r, out, at)
+          row(out)
+        } else {
+          val held = scala.collection.mutable.ArrayDeque.empty[Array[Any]]
+          def release(): Iterator[Row] =
+            if (curPid == Int.MinValue) Iterator.empty
+            else {
+              k.finish(held, at)
+              val rows = held.map(row)
+              held.clear()
+              rows.iterator
+            }
+          (it.map(Option(_)) ++ Iterator.single(None: Option[Row])).flatMap {
+            case None => release()
+            case Some(r) =>
+              val pid = r.getInt(pidIdx)
+              val pre =
+                if (pid != curPid) {
+                  val done = release()
+                  k.enter(pid)
+                  curPid = pid
+                  done
+                } else Iterator.empty
+              val due = if (held.length == hold) held.removeHead() else null
+              k.cells(r, due, at)
+              held.append(fields(r))
+              if (due == null) pre else pre ++ Iterator.single(row(due))
+          }
+        }
+      }(Encoders.row(outSchema)).drop("__pfx_pid", "__slc_ord")
+    }
+  }
+
+  /** The collected partial rows (pid, payload) keyed by slice id. The
+    * layout holds every slice in exactly ONE partition, so each pid
+    * arrives once: a second row means a slice was split across
+    * partitions (keeping either half would silently drop the other), and
+    * a pid outside [0, parts) a broken slice id — both throw. */
+  private[graft] def slicePartials[T](rows: Array[Row],
+                                      parts: Int): Map[Int, Seq[T]] = {
+    val byPid = scala.collection.mutable.HashMap.empty[Int, Seq[T]]
+    rows.foreach { r =>
+      val pid = r.getInt(0)
+      if (pid < 0 || pid >= parts) throw new IllegalStateException(
+        s"slice id $pid outside [0, $parts) — withSliceId broke its " +
+          "contract")
+      if (byPid.put(pid, r.getSeq[T](1)).isDefined)
+        throw new IllegalStateException(
+          s"slice $pid arrived from two partitions — a slice scan needs " +
+            "each slice in exactly one partition")
+    }
+    byPid.toMap
+  }
+
   /** All columns of `df` whose types `xxhash64` can digest (maps excluded,
     * structs/arrays recursed) — the full-row entropy set callers pass as
     * `tieCols` when their order domain may repeat and the value columns
@@ -206,7 +425,6 @@ object Prefix {
     * skewed_col)` rewrite sums constant ones, so only the rest of the row
     * can split the heavy value across slices). */
   def entropyCols(df: DataFrame): Seq[Column] = {
-    import org.apache.spark.sql.types._
     def ok(t: DataType): Boolean = t match {
       case _: MapType    => false
       case s: StructType => s.fields.forall(f => ok(f.dataType))
@@ -411,7 +629,6 @@ object Prefix {
       // r7 equi-width behavior, traded back for correctness on exotic
       // order domains only.
       val ordType = df.select(orderCol).schema.head.dataType
-      import org.apache.spark.sql.types._
       val (vCol, tieSplit) = ordType match {
         case LongType => (orderCol.cast(LongType), true)
         case TimestampType => (unix_micros(orderCol), true)
@@ -485,7 +702,7 @@ object Prefix {
           .as("__pfx_all"))
         val dt = aggDf.schema.head.dataType
         org.apache.spark.sql.catalyst.expressions.Literal.create(
-          aggDf.head().getSeq[org.apache.spark.sql.Row](0), dt)
+          aggDf.head().getSeq[Row](0), dt)
       })
       // loose per-session cap (r15, ADVICE: never clear other sessions'
       // hot entries): evict entries other than the one just used
@@ -603,70 +820,9 @@ object Prefix {
                     winMinPeriods: Int = 0,
                     winQ: Double = Double.NaN,
                     centerLead: Int = 0,
-                    winInterp: Int = 0): DataFrame = {
-    require(n != 0, "positionalLag needs a non-zero offset")
-    // winInterp is the per-mode option int: winquant's interpolation
-    // code 0–4, winrank's packed method·4 + ascending·2 + pct (0–11)
-    require(winInterp >= 0 && winInterp <= (fuse match {
-      case "winrank" => 11; case _ => 4
-    }), s"winInterp out of range for fuse='$fuse': $winInterp")
-    // centered window fuse (r11): emit the finished trailing aggregate
-    // at position i − centerLead INSIDE the same slice pass (a pending
-    // queue of `centerLead` rows + a bounded lookahead edge set) — the
-    // r10 shape paid a second positionalLag lead pass (two slice
-    // exchanges + two edge collects) for the same result
-    require(centerLead >= 0 && (centerLead == 0 ||
-      (fuse.startsWith("win") && centerLead <= n)),
-      s"centerLead must sit in [0, window ring n] on a window fuse, " +
-        s"got $centerLead")
-    // pairwise window fuses (r11 session 5): inputs arrive as
-    // (x_0..x_{w-1}, y_0..y_{w-1}) — twice the output width; every other
-    // mode stays strictly one-in-one-out
-    val pairwise = fuse == "wincov" || fuse == "wincorr"
-    require(
-      if (pairwise) inNames.length == 2 * outNames.length
-      else inNames.length == outNames.length,
-      "inNames/outNames must align (2w inputs for pairwise fuses)")
-    require(Set("none", "diff", "pct", "winsum", "winmean", "winmin",
-      "winmax", "wincount", "winmed", "winvar", "winquant", "winrank",
-      "winskew",
-      "winkurt", "winsem", "wincov", "wincorr")(fuse),
-      s"unknown fuse mode '$fuse'")
-    require(fuse != "winquant" || (winQ >= 0.0 && winQ <= 1.0),
-      s"fuse='winquant' needs a quantile in [0,1], got $winQ")
-    require(winMinPeriods >= 0 && winMinPeriods <= n.max(0) + 1,
-      s"winMinPeriods must be in [0, window size], got $winMinPeriods")
-    if (fuse != "none") {
-      val sch = df.schema
-      inNames.foreach { nm =>
-        require(sch(nm).dataType ==
-          org.apache.spark.sql.types.DoubleType,
-          s"fuse='$fuse' requires DoubleType columns, got " +
-            s"${sch(nm).dataType} for $nm")
-      }
-    }
-    // r9 (ADVICE): the streaming path's driver edge-collect is parts·|n|
-    // ROWS but each row carries every shifted value column — |n| ≤ 256
-    // bounds only the row count. Gate on the CELL volume too
-    // (parts·|n|·width ≤ graft.lag.maxEdgeCells, default 4M ≈ tens of MB
-    // on the driver), falling back to the positional join whose edge
-    // state never leaves the executors.
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val maxCells = df.sparkSession.conf
-      .getOption("graft.lag.maxEdgeCells").map(_.toLong).getOrElse(4000000L)
-    val cells = parts.toLong * math.abs(n) * inNames.length
-    if (fuse.startsWith("win"))
-      require(n > 0 && n <= 256 && cells <= maxCells,
-        s"fuse='$fuse' requires the streaming lag path (0 < n <= 256 and " +
-          s"parts*n*width <= $maxCells edge cells); got n=$n, " +
-          s"cells=$cells — use the prefix-sum rolling formulation for " +
-          "larger windows")
-    if (math.abs(n) <= 256 && cells <= maxCells)
-      positionalLagStream(df, keyCol, orderCol, inNames, n, outNames, fuse,
-        winMinPeriods, winQ, centerLead, winInterp)
-    else
-      positionalLagJoin(df, keyCol, orderCol, inNames, n, outNames, fuse)
-  }
+                    winInterp: Int = 0): DataFrame =
+    lag(df, Nil, persist = false, keyCol, orderCol, inNames, n, outNames,
+      fuse, winMinPeriods, winQ, centerLead, winInterp)
 
   /** Batch-shared form of [[positionalLag]] (r15): the caller passes the
     * shared `base` and its derived value-column projections `derived`
@@ -692,14 +848,49 @@ object Prefix {
                           winInterp: Int = 0): DataFrame = {
     require(derived.length == inNames.length,
       "derived projections and inNames must align")
+    lag(base, derived, persist = true, keyCol, orderCol, inNames, n,
+      outNames, fuse, winMinPeriods, winQ, centerLead, winInterp)
+  }
+
+  /** Whether a positional lag of offset `n` over `width` value columns
+    * runs on the streaming slice path: |n| within the 256-row ring bound
+    * and the driver edge collect — parts·|n| rows, each carrying every
+    * value column (r9 ADVICE) — within `graft.lag.maxEdgeCells` cells
+    * (default 4M ≈ tens of MB on the driver). Past it the positional
+    * join takes over, whose edge state never leaves the executors. */
+  private[graft] def lagStreams(spark: org.apache.spark.sql.SparkSession,
+                                n: Int, width: Int): Boolean = {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val maxCells = spark.conf.getOption("graft.lag.maxEdgeCells")
+      .map(_.toLong).getOrElse(4000000L)
+    math.abs(n) <= 256 && parts.toLong * math.abs(n) * width <= maxCells
+  }
+
+  /** [[positionalLag]] / [[positionalLagShared]]: `derived` is empty
+    * when `base` already carries `inNames`. */
+  private def lag(base: DataFrame, derived: Seq[Column], persist: Boolean,
+                  keyCol: String, orderCol: Column, inNames: Seq[String],
+                  n: Int, outNames: Seq[String], fuse: String,
+                  winMinPeriods: Int, winQ: Double, centerLead: Int,
+                  winInterp: Int): DataFrame = {
     require(n != 0, "positionalLag needs a non-zero offset")
+    // winInterp is the per-mode option int: winquant's interpolation
+    // code 0–4, winrank's packed method·4 + ascending·2 + pct (0–11)
     require(winInterp >= 0 && winInterp <= (fuse match {
       case "winrank" => 11; case _ => 4
     }), s"winInterp out of range for fuse='$fuse': $winInterp")
+    // centered window fuse (r11): emit the finished trailing aggregate
+    // at position i − centerLead INSIDE the same slice pass (held rows +
+    // a bounded lookahead edge set) — the r10 shape paid a second
+    // positionalLag lead pass (two slice exchanges + two edge collects)
+    // for the same result
     require(centerLead >= 0 && (centerLead == 0 ||
       (fuse.startsWith("win") && centerLead <= n)),
       s"centerLead must sit in [0, window ring n] on a window fuse, " +
         s"got $centerLead")
+    // pairwise window fuses (r11 session 5): inputs arrive as
+    // (x_0..x_{w-1}, y_0..y_{w-1}) — twice the output width; every other
+    // mode stays strictly one-in-one-out
     val pairwise = fuse == "wincov" || fuse == "wincorr"
     require(
       if (pairwise) inNames.length == 2 * outNames.length
@@ -714,34 +905,20 @@ object Prefix {
       s"fuse='winquant' needs a quantile in [0,1], got $winQ")
     require(winMinPeriods >= 0 && winMinPeriods <= n.max(0) + 1,
       s"winMinPeriods must be in [0, window size], got $winMinPeriods")
-    if (fuse != "none") {
-      // schema-only check — analysis, no job
-      val sch = base.select(derived: _*).schema
-      inNames.zipWithIndex.foreach { case (nm, i) =>
-        require(sch(i).dataType ==
-          org.apache.spark.sql.types.DoubleType,
-          s"fuse='$fuse' requires DoubleType columns, got " +
-            s"${sch(i).dataType} for $nm")
-      }
-    }
-    val parts = base.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val maxCells = base.sparkSession.conf
-      .getOption("graft.lag.maxEdgeCells").map(_.toLong).getOrElse(4000000L)
-    val cells = parts.toLong * math.abs(n) * inNames.length
+    if (fuse != "none") requireDoubles(base, derived, inNames, s"fuse='$fuse'")
+    val streams = lagStreams(base.sparkSession, n, inNames.length)
     if (fuse.startsWith("win"))
-      require(n > 0 && n <= 256 && cells <= maxCells,
+      require(n > 0 && streams,
         s"fuse='$fuse' requires the streaming lag path (0 < n <= 256 and " +
-          s"parts*n*width <= $maxCells edge cells); got n=$n, " +
-          s"cells=$cells — use the prefix-sum rolling formulation for " +
-          "larger windows")
-    if (math.abs(n) <= 256 && cells <= maxCells)
-      positionalLagStream(base, keyCol, orderCol, inNames, n, outNames,
-        fuse, winMinPeriods, winQ, centerLead, winInterp,
-        shared = Some(derived))
+          "parts*n*width <= graft.lag.maxEdgeCells edge cells); got " +
+          s"n=$n, width=${inNames.length} — use the prefix-sum rolling " +
+          "formulation for larger windows")
+    if (streams)
+      positionalLagStream(base, derived, persist, keyCol, orderCol, inNames,
+        n, outNames, fuse, winMinPeriods, winQ, centerLead, winInterp)
     else
-      positionalLagJoin(base.select(col("*") +: derived: _*), keyCol,
-        orderCol, inNames, n, outNames, fuse)
+      positionalLagJoin(withDerived(base, derived), keyCol, orderCol,
+        inNames, n, outNames, fuse)
   }
 
   private type Ring = scala.collection.mutable.ArrayDeque[Array[Any]]
@@ -1126,124 +1303,85 @@ object Prefix {
     }
   }
 
-  private def positionalLagStream(df: DataFrame, keyCol: String,
+  private def positionalLagStream(base: DataFrame, derived: Seq[Column],
+                                  persist: Boolean, keyCol: String,
                                   orderCol: Column, inNames: Seq[String],
                                   n: Int, outNames: Seq[String],
-                                  fuse: String,
-                                  winMinPeriods: Int = 0,
-                                  winQ: Double = Double.NaN,
-                                  centerLead: Int = 0,
-                                  winInterp: Int = 0,
-                                  shared: Option[Seq[Column]] = None)
-      : DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+                                  fuse: String, winMinPeriods: Int,
+                                  winQ: Double, centerLead: Int,
+                                  winInterp: Int): DataFrame = {
     val k = math.abs(n)
     val rev = n < 0 // lead: process the total order in reverse
-    // shared mode (r15): `df` is the base; the derived value projections
-    // sit ABOVE the session-shared persisted layout (already
-    // hash-partitioned on the slice id and sorted in the stream order),
-    // so the per-query exchange + sort below is skipped
-    val preLaid = shared.isDefined
-    val okey = if (preLaid) "__slc_ord" else "__lag_ord"
-    val sliced = shared match {
-      case Some(derived) =>
-        sliceLayout(df, keyCol, orderCol, parts, rev)
-          .select(col("*") +: derived: _*)
-      case None =>
-        withSliceId(df.withColumn(okey, orderCol), col(okey),
-          inNames, Nil, descending = false, nullsLast = false,
-          tieCols = Seq(col(keyCol)), parts)
-    }
+    val scan = sliceScan(base, derived, keyCol, orderCol, inNames,
+      rev = rev, persist = persist)
+    val parts = scan.parts
+    val ordAsc = streamOrder(keyCol, rev = false)
 
-    // the total processing order: (order asc nulls first, key asc) — or
-    // its exact mirror for a lead. NaN doubles sort greatest either way
-    // (Spark's convention), matching the slice placement in withSliceId.
-    val ordAsc  = Seq(col(okey).asc_nulls_first, col(keyCol).asc)
-    val ordDesc = Seq(col(okey).desc_nulls_last, col(keyCol).desc)
-    val streamOrd = if (rev) ordDesc else ordAsc
-
-    // per-slice edge rows: the k rows a NEIGHBOURING slice needs as its
-    // incoming buffer — the LAST k of each slice for a lag, the FIRST k
-    // for a lead. r9: ranked on the bounded-heap TopKPerKey (partial
-    // heaps cut every input partition to ≤ k rows per slice BEFORE any
-    // exchange) — the prior per-slice row_number window exchanged AND
-    // sorted the whole frame a second time just to keep parts·k rows,
-    // doubling the data motion of what is sold as a single-pass operator.
-    val edgeOrd = if (rev) ordAsc else ordDesc
-    val edges = graft.plans.TopKPerKey(
-        sliced.select(col("__pfx_pid") +: col(okey) +: col(keyCol) +:
-          inNames.map(col): _*),
-        Seq(col("__pfx_pid")), edgeOrd, k)
-      // collect in GLOBAL ascending order so the driver never re-implements
-      // the engine's NULL/NaN sort semantics. r14: the global order comes
-      // from coalesce(1) + a within-partition sort — the identical total
-      // order (one partition IS the global order, same engine NULL/NaN
-      // comparators), minus the range-partitioning SAMPLE job an orderBy
-      // pays per query on this ≤ parts·k-row frame
-      .coalesce(1)
-      .sortWithinPartitions((col("__pfx_pid").asc +: ordAsc): _*)
-      .select(col("__pfx_pid") +: inNames.map(col): _*)
-      .collect()
+    // per-slice edge rows: the m rows of each slice first in `ord`,
+    // value columns only. r9: ranked on the bounded-heap TopKPerKey
+    // (partial heaps cut every input partition to ≤ m rows per slice
+    // BEFORE any exchange) — a per-slice row_number window exchanged AND
+    // sorted the whole frame a second time just to keep parts·m rows.
+    // Collected in GLOBAL ascending order so the driver never
+    // re-implements the engine's NULL/NaN sort semantics. r14: the
+    // global order comes from coalesce(1) + a within-partition sort —
+    // the identical total order (one partition IS the global order, same
+    // engine NULL/NaN comparators), minus the range-partitioning SAMPLE
+    // job an orderBy pays per query on this ≤ parts·m-row frame
+    def edgeRows(ord: Seq[Column], m: Int): Map[Int, Array[Row]] =
+      graft.plans.TopKPerKey(
+          scan.sliced.select(col("__pfx_pid") +: col("__slc_ord") +:
+            col(keyCol) +: inNames.map(col): _*),
+          Seq(col("__pfx_pid")), ord, m)
+        .coalesce(1)
+        .sortWithinPartitions((col("__pfx_pid").asc +: ordAsc): _*)
+        .select(col("__pfx_pid") +: inNames.map(col): _*)
+        .collect()
+        .groupBy(_.getInt(0))
+    def valuesOf(rows: Array[Row]): Array[Array[Any]] =
+      rows.map(r => inNames.indices.map(i => r.get(i + 1)).toArray)
 
     // incoming buffer per slice, oldest-processed first: for a lag, the
     // last k edge rows of slices BELOW s (ascending); for a lead, the
     // first k edge rows of slices ABOVE s, reversed (the reversed stream
     // processes larger rows earlier)
-    val byPid = edges.groupBy(_.getInt(0))
+    val edges = edgeRows(streamOrder(keyCol, !rev), k)
     val incoming: Map[Int, Array[Array[Any]]] =
       (0 until parts).map { s =>
-        val vals =
+        val rows =
           if (rev)
             (s + 1 until parts).iterator
-              .flatMap(p => byPid.getOrElse(p, Array.empty[org.apache.spark.sql.Row]))
+              .flatMap(p => edges.getOrElse(p, Array.empty[Row]))
               .take(k).toArray.reverse
           else
             (0 until s).iterator
-              .flatMap(p => byPid.getOrElse(p, Array.empty[org.apache.spark.sql.Row]))
+              .flatMap(p => edges.getOrElse(p, Array.empty[Row]))
               .toArray.takeRight(k)
-        s -> vals.map(r => inNames.indices.map(i => r.get(i + 1)).toArray)
+        s -> valuesOf(rows)
       }.toMap
 
     // centered window fuse (r11): each slice also needs the FIRST
-    // `centerLead` rows of the slices after it (value columns only) —
-    // the lookahead that finishes its last `centerLead` pending rows.
-    // Bounded exactly like the incoming edges (parts·lead rows).
+    // `centerLead` rows of the slices after it — the lookahead that
+    // finishes its last `centerLead` held rows. Bounded exactly like the
+    // incoming edges (parts·lead rows).
     val lookahead: Map[Int, Array[Array[Any]]] =
       if (centerLead == 0) Map.empty
       else {
-        val first = graft.plans.TopKPerKey(
-            sliced.select(col("__pfx_pid") +: col(okey) +: col(keyCol) +:
-              inNames.map(col): _*),
-            Seq(col("__pfx_pid")), ordAsc, centerLead)
-          // same coalesce(1)+sort total-order collect as the edge rows
-          .coalesce(1)
-          .sortWithinPartitions((col("__pfx_pid").asc +: ordAsc): _*)
-          .select(col("__pfx_pid") +: inNames.map(col): _*)
-          .collect()
-        val byP = first.groupBy(_.getInt(0))
+        val first = edgeRows(ordAsc, centerLead)
         (0 until parts).map { s =>
-          val vals = (s + 1 until parts).iterator
-            .flatMap(p =>
-              byP.getOrElse(p, Array.empty[org.apache.spark.sql.Row]))
-            .take(centerLead).toArray
-          s -> vals.map(r => inNames.indices.map(i => r.get(i + 1)).toArray)
+          s -> valuesOf((s + 1 until parts).iterator
+            .flatMap(p => first.getOrElse(p, Array.empty[Row]))
+            .take(centerLead).toArray)
         }.toMap
       }
 
-    val inSchema = sliced.schema
-    val inIdx = inNames.map(inSchema.fieldIndex)
+    val inSchema = scan.laid.schema
     // pairwise fuses (wincov/wincorr) consume 2w inputs but emit w
     // outputs; zip truncates the schema to the first (x) half
+    val outFields = outNames.zip(inNames).map { case (o, i) =>
+      inSchema(i).copy(name = o, nullable = true)
+    }
     val outW = outNames.length
-    val pidIdx = inSchema.fieldIndex("__pfx_pid")
-    val outSchema = org.apache.spark.sql.types.StructType(
-      inSchema.fields ++ outNames.zip(inNames).map { case (o, i) =>
-        inSchema(inSchema.fieldIndex(i)).copy(name = o, nullable = true)
-      })
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-
     // per-cell dispatch is an INT switch; the window emitter is one
     // monomorphic closure resolved once per partition (r10 — the r9
     // per-cell string compare ran interpreted until C2 warmed)
@@ -1251,149 +1389,102 @@ object Prefix {
       case "none" => 0; case "diff" => 1; case "pct" => 2; case _ => 3
     }
     val effMinp = if (winMinPeriods <= 0) k + 1 else winMinPeriods
-    // pre-laid frames already carry the exchange + stream-order sort
-    // (the shared layout is built in the SAME direction as streamOrd)
-    val streamIn =
-      if (preLaid) sliced
-      else sliced
-        .repartition(parts, col("__pfx_pid"))
-        .sortWithinPartitions((col("__pfx_pid").asc +: streamOrd): _*)
-    val streamed = streamIn
-      .mapPartitions { it =>
-        var curPid = Int.MinValue
-        val buf = scala.collection.mutable.ArrayDeque.empty[Array[Any]]
-        val emit = if (mode == 3) winEmitter(fuse, k, effMinp, winQ,
-                     winInterp, pairOff = outW)
-                   else null
-        if (centerLead > 0) {
-          // centered emission: compute the trailing aggregate at every
-          // window end, but emit it attached to the row `centerLead`
-          // positions BACK (a pending queue); a slice's last pending
-          // rows finish against the lookahead rows, and whatever the
-          // global tail cannot finish emits the pandas edge NaN
-          val pending = scala.collection.mutable.ArrayDeque
-            .empty[(Array[Any], Long)]
-          var e = 0L
-          def mkRow(fields: Array[Any],
-                    outs: Array[java.lang.Double]): org.apache.spark.sql.Row = {
-            val outVals = new Array[Any](fields.length + outW)
-            var i = 0
-            while (i < fields.length) { outVals(i) = fields(i); i += 1 }
-            var j = 0
-            while (j < outW) {
-              outVals(fields.length + j) =
-                if (outs == null) dNaN else outs(j)
-              j += 1
-            }
-            new org.apache.spark.sql.catalyst.expressions
-              .GenericRowWithSchema(outVals, outSchema)
-          }
-          def outsOf(cur: Array[Any]): Array[java.lang.Double] = {
-            val o = new Array[java.lang.Double](outW)
-            var j = 0
-            while (j < outW) { o(j) = emit(buf, cur, j); j += 1 }
-            o
-          }
-          def ringPush(cur: Array[Any]): Unit = {
-            buf.append(cur)
-            if (buf.length > k) buf.removeHead()
-          }
-          // drain the finished slice: advance through its lookahead
-          // rows (popping due pending rows), then NaN-flush the rest
-          def drain(): Iterator[org.apache.spark.sql.Row] =
-            if (curPid == Int.MinValue) Iterator.empty
-            else {
-              val out = scala.collection.mutable.ArrayBuffer
-                .empty[org.apache.spark.sql.Row]
-              val la = lookahead.getOrElse(curPid, Array.empty)
-              var li = 0
-              while (li < la.length && pending.nonEmpty) {
-                val cur = la(li)
-                val outs = outsOf(cur)
-                if (pending.nonEmpty && e - pending.head._2 == centerLead) {
-                  val (fields, _) = pending.removeHead()
-                  out += mkRow(fields, outs)
-                }
-                ringPush(cur)
-                e += 1
-                li += 1
-              }
-              while (pending.nonEmpty) {
-                val (fields, _) = pending.removeHead()
-                out += mkRow(fields, null)
-              }
-              out.iterator
-            }
-          (it.map(Option(_)) ++ Iterator.single(
-            None: Option[org.apache.spark.sql.Row])).flatMap {
-            case None => drain()
-            case Some(r) =>
-              val pid = r.getInt(pidIdx)
-              val pre: Iterator[org.apache.spark.sql.Row] =
-                if (pid != curPid) {
-                  val d = drain()
-                  buf.clear()
-                  incoming.getOrElse(pid, Array.empty).foreach(buf.append)
-                  curPid = pid
-                  d
-                } else Iterator.empty
-              val cur = inIdx.map(r.get).toArray
-              val outs = outsOf(cur)
-              val popped: Iterator[org.apache.spark.sql.Row] =
-                if (pending.nonEmpty &&
-                    e - pending.head._2 == centerLead) {
-                  val (fields, _) = pending.removeHead()
-                  Iterator.single(mkRow(fields, outs))
-                } else Iterator.empty
-              val fields = new Array[Any](r.length)
-              var i = 0
-              while (i < r.length) { fields(i) = r.get(i); i += 1 }
-              pending.append((fields, e))
-              ringPush(cur)
-              e += 1
-              pre ++ popped
-          }
-        } else it.map { r =>
-          val pid = r.getInt(pidIdx)
-          if (pid != curPid) { // new contiguous slice run
-            buf.clear()
-            incoming.getOrElse(pid, Array.empty).foreach(buf.append)
-            curPid = pid
-          }
-          val donor: Array[Any] =
-            if (buf.length >= k) buf(buf.length - k) else null
-          val cur = inIdx.map(r.get).toArray
-          val outVals = new Array[Any](r.length + outW)
-          var i = 0
-          while (i < r.length) { outVals(i) = r.get(i); i += 1 }
+    val inIdx = scan.inIdx
+    scan.emit(outFields, hold = centerLead) { () =>
+      new LagKernel(k, mode,
+        if (mode == 3) winEmitter(fuse, k, effMinp, winQ, winInterp,
+          pairOff = outW)
+        else null,
+        incoming, lookahead, inIdx, outW, centerLead)
+    }
+  }
+
+  /** The positional-lag emit kernel: a ring of the k predecessors,
+    * seeded per slice from its incoming edge rows. `mode` 0 emits the
+    * donor k back, 1/2 the fused diff/pct against it, 3 the window
+    * aggregate `emit`. Centered (`centerLead` > 0): the aggregate of the
+    * window ending at a row belongs to the row `centerLead` positions
+    * back (the held row `out`); a slice's last held rows finish against
+    * its lookahead rows, and whatever the global tail cannot finish
+    * emits the pandas edge NaN. */
+  private final class LagKernel(
+      k: Int, mode: Int, emit: (Ring, Array[Any], Int) => java.lang.Double,
+      incoming: Map[Int, Array[Array[Any]]],
+      lookahead: Map[Int, Array[Array[Any]]],
+      inIdx: Array[Int], outW: Int, centerLead: Int) extends SliceKernel {
+    private val buf: Ring = scala.collection.mutable.ArrayDeque.empty
+    private var pid = Int.MinValue
+
+    private def push(cur: Array[Any]): Unit = {
+      buf.append(cur)
+      if (buf.length > k) buf.removeHead()
+    }
+
+    def enter(p: Int): Unit = {
+      pid = p
+      buf.clear()
+      incoming.getOrElse(p, Array.empty).foreach(buf.append)
+    }
+
+    def cells(r: Row, out: Array[Any], at: Int): Unit = {
+      val cur: Array[Any] = inIdx.map(r.get)
+      if (centerLead > 0) {
+        if (out != null) {
           var j = 0
-          while (j < outW) {
-            outVals(r.length + j) = (mode: @scala.annotation.switch) match {
-              case 0 => if (donor == null) null else donor(j)
-              case 3 => emit(buf, cur, j)
-              case _ =>
-                if (cur(j) == null) null
-                else {
-                  // missing donor (edge row or NULL lagged value) = NaN —
-                  // the std-mode `.diff()`/`.pct_change()` edge fill,
-                  // fused into the emit
-                  val dv =
-                    if (donor == null || donor(j) == null) Double.NaN
-                    else donor(j).asInstanceOf[Double]
-                  val cv = cur(j).asInstanceOf[Double]
-                  java.lang.Double.valueOf(
-                    if (mode == 1) cv - dv else cv / dv - 1.0)
-                }
-            }
-            j += 1
+          while (j < outW) { out(at + j) = emit(buf, cur, j); j += 1 }
+        }
+      } else {
+        val donor: Array[Any] =
+          if (buf.length >= k) buf(buf.length - k) else null
+        var j = 0
+        while (j < outW) {
+          out(at + j) = (mode: @scala.annotation.switch) match {
+            case 0 => if (donor == null) null else donor(j)
+            case 3 => emit(buf, cur, j)
+            case _ =>
+              if (cur(j) == null) null
+              else {
+                // missing donor (edge row or NULL lagged value) = NaN —
+                // the std-mode `.diff()`/`.pct_change()` edge fill,
+                // fused into the emit
+                val dv =
+                  if (donor == null || donor(j) == null) Double.NaN
+                  else donor(j).asInstanceOf[Double]
+                val cv = cur(j).asInstanceOf[Double]
+                java.lang.Double.valueOf(
+                  if (mode == 1) cv - dv else cv / dv - 1.0)
+              }
           }
-          buf.append(cur)
-          if (buf.length > k) buf.removeHead()
-          new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            outVals, outSchema): org.apache.spark.sql.Row
+          j += 1
         }
       }
-    streamed.drop("__pfx_pid", okey)
+      push(cur)
+    }
+
+    // advance through the slice's lookahead rows: the oldest held row is
+    // due once its window end is `centerLead` positions past it
+    override def finish(held: scala.collection.mutable.ArrayDeque[Array[Any]],
+                        at: Int): Unit = {
+      val la = lookahead.getOrElse(pid, Array.empty)
+      val p = held.length
+      var done = 0
+      var li = 0
+      while (li < la.length && done < p) {
+        val cur = la(li)
+        if (li + p - done == centerLead) {
+          var j = 0
+          while (j < outW) { held(done)(at + j) = emit(buf, cur, j); j += 1 }
+          done += 1
+        }
+        push(cur)
+        li += 1
+      }
+      while (done < p) {
+        var j = 0
+        while (j < outW) { held(done)(at + j) = dNaN; j += 1 }
+        done += 1
+      }
+    }
   }
 
   /** The r7 positional-join fallback for very large offsets: dense pos on
@@ -1495,13 +1586,15 @@ object Prefix {
     * precision for values within 1e150× of each other (a disclosed
     * strict improvement, CI-pinned).
     *
-    * `keyCol` must be a non-null UNIQUE key (total-order tiebreak),
-    * `inNames` DoubleType with invalid cells as NULL or NaN. */
-  def ewmScan(df: DataFrame, keyCol: String, orderCol: Column,
-              inNames: Seq[String], alpha: Double,
+    * Like [[positionalLagShared]], the scan reads the session-shared
+    * slice layout of `base`, with the `derived` value projections
+    * (pre-aliased to `inNames`) applied above it. `keyCol` must be a
+    * non-null UNIQUE key (total-order tiebreak), `derived` DoubleType
+    * with invalid cells as NULL or NaN. */
+  def ewmScan(base: DataFrame, derived: Seq[Column], keyCol: String,
+              orderCol: Column, inNames: Seq[String], alpha: Double,
               outNames: Seq[String], stat: String,
-              minPeriods: Int = 0,
-              shared: Option[Seq[Column]] = None): DataFrame = {
+              minPeriods: Int = 0): DataFrame = {
     // α = 0 is the UNIT-WEIGHT limit (f = 1, no decay): the scan reduces
     // to the exact expanding Welford + Chan merge with DEN = n² − n, i.e.
     // the corrected expanding variance — the expanding pairwise cov/corr
@@ -1513,28 +1606,10 @@ object Prefix {
     require(minPeriods >= 0, s"minPeriods must be >= 0, got $minPeriods")
     require(inNames.length == outNames.length, "inNames/outNames must align")
     require(Set("mean", "var", "sum")(stat), s"unknown ewm stat '$stat'")
-    require(shared.forall(_.length == inNames.length),
-      "derived projections and inNames must align")
-    // shared mode: df is the base; type-check the derived projections
-    // (schema-only — analysis, no job)
-    val sch = shared.fold(df.schema)(d => {
-      val s = df.select(d: _*).schema
-      org.apache.spark.sql.types.StructType(
-        s.fields.zip(inNames).map { case (f, nm) => f.copy(name = nm) })
-    })
-    inNames.foreach { nm =>
-      require(sch(nm).dataType == org.apache.spark.sql.types.DoubleType,
-        s"ewmScan requires DoubleType columns, got ${sch(nm).dataType} for $nm")
-    }
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val okey = if (shared.isDefined) "__slc_ord" else "__ewm_ord"
+    val scan = sliceScan(base, derived, keyCol, orderCol, inNames,
+      Some("ewmScan"))
+    val parts = scan.parts
     val needVar = stat == "var"
-    // ewm SUM (r11 session 5): the unnormalized decayed sum is exactly
-    // μ·W1 — both already in the mean-stat state; unlike the mean it
-    // DECAYS at holes (W1 does), so the emit multiplies pointwise
-    // instead of carrying
-    val needSum = stat == "sum"
     val f = 1.0 - alpha
     val f2 = f * f
     val width = inNames.length
@@ -1565,83 +1640,46 @@ object Prefix {
     val stride = if (needVar) 20 else 8
     val cntSlot = if (needVar) 13 else 7
 
-    val preLaid = shared.isDefined
-    val sliced = shared match {
-      case Some(derived) =>
-        sliceLayout(df, keyCol, orderCol, parts, rev = false)
-          .select(col("*") +: derived: _*)
-      case None =>
-        withSliceId(df.withColumn(okey, orderCol), col(okey),
-          inNames, Nil, descending = false, nullsLast = false,
-          tieCols = Seq(col(keyCol)), parts)
-    }
-    val ordAsc = Seq(col(okey).asc_nulls_first, col(keyCol).asc)
-
-    // ---- pass 1: per-slice segment states from a NARROW projection ----
-    val pSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("pid",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("p",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, containsNull = false),
-        nullable = false)))
-    val pEnc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(pSchema)
-    val partialNarrow = sliced
-      .select(col("__pfx_pid") +: col(okey) +: col(keyCol) +:
-        inNames.map(col): _*)
-    val partialRows = (if (preLaid) partialNarrow // layout already laid out
-      else partialNarrow
-        .repartition(parts, col("__pfx_pid"))
-        .sortWithinPartitions((col("__pfx_pid").asc +: ordAsc): _*))
-      .mapPartitions { it =>
-        val runs = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        var curPid = Int.MinValue
-        var st: Array[Double] = null
-        def flush(): Unit =
-          if (st != null) runs += org.apache.spark.sql.Row(curPid, st.toSeq)
-        it.foreach { r =>
-          val pid = r.getInt(0)
-          if (pid != curPid) { flush(); curPid = pid; st = ewmInit(width, needVar) }
+    // ---- pass 1: per-slice segment states ----
+    val byPid = scan.partials[Double](DoubleType) { () =>
+      new SlicePartial {
+        private val st = ewmInit(width, needVar)
+        def step(r: Row): Unit = {
           var i = 0
           while (i < width) {
-            val o = i * stride
-            val valid = !r.isNullAt(3 + i) && !r.getDouble(3 + i).isNaN
-            ewmStep(st, o, needVar, f, f2,
-              if (valid) r.getDouble(3 + i) else Double.NaN, valid)
+            val valid = !r.isNullAt(1 + i) && !r.getDouble(1 + i).isNaN
+            ewmStep(st, i * stride, needVar, f, f2,
+              if (valid) r.getDouble(1 + i) else Double.NaN, valid)
             i += 1
           }
         }
-        flush()
-        runs.iterator
-      }(pEnc)
-      .collect()
+        def result: Seq[Any] = st.toSeq
+      }
+    }
 
     // ---- driver combine: sequential over slice ids — O(parts·width) ----
-    // incoming(pid) = per column [μ, W1, S, DEN, lastMean, lastVar, cnt]
-    // BEFORE the slice's first row (μ = NaN until a valid cell exists;
-    // cnt = valid cells seen in earlier slices, the min_periods gate)
-    val istride = 7
+    // incoming(pid) = the [[EwmKernel]] seed per column BEFORE the
+    // slice's first row (μ = NaN until a valid cell exists; cnt = valid
+    // cells seen in earlier slices, the min_periods gate)
     val glob = new Array[Double](width * 4) // μ, W1, S, DEN
     var gi = 0
     while (gi < width) { glob(gi * 4) = Double.NaN; gi += 1 }
     val lastM = Array.fill(width)(Double.NaN)
     val lastV = Array.fill(width)(Double.NaN)
     val cumCnt = new Array[Double](width)
-    val byPid = partialRows.map(r =>
-      r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-    val incoming: Map[Int, Array[Double]] = (0 until parts).map { s =>
-      val in = new Array[Double](width * istride)
+    val incoming: Array[Array[Double]] = Array.tabulate(parts) { s =>
+      val in = new Array[Double](width * 8)
       var i = 0
       while (i < width) {
-        in(i * istride) = glob(i * 4); in(i * istride + 1) = glob(i * 4 + 1)
-        in(i * istride + 2) = glob(i * 4 + 2); in(i * istride + 3) = glob(i * 4 + 3)
-        in(i * istride + 4) = lastM(i); in(i * istride + 5) = lastV(i)
-        in(i * istride + 6) = cumCnt(i)
+        in(i * 8) = glob(i * 4); in(i * 8 + 1) = glob(i * 4 + 2)
+        in(i * 8 + 2) = glob(i * 4 + 1); in(i * 8 + 3) = glob(i * 4 + 3)
+        in(i * 8 + 4) = 1.0 // unit observation weight
+        in(i * 8 + 5) = lastM(i); in(i * 8 + 6) = lastV(i)
+        in(i * 8 + 7) = cumCnt(i)
         i += 1
       }
-      byPid.get(s).foreach { p =>
+      byPid.get(s).foreach { ps =>
+        val p = ps.toArray
         var j = 0
         while (j < width) {
           val o = j * stride
@@ -1693,147 +1731,14 @@ object Prefix {
           j += 1
         }
       }
-      s -> in
-    }.toMap
+      in
+    }
 
     // ---- pass 2: fully parallel emit with the combined incoming state --
-    val inSchema = sliced.schema
-    val inIdx = inNames.map(inSchema.fieldIndex)
-    val pidIdx = inSchema.fieldIndex("__pfx_pid")
-    val outSchema = org.apache.spark.sql.types.StructType(
-      inSchema.fields ++ outNames.map(o =>
-        org.apache.spark.sql.types.StructField(o,
-          org.apache.spark.sql.types.DoubleType, nullable = true)))
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    val emitted = (if (preLaid) sliced
-      else sliced
-        .repartition(parts, col("__pfx_pid"))
-        .sortWithinPartitions((col("__pfx_pid").asc +: ordAsc): _*))
-      .mapPartitions { it =>
-        var curPid = Int.MinValue
-        var st: Array[Double] = null        // per column: μ, W1, S, DEN
-        var carryM: Array[Double] = null
-        var carryV: Array[Double] = null
-        var cnts: Array[Long] = null        // valid obs so far (minp gate)
-        it.map { r =>
-          val pid = r.getInt(pidIdx)
-          if (pid != curPid) {
-            curPid = pid
-            st = new Array[Double](width * 4)
-            carryM = new Array[Double](width)
-            carryV = new Array[Double](width)
-            cnts = new Array[Long](width)
-            val in = incoming.getOrElse(pid, null)
-            var i = 0
-            while (i < width) {
-              if (in != null) {
-                st(i * 4) = in(i * istride); st(i * 4 + 1) = in(i * istride + 1)
-                st(i * 4 + 2) = in(i * istride + 2); st(i * 4 + 3) = in(i * istride + 3)
-                carryM(i) = in(i * istride + 4); carryV(i) = in(i * istride + 5)
-                cnts(i) = in(i * istride + 6).toLong
-              } else {
-                st(i * 4) = Double.NaN
-                carryM(i) = Double.NaN; carryV(i) = Double.NaN
-              }
-              i += 1
-            }
-          }
-          val outVals = new Array[Any](r.length + width)
-          var i = 0
-          while (i < r.length) { outVals(i) = r.get(i); i += 1 }
-          var j = 0
-          while (j < width) {
-            val o = j * 4
-            val raw = inIdx(j)
-            val valid = !r.isNullAt(raw) && !r.getDouble(raw).isNaN
-            // decay the masses (μ and covB are weight-scale-invariant),
-            // then absorb the valid cell — DEN uses the post-decay
-            // PRE-add W1: (W1+1)² − (W2+1) = (W1² − W2) + 2·W1
-            st(o + 1) *= f
-            if (needVar) st(o + 3) *= f2
-            if (valid) {
-              val v = r.getDouble(raw)
-              val oldWt = st(o + 1)
-              // resurrect from a COLLAPSED state (r10 ADVICE): once a
-              // hole run decayed the mass below 1e-150 the state dropped
-              // it (below), so the natural update restarts at μ = v,
-              // covB = 0 — exact to double precision. The var at this
-              // one cell has a non-trivial ε → 0 limit, though: with
-              // stale mass ε vs the new unit weight, covB′ → ε·(covB +
-              // d²), DEN′ → 2ε, so var = covB′·W1′²/DEN′ → (covB + d²)/2
-              // where d = μ − v — ε cancels instead of vanishing. Emit
-              // that limit (the mathematically exact value; pandas'
-              // closed form noise-collapsed ~1100 holes earlier).
-              val resurrect = needVar && f > 0.0 && oldWt == 0.0 &&
-                !st(o).isNaN
-              val limVar = if (resurrect)
-                (math.max(0.0, st(o + 2)) + (st(o) - v) * (st(o) - v)) / 2.0
-              else Double.NaN
-              if (needVar) st(o + 3) += 2.0 * oldWt
-              st(o + 1) += 1.0
-              if (st(o).isNaN) { st(o) = v; st(o + 2) = 0.0 }
-              else {
-                val oldMean = st(o)
-                st(o) = (oldWt * oldMean + v) / st(o + 1)
-                if (needVar) {
-                  val dm = oldMean - st(o); val dv = v - st(o)
-                  st(o + 2) = (oldWt * (st(o + 2) + dm * dm) + dv * dv) /
-                    st(o + 1)
-                }
-              }
-              carryM(j) = st(o)
-              cnts(j) += 1
-              // the pandas min_periods gate: NaN until the running valid
-              // observation count reaches minPeriods (state still updates)
-              val gated = minPeriods > 0 && cnts(j) < minPeriods
-              if (needVar) {
-                val fv = if (resurrect) limVar
-                         else ewmVarOf(st(o + 1), st(o + 2), st(o + 3))
-                if (!fv.isNaN) carryV(j) = fv
-                outVals(r.length + j) = java.lang.Double.valueOf(
-                  if (gated) Double.NaN else fv)
-              } else
-                outVals(r.length + j) = java.lang.Double.valueOf(
-                  if (gated) Double.NaN
-                  else if (needSum) st(o) * st(o + 1)
-                  else st(o))
-            } else {
-              // hole: μ and the var value are decay-invariant — emit the
-              // carried values exactly (pandas recomputes and matches);
-              // NaN while the valid count sits below min_periods.
-              // sum: μ·W1 decays WITH the mass (pandas ewm.sum — no
-              // carry); a collapsed W1 = 0 reads sum 0 (the true value
-              // is below 1e-150 of the data scale)
-              outVals(r.length + j) = java.lang.Double.valueOf(
-                if (minPeriods > 0 && cnts(j) < minPeriods) Double.NaN
-                else if (needVar) carryV(j)
-                else if (needSum) {
-                  val mu = if (st(o).isNaN) carryM(j) else st(o)
-                  mu * st(o + 1)
-                }
-                else if (st(o).isNaN) carryM(j) else st(o))
-              // COLLAPSE long-decayed masses (r10 ADVICE — the previous
-              // 1e150 rescale silently re-inflated the stale history to
-              // O(1) weight at the next valid cell): mass below 1e-150
-              // of the next observation's unit weight is dropped
-              // entirely; μ and covB stay for the hole carries and the
-              // resurrect limit var above. Contract note: history whose
-              // VALUES are within 1e150× of the incoming value loses
-              // < 1 ulp of influence; only pathological magnitude ratios
-              // (|μ| > 1e150·|v|) can tell the difference.
-              if (st(o + 1) > 0 && st(o + 1) < 1e-150) {
-                st(o + 1) = 0.0
-                if (needVar) st(o + 3) = 0.0
-              }
-            }
-            j += 1
-          }
-          new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            outVals, outSchema): org.apache.spark.sql.Row
-        }
-      }
-    emitted.drop("__pfx_pid", okey)
+    val inIdx = scan.inIdx
+    scan.emit(doubleFields(outNames)) { () =>
+      new EwmKernel(incoming, inIdx, alpha, adjust = true, stat, minPeriods)
+    }
   }
 
   /** Exact distributed ewm scan for pandas' `adjust=False` (r11): the
@@ -1880,35 +1785,23 @@ object Prefix {
     * Chan-merge, decay by the trail (the merge identity is validated
     * against the sequential recurrence over random splits AND
     * cell-for-cell on multi-slice fuzz in RollingFamilySpec). Same
-    * two-pass + O(parts·width) driver shape as [[ewmScan]]; same
-    * min_periods count monoid. */
-  def ewmScanRecursive(df: DataFrame, keyCol: String, orderCol: Column,
+    * two-pass + O(parts·width) driver shape as [[ewmScan]], the same
+    * emit kernel ([[EwmKernel]]) and the same min_periods count
+    * monoid. */
+  def ewmScanRecursive(base: DataFrame, derived: Seq[Column],
+                       keyCol: String, orderCol: Column,
                        inNames: Seq[String], alpha: Double,
                        outNames: Seq[String], stat: String,
-                       minPeriods: Int = 0,
-                       shared: Option[Seq[Column]] = None): DataFrame = {
+                       minPeriods: Int = 0): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0,1], got $alpha")
     require(minPeriods >= 0, s"minPeriods must be >= 0, got $minPeriods")
     require(inNames.length == outNames.length, "inNames/outNames must align")
     require(Set("mean", "var")(stat), s"unknown ewm stat '$stat'")
-    require(shared.forall(_.length == inNames.length),
-      "derived projections and inNames must align")
-    val sch = shared.fold(df.schema)(d => {
-      val s = df.select(d: _*).schema
-      org.apache.spark.sql.types.StructType(
-        s.fields.zip(inNames).map { case (f, nm) => f.copy(name = nm) })
-    })
-    inNames.foreach { nm =>
-      require(sch(nm).dataType == org.apache.spark.sql.types.DoubleType,
-        s"ewmScanRecursive requires DoubleType columns, got " +
-          s"${sch(nm).dataType} for $nm")
-    }
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val okey = if (shared.isDefined) "__slc_ord" else "__ewr_ord"
+    val scan = sliceScan(base, derived, keyCol, orderCol, inNames,
+      Some("ewmScanRecursive"))
+    val parts = scan.parts
     val needVar = stat == "var"
     val f = 1.0 - alpha
-    val f2 = f * f
     val width = inNames.length
     // per-column segment payload (block fields at the T_lastObs = 1
     // scale — renormalized at every obs; trailing decay in cTrail; the
@@ -1922,44 +1815,12 @@ object Prefix {
     // pre-resurrect T_lastObs scale (recovered as logTrel − ln α).
     val stride = if (needVar) 17 else 9
 
-    val preLaid = shared.isDefined
-    val sliced = shared match {
-      case Some(derived) =>
-        sliceLayout(df, keyCol, orderCol, parts, rev = false)
-          .select(col("*") +: derived: _*)
-      case None =>
-        withSliceId(df.withColumn(okey, orderCol), col(okey),
-          inNames, Nil, descending = false, nullsLast = false,
-          tieCols = Seq(col(keyCol)), parts)
-    }
-    val ordAsc = Seq(col(okey).asc_nulls_first, col(keyCol).asc)
-
-    // ---- pass 1: per-slice segment payloads from a narrow projection --
-    val pSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("pid",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("p",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, containsNull = false),
-        nullable = false)))
-    val pEnc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(pSchema)
-    val partialNarrow = sliced
-      .select(col("__pfx_pid") +: col(okey) +: col(keyCol) +:
-        inNames.map(col): _*)
-    val partialRows = (if (preLaid) partialNarrow
-      else partialNarrow
-        .repartition(parts, col("__pfx_pid"))
-        .sortWithinPartitions((col("__pfx_pid").asc +: ordAsc): _*))
-      .mapPartitions { it =>
-        val runs = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        var curPid = Int.MinValue
-        var st: Array[Double] = null
-        var cSince: Array[Double] = null // decay since last obs
-        def fresh(): Unit = {
-          st = new Array[Double](width * stride)
-          cSince = Array.fill(width)(1.0)
+    // ---- pass 1: per-slice segment payloads ----
+    val byPid = scan.partials[Double](DoubleType) { () =>
+      new SlicePartial {
+        private val st = new Array[Double](width * stride)
+        private val cSince = Array.fill(width)(1.0) // decay since last obs
+        locally {
           var i = 0
           while (i < width) {
             val o = i * stride
@@ -1969,24 +1830,12 @@ object Prefix {
             i += 1
           }
         }
-        def flush(): Unit =
-          if (st != null) {
-            var i = 0
-            while (i < width) { // cTrail = cSince at segment end
-              val o = i * stride
-              if (st(o) > 0) st(o + (if (needVar) 8 else 6)) = cSince(i)
-              i += 1
-            }
-            runs += org.apache.spark.sql.Row(curPid, st.toSeq)
-          }
-        it.foreach { r =>
-          val pid = r.getInt(0)
-          if (pid != curPid) { flush(); curPid = pid; fresh() }
+        def step(r: Row): Unit = {
           var i = 0
           while (i < width) {
             val o = i * stride
-            val valid = !r.isNullAt(3 + i) && !r.getDouble(3 + i).isNaN
-            val v = if (valid) r.getDouble(3 + i) else Double.NaN
+            val valid = !r.isNullAt(1 + i) && !r.getDouble(1 + i).isNaN
+            val v = if (valid) r.getDouble(1 + i) else Double.NaN
             if (st(o) == 0.0) {
               // before the first obs: decay c1; collapse it at 1e-150
               st(o + 1) *= f
@@ -2057,17 +1906,23 @@ object Prefix {
             i += 1
           }
         }
-        flush()
-        runs.iterator
-      }(pEnc)
-      .collect()
+        def result: Seq[Any] = {
+          var i = 0
+          while (i < width) { // cTrail = cSince at segment end
+            val o = i * stride
+            if (st(o) > 0) st(o + (if (needVar) 8 else 6)) = cSince(i)
+            i += 1
+          }
+          st.toSeq
+        }
+      }
+    }
 
     // ---- driver combine: the validated 3-part merge, sequential over
     // slice ids — O(parts·width); glob renormalized after each segment
     // so pendW stays in [1e-50·α, 1] ----
     // glob per column: [μ, covB, W1, DEN, pendW]; incoming adds
-    // [lastM, lastV, cnt] → istride 8
-    val istride = 8
+    // [lastM, lastV, cnt] — the [[EwmKernel]] seed
     val glob = new Array[Double](width * 5)
     var gi = 0
     while (gi < width) {
@@ -2077,19 +1932,17 @@ object Prefix {
     val lastM = Array.fill(width)(Double.NaN)
     val lastV = Array.fill(width)(Double.NaN)
     val cumCnt = new Array[Double](width)
-    val byPid = partialRows.map(r =>
-      r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-    val incoming: Map[Int, Array[Double]] = (0 until parts).map { s =>
-      val in = new Array[Double](width * istride)
+    val incoming: Array[Array[Double]] = Array.tabulate(parts) { s =>
+      val in = new Array[Double](width * 8)
       var i = 0
       while (i < width) {
-        var k = 0
-        while (k < 5) { in(i * istride + k) = glob(i * 5 + k); k += 1 }
-        in(i * istride + 5) = lastM(i); in(i * istride + 6) = lastV(i)
-        in(i * istride + 7) = cumCnt(i)
+        System.arraycopy(glob, i * 5, in, i * 8, 5)
+        in(i * 8 + 5) = lastM(i); in(i * 8 + 6) = lastV(i)
+        in(i * 8 + 7) = cumCnt(i)
         i += 1
       }
-      byPid.get(s).foreach { p =>
+      byPid.get(s).foreach { ps =>
+        val p = ps.toArray
         var j = 0
         while (j < width) {
           val o = j * stride
@@ -2200,122 +2053,156 @@ object Prefix {
           j += 1
         }
       }
-      s -> in
-    }.toMap
+      in
+    }
 
     // ---- pass 2: fully parallel emit with the combined incoming state --
-    val inSchema = sliced.schema
-    val inIdx = inNames.map(inSchema.fieldIndex)
-    val pidIdx = inSchema.fieldIndex("__pfx_pid")
-    val outSchema = org.apache.spark.sql.types.StructType(
-      inSchema.fields ++ outNames.map(o =>
-        org.apache.spark.sql.types.StructField(o,
-          org.apache.spark.sql.types.DoubleType, nullable = true)))
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    val emitted = (if (preLaid) sliced
-      else sliced
-        .repartition(parts, col("__pfx_pid"))
-        .sortWithinPartitions((col("__pfx_pid").asc +: ordAsc): _*))
-      .mapPartitions { it =>
-        var curPid = Int.MinValue
-        var st: Array[Double] = null  // per column: μ, covB, W1, DEN, pendW
-        var carryM: Array[Double] = null
-        var carryV: Array[Double] = null
-        var cnts: Array[Long] = null
-        it.map { r =>
-          val pid = r.getInt(pidIdx)
-          if (pid != curPid) {
-            curPid = pid
-            st = new Array[Double](width * 5)
-            carryM = new Array[Double](width)
-            carryV = new Array[Double](width)
-            cnts = new Array[Long](width)
-            val in = incoming.getOrElse(pid, null)
-            var i = 0
-            while (i < width) {
-              if (in != null) {
-                var k = 0
-                while (k < 5) { st(i * 5 + k) = in(i * istride + k); k += 1 }
-                carryM(i) = in(i * istride + 5)
-                carryV(i) = in(i * istride + 6)
-                cnts(i) = in(i * istride + 7).toLong
-              } else {
-                st(i * 5) = Double.NaN; st(i * 5 + 4) = 1.0
-                carryM(i) = Double.NaN; carryV(i) = Double.NaN
-              }
-              i += 1
-            }
-          }
-          val outVals = new Array[Any](r.length + width)
-          var i = 0
-          while (i < r.length) { outVals(i) = r.get(i); i += 1 }
-          var j = 0
-          while (j < width) {
-            val o = j * 5
-            val raw = inIdx(j)
-            val valid = !r.isNullAt(raw) && !r.getDouble(raw).isNaN
-            st(o + 2) *= f
-            if (needVar) st(o + 3) *= f2
-            if (valid) {
-              val v = r.getDouble(raw)
-              val oldWt = st(o + 2)
-              val w = st(o + 4)
-              val resurrect = needVar && f > 0.0 && oldWt == 0.0 &&
-                !st(o).isNaN
-              val limVar = if (resurrect)
-                (math.max(0.0, st(o + 1)) + (st(o) - v) * (st(o) - v)) / 2.0
-              else Double.NaN
-              if (needVar) st(o + 3) += 2.0 * w * oldWt
-              st(o + 2) += w
-              if (st(o).isNaN) { st(o) = v; st(o + 1) = 0.0 }
-              else {
-                val oldMean = st(o)
-                val mun = (oldWt * oldMean + w * v) / st(o + 2)
-                if (needVar) {
-                  val dm = oldMean - mun; val dv = v - mun
-                  st(o + 1) =
-                    (oldWt * (st(o + 1) + dm * dm) + w * dv * dv) / st(o + 2)
-                }
-                st(o) = mun
-              }
-              st(o + 4) = alpha * st(o + 2)
-              // renormalize: T is monotone non-increasing under
-              // adjust=False, and the state is homogeneous in its scale
-              if (st(o + 4) > 0 && st(o + 4) < 1e-50) {
-                st(o + 2) *= 1e50; st(o + 3) *= 1e100; st(o + 4) *= 1e50
-              }
-              carryM(j) = st(o)
-              cnts(j) += 1
-              val gated = minPeriods > 0 && cnts(j) < minPeriods
-              if (needVar) {
-                val fv = if (resurrect) limVar
-                         else ewmVarOf(st(o + 2), st(o + 1), st(o + 3))
-                if (!fv.isNaN) carryV(j) = fv
-                outVals(r.length + j) = java.lang.Double.valueOf(
-                  if (gated) Double.NaN else fv)
-              } else
-                outVals(r.length + j) = java.lang.Double.valueOf(
-                  if (gated) Double.NaN else st(o))
-            } else {
-              outVals(r.length + j) = java.lang.Double.valueOf(
-                if (minPeriods > 0 && cnts(j) < minPeriods) Double.NaN
-                else if (needVar) carryV(j)
-                else if (st(o).isNaN) carryM(j) else st(o))
-              // collapse relative to the (non-decaying) next obs weight
-              if (st(o + 2) > 0 && st(o + 2) < st(o + 4) * 1e-150) {
-                st(o + 2) = 0.0
-                if (needVar) st(o + 3) = 0.0
-              }
-            }
-            j += 1
-          }
-          new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            outVals, outSchema): org.apache.spark.sql.Row
-        }
-      }
-    emitted.drop("__pfx_pid", okey)
+    val inIdx = scan.inIdx
+    scan.emit(doubleFields(outNames)) { () =>
+      new EwmKernel(incoming, inIdx, alpha, adjust = false, stat, minPeriods)
+    }
   }
+
+  /** The ewm emit kernel of [[ewmScan]] (adjust=True) and
+    * [[ewmScanRecursive]] (adjust=False). Per column the state is
+    * (μ, covB, W1, DEN, pendW), seeded per slice from the driver
+    * combine's incoming [μ, covB, W1, DEN, pendW, lastMean, lastVar,
+    * cnt]. Per row the masses decay (μ and covB are weight-scale-
+    * invariant); a valid cell enters at weight w = pendW. adjust=False
+    * refreshes pendW = α·W1 after each absorb and rescales by 1e50
+    * whenever it drops below 1e-50 (T is monotone non-increasing, and
+    * the state is homogeneous in its scale). adjust=True keeps pendW at
+    * 1.0, where every weighted term (2·w·oldWt, w·v, w·dv²), the
+    * relative collapse test W1 < pendW·1e-150 and the never-firing
+    * rescale reduce bit-exactly to the unit-weight recurrence. */
+  private final class EwmKernel(incoming: Array[Array[Double]],
+                                inIdx: Array[Int], alpha: Double,
+                                adjust: Boolean, stat: String,
+                                minPeriods: Int) extends SliceKernel {
+    private val width = inIdx.length
+    private val f = 1.0 - alpha
+    private val f2 = f * f
+    private val needVar = stat == "var"
+    // ewm SUM (r11 session 5): the unnormalized decayed sum is exactly
+    // μ·W1 — both already in the mean-stat state; unlike the mean it
+    // DECAYS at holes (W1 does), so the emit multiplies pointwise
+    // instead of carrying
+    private val needSum = stat == "sum"
+    private val st = new Array[Double](width * 5)
+    private val carryM = new Array[Double](width)
+    private val carryV = new Array[Double](width)
+    private val cnts = new Array[Long](width) // valid obs so far (minp gate)
+
+    def enter(pid: Int): Unit = {
+      val in = incoming(pid)
+      var i = 0
+      while (i < width) {
+        System.arraycopy(in, i * 8, st, i * 5, 5)
+        carryM(i) = in(i * 8 + 5); carryV(i) = in(i * 8 + 6)
+        cnts(i) = in(i * 8 + 7).toLong
+        i += 1
+      }
+    }
+
+    def cells(r: Row, out: Array[Any], at: Int): Unit = {
+      var j = 0
+      while (j < width) {
+        val o = j * 5
+        val raw = inIdx(j)
+        val valid = !r.isNullAt(raw) && !r.getDouble(raw).isNaN
+        // decay the masses, then absorb the valid cell — DEN uses the
+        // post-decay PRE-add W1: (W1+w)² − (W2+w²) = (W1² − W2) + 2·w·W1
+        st(o + 2) *= f
+        if (needVar) st(o + 3) *= f2
+        if (valid) {
+          val v = r.getDouble(raw)
+          val oldWt = st(o + 2)
+          val w = st(o + 4)
+          // resurrect from a COLLAPSED state (r10 ADVICE): once a hole
+          // run decayed the mass below 1e-150 the state dropped it
+          // (below), so the natural update restarts at μ = v, covB = 0 —
+          // exact to double precision. The var at this one cell has a
+          // non-trivial ε → 0 limit, though: with stale mass ε vs the new
+          // weight, covB′ → ε·(covB + d²), DEN′ → 2ε, so var =
+          // covB′·W1′²/DEN′ → (covB + d²)/2 where d = μ − v — ε cancels
+          // instead of vanishing. Emit that limit (the mathematically
+          // exact value; pandas' closed form noise-collapsed ~1100 holes
+          // earlier).
+          val resurrect = needVar && f > 0.0 && oldWt == 0.0 &&
+            !st(o).isNaN
+          val limVar = if (resurrect)
+            (math.max(0.0, st(o + 1)) + (st(o) - v) * (st(o) - v)) / 2.0
+          else Double.NaN
+          if (needVar) st(o + 3) += 2.0 * w * oldWt
+          st(o + 2) += w
+          if (st(o).isNaN) { st(o) = v; st(o + 1) = 0.0 }
+          else {
+            val oldMean = st(o)
+            val mun = (oldWt * oldMean + w * v) / st(o + 2)
+            if (needVar) {
+              val dm = oldMean - mun; val dv = v - mun
+              st(o + 1) =
+                (oldWt * (st(o + 1) + dm * dm) + w * dv * dv) / st(o + 2)
+            }
+            st(o) = mun
+          }
+          if (!adjust) {
+            st(o + 4) = alpha * st(o + 2)
+            if (st(o + 4) > 0 && st(o + 4) < 1e-50) {
+              st(o + 2) *= 1e50; st(o + 3) *= 1e100; st(o + 4) *= 1e50
+            }
+          }
+          carryM(j) = st(o)
+          cnts(j) += 1
+          // the pandas min_periods gate: NaN until the running valid
+          // observation count reaches minPeriods (state still updates)
+          val gated = minPeriods > 0 && cnts(j) < minPeriods
+          if (needVar) {
+            val fv = if (resurrect) limVar
+                     else ewmVarOf(st(o + 2), st(o + 1), st(o + 3))
+            if (!fv.isNaN) carryV(j) = fv
+            out(at + j) = java.lang.Double.valueOf(
+              if (gated) Double.NaN else fv)
+          } else
+            out(at + j) = java.lang.Double.valueOf(
+              if (gated) Double.NaN
+              else if (needSum) st(o) * st(o + 2)
+              else st(o))
+        } else {
+          // hole: μ and the var value are decay-invariant — emit the
+          // carried values exactly (pandas recomputes and matches); NaN
+          // while the valid count sits below min_periods. sum: μ·W1
+          // decays WITH the mass (pandas ewm.sum — no carry); a collapsed
+          // W1 = 0 reads sum 0 (the true value is below 1e-150 of the
+          // data scale)
+          out(at + j) = java.lang.Double.valueOf(
+            if (minPeriods > 0 && cnts(j) < minPeriods) Double.NaN
+            else if (needVar) carryV(j)
+            else if (needSum) {
+              val mu = if (st(o).isNaN) carryM(j) else st(o)
+              mu * st(o + 2)
+            }
+            else if (st(o).isNaN) carryM(j) else st(o))
+          // COLLAPSE long-decayed masses (r10 ADVICE — the previous
+          // 1e150 rescale silently re-inflated the stale history to O(1)
+          // weight at the next valid cell): mass below 1e-150 of the next
+          // observation's weight is dropped entirely; μ and covB stay
+          // for the hole carries and the resurrect limit var above.
+          // Contract note: history whose VALUES are within 1e150× of the
+          // incoming value loses < 1 ulp of influence; only pathological
+          // magnitude ratios (|μ| > 1e150·|v|) can tell the difference.
+          if (st(o + 2) > 0 && st(o + 2) < st(o + 4) * 1e-150) {
+            st(o + 2) = 0.0
+            if (needVar) st(o + 3) = 0.0
+          }
+        }
+        j += 1
+      }
+    }
+  }
+
+  private def doubleFields(names: Seq[String]): Seq[StructField] =
+    names.map(StructField(_, DoubleType, nullable = true))
 
   /** Fresh per-column ewm segment state (see [[ewmScan]]'s layout):
     * μ fields start NaN, decay products at 1, everything else 0. */
@@ -2473,6 +2360,18 @@ object Prefix {
     }
   }
 
+  /** Observability hook for specs: the sparse (slice, value) count
+    * entries the most recent [[runningQuantile]] partial pass actually
+    * brought to the driver — asserted ≤ slices × Σd by the in-code bound
+    * and pinned partitioning-independent in RollingFamilySpec. */
+  @volatile private[graft] var lastQuantilePartialRows: Int = -1
+
+  /** Observability hook (r14): total sparse increment entries in the most
+    * recent [[runningQuantile]] broadcast — RollingFamilySpec pins that
+    * driver + broadcast memory is Σ(sparse partials), never the dense
+    * slices × d product the r13 combine materialized. */
+  @volatile private[graft] var lastQuantileBroadcastEntries: Long = -1L
+
   /** `.expanding().median()/.quantile(q)` (r12): the EXACT running order
     * statistic, distributed as running rank selection over running VALUE
     * counts — the last clean-rejection in the window family (the r11
@@ -2488,13 +2387,12 @@ object Prefix {
     * `limit(budget+1)` scan — above it the operator raises cleanly
     * naming the conf (an interpolated order statistic cannot be both
     * exact and sub-linear-state on an unbounded domain; round/bucket the
-    * values first — the cln_mad discipline); (1) one narrow pass emits
-    * per-(partition, slice) SPARSE count partials, pre-aggregated on
-    * (slice, domain idx) by one small hash aggregate BEFORE the collect,
-    * so the driver receives ≤ slices·Σd rows no matter how the input is
-    * partitioned (a randomly-ordered cluster input holds every slice in
-    * every input partition); (2) the driver groups the collected SPARSE
-    * partials per slice and broadcasts exactly those (r14 — the r13
+    * values first — the cln_mad discipline); (1) one narrow pass over
+    * the slice layout emits each slice's SPARSE count partial — the
+    * layout holds every slice in exactly one partition, so the driver
+    * receives ≤ slices·Σd entries no matter how the input was
+    * partitioned, with no aggregate before the collect; (2) the driver
+    * broadcasts exactly those sparse partials per slice (r14 — the r13
     * dense combine materialized one Array[Long](d) snapshot PER SLICE on
     * the driver and broadcast the whole map, O(slices·Σd) longs on the
     * driver and every executor, and slice count grows linearly with
@@ -2512,83 +2410,49 @@ object Prefix {
     * re-emit the current statistic (the pandas carry).
     *
     * 100 TB posture: state is O(d) per task (budget-bounded), the data
-    * moves ONCE through the one hash exchange all prefix ops share, and
+    * moves ONCE through the one hash exchange all slice scans share, and
     * the driver and the broadcast hold only the Σ(sparse partials) ≤
     * min(valid rows, slices·Σd) collected longs — never a dense
     * slices×d product, so neither grows with slice count alone.
-    * `inNames` must be DoubleType with invalid cells as
-    * NaN; `keyCol` a non-null unique tiebreak. */
-  /** Observability hook for specs: the row count the most recent
-    * [[runningQuantile]] phase-1 collect actually brought to the driver —
-    * asserted ≤ slices × Σd by the in-code bound and pinned partitioning-
-    * independent in RollingFamilySpec. */
-  @volatile private[graft] var lastQuantilePartialRows: Int = -1
-
-  /** Observability hook (r14): total sparse increment entries in the most
-    * recent [[runningQuantile]] broadcast — RollingFamilySpec pins that
-    * driver + broadcast memory is Σ(sparse partials), never the dense
-    * slices × d product the r13 combine materialized. */
-  @volatile private[graft] var lastQuantileBroadcastEntries: Long = -1L
-
-  def runningQuantile(df: DataFrame, keyCol: String, orderCol: Column,
-                      inNames: Seq[String], q: Double, interp: Int,
-                      outNames: Seq[String], minPeriods: Int = 1,
-                      shared: Option[Seq[Column]] = None): DataFrame = {
+    * `derived` (pre-aliased to `inNames`) must be DoubleType with
+    * invalid cells as NaN; `keyCol` a non-null unique tiebreak. */
+  def runningQuantile(base: DataFrame, derived: Seq[Column], keyCol: String,
+                      orderCol: Column, inNames: Seq[String], q: Double,
+                      interp: Int, outNames: Seq[String],
+                      minPeriods: Int = 1): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile must be in [0,1], got $q")
     require(inNames.length == outNames.length, "inNames/outNames must align")
-    require(shared.forall(_.length == inNames.length),
-      "derived projections and inNames must align")
-    val sch = shared.fold(df.schema)(d => {
-      val s = df.select(d: _*).schema
-      org.apache.spark.sql.types.StructType(
-        s.fields.zip(inNames).map { case (f, nm) => f.copy(name = nm) })
-    })
-    inNames.foreach { nm =>
-      require(sch(nm).dataType == org.apache.spark.sql.types.DoubleType,
-        s"runningQuantile requires DoubleType columns, got ${sch(nm).dataType} for $nm")
-    }
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val scan = sliceScan(base, derived, keyCol, orderCol, inNames,
+      Some("runningQuantile"))
+    val spark = base.sparkSession
+    val parts = scan.parts
+    val sliced = scan.sliced
     val budget = spark.conf.getOption("graft.percentile.approxAboveDistinct")
       .map(_.toInt).getOrElse(16384)
 
-    val okey = if (shared.isDefined) "__slc_ord" else "__rq_ord"
-    val preLaid = shared.isDefined
-    val sliced = shared match {
-      case Some(derived) =>
-        sliceLayout(df, keyCol, orderCol, parts, rev = false)
-          .select(col("*") +: derived: _*)
-      case None =>
-        withSliceId(df.withColumn(okey, orderCol), col(okey),
-          inNames, Nil, descending = false, nullsLast = false,
-          tieCols = Seq(col(keyCol)), parts)
-    }
-    val ordAsc = Seq(col(okey).asc_nulls_first, col(keyCol).asc)
-
     // ---- phase 0: bounded sorted domains (normalize -0.0 → 0.0 so the
-    // emit's binary search and the distinct's grouping agree). Scanned
-    // from `sliced` — identical value SET either way (okey/pid are pruned
-    // by the projection), and in shared mode the derived value columns
-    // exist only above the layout. r15 (guide §1.2 — fewer passes): ONE
-    // distinct job over exploded (column idx, value) pairs instead of one
-    // job PER COLUMN — the per-column loop paid width × the job floor
-    // (each distinct+limit is 2–3 AQE stage-jobs) for the same scan. The
-    // driver collect stays bounded: ≤ width·budget + 1 rows; exceeding
-    // that cap proves (pigeonhole) some column exceeds the budget, and
-    // the rare failure path re-runs the per-column scan to name it. ----
-    val width0 = inNames.length
+    // emit's binary search and the distinct's grouping agree), scanned
+    // from the layout — the derived value columns exist only above it.
+    // r15 (guide §1.2 — fewer passes): ONE distinct job over exploded
+    // (column idx, value) pairs instead of one job PER COLUMN — the
+    // per-column loop paid width × the job floor (each distinct+limit is
+    // 2–3 AQE stage-jobs) for the same scan. The driver collect stays
+    // bounded: ≤ width·budget + 1 rows; exceeding that cap proves
+    // (pigeonhole) some column exceeds the budget, and the rare failure
+    // path re-runs the per-column scan to name it. ----
+    val width = inNames.length
     val vexprs = inNames.map(nm => col(nm) + lit(0.0))
     val pairRows = sliced
       .select(posexplode(array(vexprs: _*)).as(Seq("j", "v")))
       .where(col("v").isNotNull && !isnan(col("v")))
-      .distinct().limit(width0 * budget + 1).collect()
+      .distinct().limit(width * budget + 1).collect()
     def domainOverflow(nm: String): Nothing = throw new IllegalArgumentException(
       s"'.expanding().quantile()' needs a bounded value domain: column " +
         s"'$nm' exceeds $budget distinct values " +
         s"(graft.percentile.approxAboveDistinct). An exact interpolated " +
         "running order statistic over an unbounded domain has no bounded " +
         "state — round or bucket the values first")
-    if (pairRows.length > width0.toLong * budget) {
+    if (pairRows.length > width.toLong * budget) {
       // some column is over budget — name the offender (failure path only)
       inNames.foreach { nm =>
         val n = sliced.select((col(nm) + lit(0.0)).as("v"))
@@ -2599,51 +2463,29 @@ object Prefix {
     }
     val pairsByJ = pairRows.groupBy(_.getInt(0))
     val domains: Array[Array[Double]] = inNames.indices.map { j =>
-      val a = pairsByJ.getOrElse(j, Array.empty[org.apache.spark.sql.Row])
-        .map(_.getDouble(1))
+      val a = pairsByJ.getOrElse(j, Array.empty[Row]).map(_.getDouble(1))
       if (a.length > budget) domainOverflow(inNames(j))
       java.util.Arrays.sort(a)
       a
     }.toArray
     val offs = domains.scanLeft(0)(_ + _.length)
-    val width = inNames.length
     val minp = math.max(minPeriods, 1)
     val bDomains = spark.sparkContext.broadcast(domains)
 
-    // ---- phase 1: sparse per-(partition, slice) count partials,
-    // PRE-AGGREGATED on (slice, domain idx) before the driver collect
-    // (r13): a randomly-ordered cluster input holds every slice in every
-    // input partition, so collecting raw per-input-partition partials is
-    // O(inputParts × slices × min(d, rowsPerPart)) at the driver —
-    // potentially GBs at 100 TB. One hash aggregate on (pid, idx) caps
-    // the collect at slices × d rows regardless of input partitioning
-    // (and its map-side partial combine shrinks the shuffle to the same
-    // per-partition bound). Counts carry as Long end-to-end: a single
-    // value occurring > 2^31 times must not wrap the Fenwick seed, the
-    // quantile rank, or the min_periods gate. A binary-search MISS against
-    // the phase-0 domain is an invariant violation (the domain scan is a
-    // separate earlier action; a non-deterministic source recomputed
-    // between the two actions would otherwise yield silently wrong
-    // quantiles) — fail loudly instead of undercounting.
+    // ---- phase 1: one sparse count partial per slice, flattened
+    // (domain idx, count) pairs. Counts carry as Long end-to-end: a
+    // single value occurring > 2^31 times must not wrap the Fenwick
+    // seed, the quantile rank, or the min_periods gate. A binary-search
+    // MISS against the phase-0 domain is an invariant violation (the
+    // domain scan is a separate earlier action; a non-deterministic
+    // source recomputed between the two actions would otherwise yield
+    // silently wrong quantiles) — fail loudly instead of undercounting.
     val totalD = offs.last
-    val pSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("pid",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("idx",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val pEnc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(pSchema)
-    val partialRows = sliced
-      .select(col("__pfx_pid") +: inNames.map(col): _*)
-      .mapPartitions { it =>
-        val doms = bDomains.value
-        val acc = scala.collection.mutable.HashMap
-          .empty[Int, scala.collection.mutable.HashMap[Int, Long]]
-        it.foreach { r =>
-          val m = acc.getOrElseUpdate(r.getInt(0),
-            scala.collection.mutable.HashMap.empty[Int, Long])
+    val byPid = scan.partials[Long](LongType) { () =>
+      new SlicePartial {
+        private val doms = bDomains.value
+        private val counts = scala.collection.mutable.HashMap.empty[Int, Long]
+        def step(r: Row): Unit = {
           var j = 0
           while (j < width) {
             if (!r.isNullAt(1 + j)) {
@@ -2657,101 +2499,80 @@ object Prefix {
                     "(non-deterministic source?). Refusing to emit silently " +
                     "wrong quantiles")
                 val flat = offs(j) + idx
-                m.update(flat, m.getOrElse(flat, 0L) + 1L)
+                counts.update(flat, counts.getOrElse(flat, 0L) + 1L)
               }
             }
             j += 1
           }
         }
-        acc.iterator.flatMap { case (pid, m) =>
-          m.iterator.map { case (idx, c) =>
-            org.apache.spark.sql.Row(pid, idx, c)
-          }
-        }
-      }(pEnc)
-      .groupBy(col("pid"), col("idx"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .collect()
-    // combine bound, observable by specs: ≤ slices × d rows reach the
-    // driver no matter how the input was partitioned. An explicit throw,
-    // NOT a Scala assert: -Xdisable-assertions builds must never silently
-    // disarm a scale invariant (r13 verdict; the domain-miss checks below
-    // set the pattern).
-    lastQuantilePartialRows = partialRows.length
-    if (partialRows.length > parts * totalD) throw new IllegalStateException(
+        def result: Seq[Any] =
+          counts.iterator.flatMap { case (i, c) => Iterator(i.toLong, c) }
+            .toSeq
+      }
+    }
+    // combine bound, observable by specs: ≤ slices × d entries reach the
+    // driver. An explicit throw, NOT a Scala assert: -Xdisable-assertions
+    // builds must never silently disarm a scale invariant (r13 verdict;
+    // the domain-miss checks set the pattern).
+    val entries = byPid.valuesIterator.map(_.length / 2).sum
+    lastQuantilePartialRows = entries
+    if (entries > parts * totalD) throw new IllegalStateException(
       s"runningQuantile partials combine failed its bound: " +
-        s"${partialRows.length} > $parts × $totalD")
+        s"$entries > $parts × $totalD")
 
     // ---- driver combine: per-slice SPARSE increments (r14) ----
     // The r13 combine prefix-summed the partials into one DENSE
     // Array[Long](totalD) snapshot per slice and broadcast the whole map:
     // O(slices × d) longs on the driver AND on every executor, with slice
-    // count growing linearly with rows — the docstring's "never
-    // data-scaled" claim was only half true. The collected partials are
-    // already sparse; ship exactly those, grouped per slice, and let each
-    // emit task rebuild its slice's dense seed executor-side (the slices
-    // in a partition arrive sorted, so one running histogram applies each
-    // increment list at most once per task). Memory: O(Σ sparse partials)
-    // everywhere.
+    // count growing linearly with rows. The collected partials are
+    // already sparse; ship exactly those, per slice, and let each emit
+    // task rebuild its slice's dense seed executor-side (the slices in a
+    // partition arrive sorted, so one running histogram applies each
+    // increment list at most once per task). Memory: O(Σ sparse
+    // partials) everywhere.
     val incIdx = Array.fill(parts)(Array.emptyIntArray)
     val incCnt = Array.fill(parts)(Array.emptyLongArray)
-    partialRows.groupBy(_.getInt(0)).foreach { case (pid, rows) =>
-      if (pid < 0 || pid >= parts) throw new IllegalStateException(
-        s"runningQuantile: phase-1 slice id $pid outside [0, $parts) — " +
-          "withSliceId broke its contract")
-      incIdx(pid) = rows.map(_.getInt(1))
-      incCnt(pid) = rows.map(_.getLong(2))
+    byPid.foreach { case (pid, ps) =>
+      val p = ps.toArray
+      incIdx(pid) = Array.tabulate(p.length / 2)(t => p(2 * t).toInt)
+      incCnt(pid) = Array.tabulate(p.length / 2)(t => p(2 * t + 1))
     }
     lastQuantileBroadcastEntries = incIdx.map(_.length.toLong).sum
     val bIncoming = spark.sparkContext.broadcast((incIdx, incCnt))
 
     // ---- phase 2: parallel emit behind per-slice Fenwick state ----
-    val inSchema = sliced.schema
-    val inIdx = inNames.map(inSchema.fieldIndex)
-    val pidIdx = inSchema.fieldIndex("__pfx_pid")
-    val outSchema = org.apache.spark.sql.types.StructType(
-      inSchema.fields ++ outNames.map(o =>
-        org.apache.spark.sql.types.StructField(o,
-          org.apache.spark.sql.types.DoubleType, nullable = true)))
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    val emitted = (if (preLaid) sliced
-      else sliced
-        .repartition(parts, col("__pfx_pid"))
-        .sortWithinPartitions((col("__pfx_pid").asc +: ordAsc): _*))
-      .mapPartitions { it =>
-        val doms = bDomains.value
-        val (iIdx, iCnt) = bIncoming.value
-        var curPid = Int.MinValue
+    val inIdx = scan.inIdx
+    scan.emit(doubleFields(outNames)) { () =>
+      new SliceKernel {
+        private val doms = bDomains.value
+        private val (iIdx, iCnt) = bIncoming.value
+        private var curPid = Int.MinValue
         // running dense histogram: counts of all slices < histAt applied.
-        // Slices arrive ascending (sortWithinPartitions pid-first), so
-        // each slice's sparse increments are added exactly once per task
-        // and the seed for pid is ready after O(Σ increments < pid) work.
-        var hist: Array[Long] = null
-        var histAt = 0
-        var fens: Array[Fenwick] = null
-        it.map { r =>
-          val pid = r.getInt(pidIdx)
-          if (pid != curPid) {
-            if (pid < curPid) throw new IllegalStateException(
-              s"runningQuantile: slice ids not ascending within the emit " +
-                s"partition ($curPid then $pid) — the pid-first sort broke")
-            if (hist == null) hist = new Array[Long](totalD)
-            while (histAt < pid) {
-              val ii = iIdx(histAt); val cc = iCnt(histAt)
-              var t = 0
-              while (t < ii.length) { hist(ii(t)) += cc(t); t += 1 }
-              histAt += 1
-            }
-            curPid = pid
-            fens = Array.tabulate(width) { j =>
-              new Fenwick(java.util.Arrays.copyOfRange(
-                hist, offs(j), offs(j + 1)))
-            }
+        // Slices arrive ascending (sorted pid-first), so each slice's
+        // sparse increments are added exactly once per task and the seed
+        // for pid is ready after O(Σ increments < pid) work.
+        private val hist = new Array[Long](totalD)
+        private var histAt = 0
+        private var fens: Array[Fenwick] = null
+
+        def enter(pid: Int): Unit = {
+          if (pid < curPid) throw new IllegalStateException(
+            s"runningQuantile: slice ids not ascending within the emit " +
+              s"partition ($curPid then $pid) — the pid-first sort broke")
+          while (histAt < pid) {
+            val ii = iIdx(histAt); val cc = iCnt(histAt)
+            var t = 0
+            while (t < ii.length) { hist(ii(t)) += cc(t); t += 1 }
+            histAt += 1
           }
-          val outVals = new Array[Any](r.length + width)
-          var i = 0
-          while (i < r.length) { outVals(i) = r.get(i); i += 1 }
+          curPid = pid
+          fens = Array.tabulate(width) { j =>
+            new Fenwick(
+              java.util.Arrays.copyOfRange(hist, offs(j), offs(j + 1)))
+          }
+        }
+
+        def cells(r: Row, out: Array[Any], at: Int): Unit = {
           var j = 0
           while (j < width) {
             val raw = inIdx(j)
@@ -2769,7 +2590,7 @@ object Prefix {
               }
             }
             val n = fen.total
-            outVals(r.length + j) = java.lang.Double.valueOf(
+            out(at + j) = java.lang.Double.valueOf(
               if (n < minp) Double.NaN
               else {
                 val dom = doms(j)
@@ -2794,10 +2615,8 @@ object Prefix {
               })
             j += 1
           }
-          new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            outVals, outSchema): org.apache.spark.sql.Row
         }
       }
-    emitted.drop("__pfx_pid", okey)
+    }
   }
 }

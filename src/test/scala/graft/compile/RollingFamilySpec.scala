@@ -949,8 +949,8 @@ class RollingFamilySpec extends SparkSpec {
       col("id").cast("double").as("o"),
       (col("id") % 7).cast("double").as("x"))
     def run(parts: Int): Map[Long, Double] =
-      Prefix.runningQuantile(df.repartition(parts), "k", col("o"),
-          Seq("x"), 0.5, 0, Seq("med"))
+      Prefix.runningQuantile(df.repartition(parts), Seq(col("x").as("xv")),
+          "k", col("o"), Seq("xv"), 0.5, 0, Seq("med"))
         .select(col("k"), col("med")).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val base = run(4)
@@ -992,8 +992,8 @@ class RollingFamilySpec extends SparkSpec {
     val df = spark.range(rows).select(
       col("id").as("k"), col("id").cast("double").as("o"),
       floor(col("id") / per).cast("double").as("x")).repartition(48)
-    val out = Prefix.runningQuantile(df, "k", col("o"), Seq("x"), 0.5, 0,
-        Seq("med")).select(col("k"), col("med")).collect()
+    val out = Prefix.runningQuantile(df, Seq(col("x").as("xv")), "k",
+        col("o"), Seq("xv"), 0.5, 0, Seq("med")).select(col("k"), col("med")).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val d = slices + 1 // distinct values of floor(id/per)
     assert(Prefix.lastQuantileBroadcastEntries >= 0)

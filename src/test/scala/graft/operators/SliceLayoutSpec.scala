@@ -10,11 +10,14 @@ import org.apache.spark.sql.types._
   * (base + order + slice id) layout per session, with the per-query
   * derived value projections applied ABOVE it. These tests pin
   *
-  *   1. bit-identity of every shared entry point against its legacy
-  *      materialized form (same rows, same doubles, NaN-for-NaN) on a
-  *      fuzzed NULL/NaN-bearing frame — the layout must not change the
-  *      merge order or any emitted value;
-  *   2. the plan contract: the shared emit consumes the cached layout
+  *   1. bit-identity: the shared positional lag against its one-shot
+  *      materialized form, and the ewm / running-quantile scans against
+  *      golden digests (MurmurHash3 over the rid-ordered double bits,
+  *      NULL marked) recorded when their legacy materialized forms still
+  *      existed and matched the shared path bit for bit — on a fuzzed
+  *      NULL/NaN-bearing frame, so the layout may not change the merge
+  *      order or any emitted value;
+  *   2. the plan contract: every shared emit consumes the cached layout
   *      with NO exchange between the in-memory scan and the
   *      mapPartitions emitter (the per-query exchange + sort is gone);
   *   3. reuse: two different shared queries over the same base register
@@ -22,7 +25,9 @@ import org.apache.spark.sql.types._
   *      by its cap under distinct bases, evicting the least recently
   *      used layout;
   *   4. freshness: a Spark overwrite of a parquet source is seen by the
-  *      next shared-layout scan over a re-read of that path.
+  *      next shared-layout scan over a re-read of that path;
+  *   5. the skeleton's one-partition-per-slice guard on the collected
+  *      partials.
   */
 class SliceLayoutSpec extends SparkSpec {
 
@@ -93,51 +98,72 @@ class SliceLayoutSpec extends SparkSpec {
     }
   }
 
+  /** Order-sensitive digest of the rid-ordered output doubles (bits,
+    * NaN canonical, NULL marked) — the golden form of [[assertSame]]. */
+  private def digest(df: DataFrame, outs: Seq[String]): Int =
+    scala.util.hashing.MurmurHash3.orderedHash(
+      df.orderBy(col("rid")).select(outs.map(col): _*).collect().toSeq
+        .flatMap(r => outs.indices.map(i =>
+          if (r.isNullAt(i)) "null"
+          else java.lang.Double.doubleToLongBits(r.getDouble(i)))))
+
+  /** The goldens assume the suite's 4 slices: the ewm Chan merge
+    * associates per slice boundary. */
+  private def fourSlices[T](body: => T): T = {
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
   test("ewmScan / ewmScanRecursive shared are bit-identical") {
     val df = frame(350)
     val names = Seq("va", "vb")
     val d = derived(df, names)
-    val m = df.select(col("*") +: d: _*)
-    for (stat <- Seq("mean", "var")) {
-      assertSame(
-        Prefix.ewmScan(m, "rid", col("rid"), names, 0.3,
-          names.map(_ + "_w"), stat, 2),
-        Prefix.ewmScan(df, "rid", col("rid"), names, 0.3,
-          names.map(_ + "_w"), stat, 2, shared = Some(d)),
-        names.map(_ + "_w"))
-      assertSame(
-        Prefix.ewmScanRecursive(m, "rid", col("rid"), names, 0.3,
-          names.map(_ + "_w"), stat, 2),
-        Prefix.ewmScanRecursive(df, "rid", col("rid"), names, 0.3,
-          names.map(_ + "_w"), stat, 2, shared = Some(d)),
-        names.map(_ + "_w"))
+    val outs = names.map(_ + "_w")
+    val golden = Map(
+      ("ewmScan", "mean") -> 214943405, ("ewmScan", "var") -> 2062883810,
+      ("ewmScanRecursive", "mean") -> 1189695060,
+      ("ewmScanRecursive", "var") -> -512093451)
+    fourSlices {
+      for (stat <- Seq("mean", "var")) {
+        assert(digest(Prefix.ewmScan(df, d, "rid", col("rid"), names, 0.3,
+          outs, stat, 2), outs) == golden(("ewmScan", stat)),
+          s"ewmScan $stat moved off its golden digest")
+        assert(digest(Prefix.ewmScanRecursive(df, d, "rid", col("rid"),
+          names, 0.3, outs, stat, 2), outs) ==
+          golden(("ewmScanRecursive", stat)),
+          s"ewmScanRecursive $stat moved off its golden digest")
+      }
     }
   }
 
   test("runningQuantile shared is bit-identical (domains, counts, emit)") {
     val df = frame(300)
     val names = Seq("va", "vb")
-    val d = derived(df, names)
-    val m = df.select(col("*") +: d: _*)
-    assertSame(
-      Prefix.runningQuantile(m, "rid", col("rid"), names, 0.25, 0,
-        names.map(_ + "_q"), 2),
-      Prefix.runningQuantile(df, "rid", col("rid"), names, 0.25, 0,
-        names.map(_ + "_q"), 2, shared = Some(d)),
-      names.map(_ + "_q"))
+    val outs = names.map(_ + "_q")
+    // exact order statistics: the digest holds at any slice count
+    assert(digest(Prefix.runningQuantile(df, derived(df, names), "rid",
+      col("rid"), names, 0.25, 0, outs, 2), outs) == -793738030,
+      "runningQuantile moved off its golden digest")
   }
 
   test("shared emit reads the cached layout with no exchange above it") {
     val df = frame(200)
     val names = Seq("va", "vb")
     val d = derived(df, names)
-    val shared = Prefix.positionalLagShared(df, d, "rid", col("rid"),
-      names, 2, names.map(_ + "_w"), fuse = "winsum", winMinPeriods = 1)
-    shared.count() // materialize the layout so the final plan is real
-    val plan = shared.queryExecution.executedPlan
+    val outs = names.map(_ + "_w")
+    val scans = Seq(
+      "positionalLagShared" -> Prefix.positionalLagShared(df, d, "rid",
+        col("rid"), names, 2, outs, fuse = "winsum", winMinPeriods = 1),
+      "ewmScan" -> Prefix.ewmScan(df, d, "rid", col("rid"), names, 0.3,
+        outs, "var", 2),
+      "ewmScanRecursive" -> Prefix.ewmScanRecursive(df, d, "rid",
+        col("rid"), names, 0.3, outs, "mean", 2),
+      "runningQuantile" -> Prefix.runningQuantile(df, d, "rid", col("rid"),
+        names, 0.5, 0, outs, 1))
+    import org.apache.spark.sql.execution.SparkPlan
     // find the MapPartitions emitter and walk its subtree: it must reach
     // an InMemoryTableScan without crossing a shuffle exchange
-    import org.apache.spark.sql.execution.SparkPlan
     def findEmit(p: SparkPlan): Option[SparkPlan] =
       if (p.getClass.getSimpleName.startsWith("MapPartitions")) Some(p)
       else p.children.iterator.map(findEmit).collectFirst {
@@ -149,16 +175,20 @@ class SliceLayoutSpec extends SparkSpec {
         collapse(q.plan)
       case other => other
     }
-    val emit = findEmit(collapse(plan))
-    assert(emit.isDefined, s"no MapPartitions emitter in:\n$plan")
     def scanBelow(p: SparkPlan): Boolean = {
       val c = collapse(p)
       if (c.getClass.getSimpleName.startsWith("ShuffleExchange")) false
       else if (c.getClass.getSimpleName.startsWith("InMemoryTableScan")) true
       else c.children.exists(scanBelow)
     }
-    assert(scanBelow(emit.get),
-      s"shared emit does not sit on the cached layout:\n${emit.get}")
+    for ((name, shared) <- scans) {
+      shared.count() // materialize the layout so the final plan is real
+      val plan = shared.queryExecution.executedPlan
+      val emit = findEmit(collapse(plan))
+      assert(emit.isDefined, s"$name: no MapPartitions emitter in:\n$plan")
+      assert(scanBelow(emit.get),
+        s"$name: shared emit does not sit on the cached layout:\n${emit.get}")
+    }
   }
 
   test("one layout per (base, order, key); registry bounded by its cap") {
@@ -169,8 +199,8 @@ class SliceLayoutSpec extends SparkSpec {
     Prefix.positionalLagShared(df, d1, "rid", col("rid"), names, 2,
       names.map(_ + "_w"), fuse = "winsum", winMinPeriods = 1).count()
     val afterOne = Prefix.sliceLayouts(spark).size
-    Prefix.ewmScan(df, "rid", col("rid"), names, 0.5,
-      names.map(_ + "_e"), "mean", 0, shared = Some(d2)).count()
+    Prefix.ewmScan(df, d2, "rid", col("rid"), names, 0.5,
+      names.map(_ + "_e"), "mean", 0).count()
     assert(Prefix.sliceLayouts(spark).size == afterOne,
       "a second shared query over the same base registered a new layout")
     // distinct bases may not grow the registry past its cap
@@ -227,5 +257,16 @@ class SliceLayoutSpec extends SparkSpec {
       assert(scan() == (40.0, 108.0),
         "the re-read scan served the rows from before the overwrite")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("a slice partial arriving from two partitions is refused") {
+    val one = Array(Row(0, Seq(1.0)), Row(2, Seq(2.0)))
+    assert(Prefix.slicePartials[Double](one, 4) ==
+      Map(0 -> Seq(1.0), 2 -> Seq(2.0)))
+    val dup = intercept[IllegalStateException](
+      Prefix.slicePartials[Double](one :+ Row(0, Seq(3.0)), 4))
+    assert(dup.getMessage.contains("two partitions"))
+    intercept[IllegalStateException](
+      Prefix.slicePartials[Double](Array(Row(4, Seq(1.0))), 4))
   }
 }
