@@ -100,23 +100,29 @@ final class FormulaEvaluator(
   }
 
   /** Convenience: evaluate and demand a DataFrame-shaped result. */
-  def evaluateToDf(formula: String): DataFrame = evaluateFormula(formula) match {
-    case MatrixResult(df, _, _, _) => df
-    case RowResult(df, _)          => df
-    case VecResult(v) =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row.fromSeq(v.values)),
-        org.apache.spark.sql.types.StructType(v.labels.map(l =>
-          org.apache.spark.sql.types.StructField(l,
-            org.apache.spark.sql.types.DoubleType))))
-    case ScalarResult(x) =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(x)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.DoubleType))))
+  def evaluateToDf(formula: String): DataFrame =
+    FormulaEvaluator.asDataFrame(evaluateFormula(formula),
+      org.apache.spark.sql.SparkSession.active)
+}
+
+object FormulaEvaluator {
+  /** A result as a DataFrame: matrices and row reductions as they are, a
+    * driver vector as one row over its labels, a scalar as one `value`
+    * row. */
+  private[api] def asDataFrame(result: EvalResult,
+                               spark: org.apache.spark.sql.SparkSession)
+      : DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    def oneRow(labels: Seq[String], values: Seq[Any]): DataFrame =
+      spark.createDataFrame(java.util.List.of(Row.fromSeq(values)),
+        StructType(labels.map(StructField(_, DoubleType))))
+    result match {
+      case MatrixResult(df, _, _, _) => df
+      case RowResult(df, _)          => df
+      case VecResult(v)              => oneRow(v.labels, v.values)
+      case ScalarResult(x)           => oneRow(Seq("value"), Seq(x))
+    }
   }
 }
 
@@ -176,27 +182,24 @@ final class CoefficientCalculator(
     * the results are tables, so persisting is the natural sink). */
   def writeResults(results: scala.collection.Map[String, EvalResult],
                    outDir: String): Unit =
-    results.foreach {
-      case (name, MatrixResult(df, _, _, _)) =>
-        df.write.mode("overwrite").parquet(s"$outDir/$name")
-      case (name, RowResult(df, _)) =>
-        df.write.mode("overwrite").parquet(s"$outDir/$name")
-      case (name, VecResult(v)) =>
-        val spark = coefficientMap.sparkSession
-        spark.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row.fromSeq(v.values)),
-          org.apache.spark.sql.types.StructType(v.labels.map(l =>
-            org.apache.spark.sql.types.StructField(l,
-              org.apache.spark.sql.types.DoubleType))))
-          .write.mode("overwrite").parquet(s"$outDir/$name")
-      case (name, ScalarResult(x)) =>
-        val spark = coefficientMap.sparkSession
-        spark.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row(x)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("value",
-              org.apache.spark.sql.types.DoubleType))))
-          .write.mode("overwrite").parquet(s"$outDir/$name")
+    results.foreach { case (name, result) =>
+      FormulaEvaluator.asDataFrame(result, coefficientMap.sparkSession)
+        .write.mode("overwrite").parquet(s"$outDir/$name")
+    }
+
+  /** F3/F4: whether a table row runs against `registry` — an empty
+    * formula or unknown variables skip it with the reference's notice. */
+  private def runnable(name: String, formula: String,
+                       registry: Map[String, NamedData]): Boolean =
+    if (formula.trim.isEmpty) {
+      System.err.println(s"[graft] skipping '$name': empty formula")
+      false
+    } else {
+      val missing = FormulaParser.parse(formula).freeVariables
+        .filterNot(registry.contains)
+      if (missing.nonEmpty) System.err.println(
+        s"[graft] skipping '$name': missing variable(s) ${missing.mkString(", ")}")
+      missing.isEmpty
     }
 
   /** X3: the batch loop. The formula table is tiny and driver-resident; each
@@ -205,30 +208,20 @@ final class CoefficientCalculator(
     val rows = coefficientMap
       .select(col(resultNameCol).cast("string"), col(formulaNameCol).cast("string"))
       .collect()
+      .map(r => (r.getString(0), Option(r.getString(1)).getOrElse("")))
     if (!chainResults && parallelism > 1) return computeConcurrent(rows)
     var out = scala.collection.immutable.ListMap.empty[String, EvalResult]
     var ev = evaluator
     var dict = dataDict
-    rows.foreach { r =>
-      val name = r.getString(0)
-      val formula = Option(r.getString(1)).getOrElse("")
-      if (formula.trim.isEmpty) {
-        System.err.println(s"[graft] skipping '$name': empty formula")
-      } else {
-        val ast = ev.parseFormula(formula)
-        val missing = ast.freeVariables.filterNot(ev.registry.contains)
-        if (missing.nonEmpty) {
-          System.err.println(
-            s"[graft] skipping '$name': missing variable(s) ${missing.mkString(", ")}")
-        } else {
-          val result = ev.evaluateFormula(formula)
-          out = out + (name -> result)
-          System.err.println(s"[graft] computed coefficient '$name' = $formula")
-          if (chainResults) asNamedData(result).foreach { nd =>
-            dict = dict + (name -> nd)
-            ev = new FormulaEvaluator(dict, adpEnabled, decimalPrecision,
-              fillInvalid, verbose, unboundedExponent)
-          }
+    rows.foreach { case (name, formula) =>
+      if (runnable(name, formula, ev.registry)) {
+        val result = ev.evaluateFormula(formula)
+        out = out + (name -> result)
+        System.err.println(s"[graft] computed coefficient '$name' = $formula")
+        if (chainResults) asNamedData(result).foreach { nd =>
+          dict = dict + (name -> nd)
+          ev = new FormulaEvaluator(dict, adpEnabled, decimalPrecision,
+            fillInvalid, verbose, unboundedExponent)
         }
       }
     }
@@ -238,22 +231,10 @@ final class CoefficientCalculator(
   /** Independent formulas on a fixed-size pool; results keep table order.
     * Failures propagate exactly like the sequential loop (first error by
     * table order wins). */
-  private def computeConcurrent(rows: Array[org.apache.spark.sql.Row])
+  private def computeConcurrent(rows: Array[(String, String)])
       : scala.collection.immutable.ListMap[String, EvalResult] = {
-    val todo = rows.flatMap { r =>
-      val name = r.getString(0)
-      val formula = Option(r.getString(1)).getOrElse("")
-      if (formula.trim.isEmpty) {
-        System.err.println(s"[graft] skipping '$name': empty formula"); None
-      } else {
-        val missing = FormulaParser.parse(formula).freeVariables
-          .filterNot(evaluator.registry.contains)
-        if (missing.nonEmpty) {
-          System.err.println(
-            s"[graft] skipping '$name': missing variable(s) ${missing.mkString(", ")}")
-          None
-        } else Some((name, formula))
-      }
+    val todo = rows.filter { case (name, formula) =>
+      runnable(name, formula, evaluator.registry)
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
     try {

@@ -668,6 +668,53 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
     }
   }
 
+  /** The rolling methods and the [[graft.operators.Prefix.winEmitter]]
+    * mode each runs (std is the square root of the winvar emit). */
+  private val rollingFuse = Map("sum" -> "winsum", "mean" -> "winmean",
+    "min" -> "winmin", "max" -> "winmax", "count" -> "wincount",
+    "median" -> "winmed", "std" -> "winvar", "var" -> "winvar",
+    "skew" -> "winskew", "kurt" -> "winkurt", "quantile" -> "winquant",
+    "rank" -> "winrank", "sem" -> "winsem")
+
+  /** Whether `.rolling(n).m(args)`'s argument list has m's shape:
+    * quantile(q[, interpolation=]), rank(keywords…), the rest none. */
+  private def rollingArgsFit(m: String, args: List[CValue]): Boolean =
+    m match {
+      case "quantile" =>
+        args.nonEmpty && !args.head.isInstanceOf[CKw] && args.length <= 2
+      case "rank" => args.forall(_.isInstanceOf[CKw])
+      case _      => args.isEmpty
+    }
+
+  /** The window emit's (q, option code) for `.rolling(n).m(args)`:
+    * quantile's q and interpolation, rank's packed options. */
+  private def rollingMethodArgs(m: String, args: List[CValue]): (Double, Int) =
+    m match {
+      case "rank"     => (Double.NaN, rollingRankCode(args))
+      case "quantile" => rollingQuantileArgs(args)
+      case _          => (Double.NaN, 0)
+    }
+
+  /** A Series rolling twin: the batch window `emit` once per position
+    * over a ring of the ≤ n−1 predecessors (one slice, empty incoming
+    * ring), then the centre shift by (n−1)/2 with the pandas tail NaN. */
+  private def rollingTwin(rows: IndexedSeq[Array[Any]], n: Int,
+      center: Boolean,
+      emit: (graft.operators.Prefix.Ring, Array[Any], Int) => java.lang.Double)
+      : IndexedSeq[Double] = {
+    val ring: graft.operators.Prefix.Ring =
+      scala.collection.mutable.ArrayDeque.empty
+    val trail = rows.map { cur =>
+      val v: Double = emit(ring, cur, 0)
+      ring.append(cur)
+      if (ring.length > n - 1) ring.removeHead()
+      v
+    }
+    val lead = if (center) (n - 1) / 2 else 0
+    trail.indices.map(i =>
+      if (i + lead < trail.length) trail(i + lead) else Double.NaN)
+  }
+
   /** min_periods from `.expanding(...)`'s args (r10): one optional value,
     * keyword or positional, m >= 1 (pandas default 1). */
   private def expandingMinPeriods(args: List[CValue]): Int = {
@@ -2828,13 +2875,8 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
       case ("expanding", CVecD(vs, ls), args) =>
         CExpandD(vs, ls, expandingMinPeriods(args))
 
-      case (m @ ("mean" | "sum" | "count" | "min" | "max" | "std" | "var" |
-            "median" | "skew" | "kurt" | "quantile" | "rank" | "sem"),
-            CRoll(cols, n, minp, center), rollArgs)
-          if (m == "quantile" && rollArgs.nonEmpty &&
-              !rollArgs.head.isInstanceOf[CKw] && rollArgs.length <= 2) ||
-             (m == "rank" && rollArgs.forall(_.isInstanceOf[CKw])) ||
-             (m != "quantile" && m != "rank" && rollArgs.isEmpty) =>
+      case (m, CRoll(cols, n, minp, center), rollArgs)
+          if rollingFuse.contains(m) && rollingArgsFit(m, rollArgs) =>
         // r11: quantile(q, interpolation=) — pandas' five order-statistic
         // interpolations at arbitrary q on the winmed sorted ring;
         // skew/kurt — standardized moments on the winvar two-pass
@@ -2842,10 +2884,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         // power-sum kernel loses digits); rank (session 4) — the current
         // cell's rank among the window's valid cells on the same ring
         // (method/ascending/pct packed into the emit's option int)
-        val (rq, rInterp) =
-          if (m == "rank") (Double.NaN, rollingRankCode(rollArgs))
-          else if (m != "quantile") (Double.NaN, 0)
-          else rollingQuantileArgs(rollArgs)
+        val (rq, rInterp) = rollingMethodArgs(m, rollArgs)
         ctx.seqCounter += 1
         val tag = ctx.seqCounter
         val rid = col(ctx.rowIdOut)
@@ -2889,13 +2928,10 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         def ccOf(c: Column, i: Int): Column =
           if (needsSq) c.cast("double") - col(s"__rw${tag}_mu_$i")
           else c.cast("double")
-        // window sizes past the streaming-lag ring bound — or edge-cell
-        // volumes past the driver budget — fall back to the prefix-sum
-        // formulation; the conf exists so specs can force the fallback
-        val conf = ctx.base.get.sparkSession.conf
-        val fuseMax = conf.getOption("graft.rolling.fuseMaxWindow")
-          .map(_.toInt).getOrElse(257)
-        val fusedOk = n <= fuseMax && graft.operators.Prefix.lagStreams(
+        // window sizes past the streaming-lag ring bound (n <= 257) — or
+        // edge-cell volumes past the driver budget — fall back to the
+        // prefix-sum formulation
+        val fusedOk = graft.operators.Prefix.lagStreams(
           ctx.base.get.sparkSession, n - 1, cols.size)
         if (n == 1) {
           // a 1-position window is the cell itself (minp is forced to 1);
@@ -2931,20 +2967,6 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
             when(invalidOf(c), litOf(Double.NaN))
               .otherwise(c.cast("double")).as(valIn(i))
           }
-          val fuseMode = m match {
-            case "min"          => "winmin"
-            case "max"          => "winmax"
-            case "count"        => "wincount"
-            case "median"       => "winmed"
-            case "std" | "var"  => "winvar"
-            case "mean"         => "winmean"
-            case "skew"         => "winskew"
-            case "kurt"         => "winkurt"
-            case "quantile"     => "winquant"
-            case "rank"         => "winrank"
-            case "sem"          => "winsem"
-            case _              => "winsum"
-          }
           // center=1 (r11): the lead is FUSED into the same slice pass
           // (the emit attaches each finished trailing aggregate to the
           // row (n−1)/2 back via a pending queue + bounded lookahead) —
@@ -2952,7 +2974,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           val lead = if (center) (n - 1) / 2 else 0
           ctx.base = Some(graft.operators.Prefix.positionalLagShared(
             ctx.base.get, derived, ctx.rowIdOut, rid, valIn, n - 1,
-            valIn.map(_ + "_w"), fuse = fuseMode, winMinPeriods = minp,
+            valIn.map(_ + "_w"), fuse = rollingFuse(m), winMinPeriods = minp,
             winQ = rq, centerLead = lead, winInterp = rInterp))
           val out = cols.zipWithIndex.map { case ((lbl, _), i) =>
             val s = col(valIn(i) + "_w")
@@ -2971,7 +2993,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           if (m == "min" || m == "max" || m == "median" ||
               m == "quantile" || m == "skew" || m == "kurt" || m == "rank")
             throw new FormulaTypeException(
-              s"'.rolling(n).$m()' supports window sizes up to $fuseMax " +
+              s"'.rolling(n).$m()' supports window sizes up to 257 " +
                 "(window order statistics and standardized moments are " +
                 s"not prefix-invertible), got $n")
           val valIn = cols.indices.map(i => s"__rl${tag}_v_$i")
@@ -3075,14 +3097,12 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         if (n == 1 || shared.isEmpty)
           CMatrix(union.map(l => (l, litOf(Double.NaN))), isBool = false)
         else {
-          val conf = ctx.base.get.sparkSession.conf
-          val fuseMax = conf.getOption("graft.rolling.fuseMaxWindow")
-            .map(_.toInt).getOrElse(257)
-          if (n > math.min(fuseMax, 257)) throw new FormulaTypeException(
-            s"'.rolling(n).$m(other)' supports window sizes up to " +
-              s"${math.min(fuseMax, 257)} (the pairwise mask is not " +
-              s"prefix-invertible), got $n")
           val w = shared.length
+          if (!graft.operators.Prefix.lagStreams(ctx.base.get.sparkSession,
+                n - 1, 2 * w)) throw new FormulaTypeException(
+            s"'.rolling(n).$m(other)' supports window sizes up to 257 " +
+              "within graft.lag.maxEdgeCells edge cells (the pairwise mask " +
+              s"is not prefix-invertible), got $n over $w column pair(s)")
           val xIn = shared.indices.map(i => s"__rp${tag}_x_$i")
           val yIn = shared.indices.map(i => s"__rp${tag}_y_$i")
           val derived =
@@ -3292,115 +3312,18 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
             }
           }, isBool = false)
         }
-      case (m @ ("mean" | "sum" | "count" | "min" | "max" | "std" | "var" |
-            "median" | "skew" | "kurt" | "quantile" | "rank" | "sem"),
-            CRollD(vs, ls, n, minp, center), rollArgs)
-          if (m == "quantile" && rollArgs.nonEmpty &&
-              !rollArgs.head.isInstanceOf[CKw] && rollArgs.length <= 2) ||
-             (m == "rank" && rollArgs.forall(_.isInstanceOf[CKw])) ||
-             (m != "quantile" && m != "rank" && rollArgs.isEmpty) =>
-        // sequential twin of the fused emit: the aggregate runs over the
-        // window's VALID cells, gated on valid count >= minp (positions
-        // for count — the pandas 2.2 rule); minp = n is hole-poisoning;
-        // center shifts the trailing result by (n−1)/2, NaN past the tail
-        val (rq, rInterp) =
-          if (m == "rank") (Double.NaN, rollingRankCode(rollArgs))
-          else if (m != "quantile") (Double.NaN, 0)
-          else rollingQuantileArgs(rollArgs)
-        val trail = vs.indices.map { i =>
-          val positions = math.min(i + 1, n)
-          if (positions < minp) Double.NaN
-          else {
-            val w = vs.slice(i + 1 - positions, i + 1).filter(!_.isNaN)
-            val cnt = w.length
-            m match {
-              case "count" => cnt.toDouble
-              case _ if cnt < minp => Double.NaN
-              case "rank" =>
-                if (vs(i).isNaN) Double.NaN
-                else {
-                  val asc = (rInterp & 2) != 0
-                  val x = if (asc) vs(i) else -vs(i)
-                  val kw = if (asc) w else w.map(-_)
-                  val less = kw.count(_ < x).toDouble
-                  val eq = kw.count(_ == x).toDouble
-                  val r = (rInterp >> 2) match {
-                    case 1 => less + 1.0
-                    case 2 => less + eq
-                    case _ => less + (eq + 1.0) / 2.0
-                  }
-                  if ((rInterp & 1) != 0) r / cnt else r
-                }
-              case "sum"  => w.sum
-              case "mean" => w.sum / cnt
-              case "min"  => w.min
-              case "max"  => w.max
-              case "median" =>
-                val sw = w.sorted
-                if (cnt % 2 == 1) sw(cnt / 2)
-                else (sw(cnt / 2 - 1) + sw(cnt / 2)) / 2.0
-              case "quantile" =>
-                val sw = w.sorted
-                val h = (cnt - 1) * rq
-                val lo = h.toInt
-                val hi = if (lo + 1 >= cnt) lo else lo + 1
-                val frac = h - lo
-                rInterp match {
-                  case 1 => sw(lo)                                // lower
-                  case 2 => if (frac == 0.0) sw(lo) else sw(hi)   // higher
-                  case 3 => sw(math.rint(h).toInt.min(cnt - 1))   // nearest
-                  case 4 =>                                    // midpoint
-                    if (frac == 0.0) sw(lo) else (sw(lo) + sw(hi)) / 2.0
-                  case _ =>                                      // linear
-                    if (frac == 0.0 || lo + 1 >= cnt) sw(lo)
-                    else sw(lo) + frac * (sw(hi) - sw(lo))
-                }
-              case "skew" | "kurt" =>
-                // pandas 2.x guards: cnt floor, exactly-constant → 0/−3,
-                // near-constant (biased var ≤ 1e-14) → NaN
-                val need = if (m == "skew") 3 else 4
-                if (cnt < need) Double.NaN
-                else if (w.forall(_ == w.head)) {
-                  if (m == "skew") 0.0 else -3.0
-                } else {
-                  val mu = w.sum / cnt
-                  val m2 = w.map(x => (x - mu) * (x - mu)).sum / cnt
-                  if (m2 <= 1e-14) Double.NaN
-                  else if (m == "skew") {
-                    // the same multiply chain as the fused emit, so the
-                    // two paths agree bit for bit
-                    val m3 = w.map { x =>
-                      val d = x - mu; d * d * d
-                    }.sum / cnt
-                    math.sqrt(cnt.toDouble * (cnt - 1)) / (cnt - 2) *
-                      (m3 / (m2 * math.sqrt(m2)))
-                  } else {
-                    val m4 = w.map { x =>
-                      val d = x - mu; val d2 = d * d; d2 * d2
-                    }.sum / cnt
-                    val g2 = m4 / (m2 * m2) - 3.0
-                    ((cnt + 1) * g2 + 6.0) * (cnt - 1.0) /
-                      ((cnt - 2.0) * (cnt - 3.0))
-                  }
-                }
-              case _ =>
-                if (cnt < 2) Double.NaN
-                else {
-                  val mu = w.sum / cnt
-                  val v2 = w.map(x => (x - mu) * (x - mu)).sum / (cnt - 1)
-                  m match {
-                    case "var" => v2
-                    // pandas Rolling.sem: std(ddof=1)/sqrt(cnt − ddof)
-                    case "sem" => math.sqrt(v2 / (cnt - 1))
-                    case _     => math.sqrt(v2)
-                  }
-                }
-            }
-          }
-        }
-        val lead = if (center) (n - 1) / 2 else 0
-        CVecD(vs.indices.map(i =>
-          if (i + lead < trail.length) trail(i + lead) else Double.NaN), ls)
+      // Series twin: the fused batch emit on one slice
+      case (m, CRollD(vs, ls, n, minp, center), rollArgs)
+          if rollingFuse.contains(m) && rollingArgsFit(m, rollArgs) =>
+        val (rq, rInterp) = rollingMethodArgs(m, rollArgs)
+        // a 1-position sum/mean is the cell itself, as the matrix path's
+        // n == 1 projection emits it (the emit's 0.0 + v drops a −0.0)
+        val out =
+          if (n == 1 && (m == "sum" || m == "mean")) vs
+          else rollingTwin(vs.map(v => Array[Any](v)), n, center,
+            graft.operators.Prefix.winEmitter(rollingFuse(m), n - 1, minp,
+              rq, rInterp))
+        CVecD(if (m == "std") out.map(math.sqrt) else out, ls)
       case (m @ ("mean" | "sum" | "count" | "min" | "max" | "std" | "var" |
             "sem"),
             CExpandD(vs, ls, minp), Nil) => {
@@ -3434,9 +3357,9 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           }
         }, ls)
       }
-      // sequential twin of the r12 expanding order statistic: a sorted
-      // insertion buffer over the valid prefix, the same five
-      // interpolations as the distributed emit
+      // Series twin of the r12 expanding order statistic: the batch
+      // emit on one slice — a [[Prefix.Fenwick]] over the sorted distinct
+      // valid domain (−0.0 normalized), starting from an empty histogram
       case (m @ ("median" | "quantile"), CExpandD(vs, ls, minp), qargs)
           if (m == "median" && qargs.isEmpty) ||
              (m == "quantile" && qargs.nonEmpty &&
@@ -3444,37 +3367,17 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         val (qv, qInterp) =
           if (m == "median") (0.5, 0)
           else rollingQuantileArgs(qargs, ".expanding().quantile(q)")
-        val buf = new scala.collection.mutable.ArrayBuffer[Double]
+        val dom = vs.map(_ + 0.0).filter(!_.isNaN).distinct.toArray
+        java.util.Arrays.sort(dom)
+        val fen = new graft.operators.Prefix.Fenwick(new Array[Long](dom.length))
         CVecD(vs.map { v =>
-          if (!v.isNaN) {
-            var lo0 = 0; var hi0 = buf.length
-            while (lo0 < hi0) {
-              val mid = (lo0 + hi0) >>> 1
-              if (buf(mid) < v) lo0 = mid + 1 else hi0 = mid
-            }
-            buf.insert(lo0, v)
-          }
-          val n = buf.length
-          if (n < minp.max(1)) Double.NaN
-          else {
-            val h = (n - 1) * qv
-            val lo = h.toInt
-            val hi = math.min(lo + 1, n - 1)
-            val frac = h - lo
-            qInterp match {
-              case 1 => buf(lo)
-              case 2 => if (frac == 0.0) buf(lo) else buf(hi)
-              case 3 => buf(math.min(math.rint(h).toInt, n - 1))
-              case 4 => if (frac == 0.0) buf(lo)
-                        else (buf(lo) + buf(hi)) / 2.0
-              case _ => if (frac == 0.0 || lo + 1 >= n) buf(lo)
-                        else buf(lo) + frac * (buf(hi) - buf(lo))
-            }
-          }
+          if (!v.isNaN) fen.add(java.util.Arrays.binarySearch(dom, v + 0.0))
+          if (fen.total < minp.max(1)) Double.NaN
+          else fen.quantile(dom, qv, qInterp)
         }, ls)
-      // sequential twins of the pairwise window cov/corr (r11 session
-      // 5): Series ∘ Series pairs POSITIONALLY (the A3 vector rule);
-      // exact two-pass over each window's pairwise-complete cells
+      // Series twins of the pairwise window cov/corr: Series ∘ Series
+      // pairs POSITIONALLY (the A3 vector rule) into the wincov/wincorr
+      // batch emit on one slice
       case (m @ ("cov" | "corr"),
             CRollD(vs, ls, n, minp, center), List(arg)) =>
         val os = arg match {
@@ -3484,62 +3387,16 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
               s"other, got $other")
         }
         requireLen(vs.length, os.length)
-        def pairCell(lo: Int, hi: Int): Double = {
-          val xs = new scala.collection.mutable.ArrayBuffer[Double]
-          val ys = new scala.collection.mutable.ArrayBuffer[Double]
-          var b = lo
-          while (b <= hi) {
-            if (!vs(b).isNaN && !os(b).isNaN) { xs += vs(b); ys += os(b) }
-            b += 1
-          }
-          val cp = xs.length
-          if (cp < minp || cp < 2) Double.NaN
-          else {
-            val mx = xs.sum / cp; val my = ys.sum / cp
-            var qxy = 0.0; var qx = 0.0; var qy = 0.0; var i = 0
-            while (i < cp) {
-              val dx = xs(i) - mx; val dy = ys(i) - my
-              qxy += dx * dy; qx += dx * dx; qy += dy * dy
-              i += 1
-            }
-            if (m == "corr") qxy / math.sqrt(qx * qy)
-            else qxy / (cp - 1)
-          }
-        }
-        val trail = vs.indices.map(i => pairCell(math.max(0, i + 1 - n), i))
-        val lead = if (center) (n - 1) / 2 else 0
-        CVecD(vs.indices.map(i =>
-          if (i + lead < trail.length) trail(i + lead) else Double.NaN), ls)
+        CVecD(rollingTwin(vs.indices.map(i => Array[Any](vs(i), os(i))), n,
+          center, graft.operators.Prefix.winEmitter("win" + m, n - 1, minp,
+            pairOff = 1)), ls)
+      // the matrix path's α = 0 ewm polarization (unit weights: the
+      // expanding Welford), through the Series ewm twin
       case (m @ ("cov" | "corr"), CExpandD(vs, ls, minp), List(arg)) =>
-        val os = arg match {
-          case CVecD(o, _) => o
-          case other => throw new FormulaTypeException(
-            s"'.expanding().$m(other)' on a Series needs a Series " +
-              s"other, got $other")
-        }
-        requireLen(vs.length, os.length)
-        CVecD(vs.indices.map { i =>
-          val xs = new scala.collection.mutable.ArrayBuffer[Double]
-          val ys = new scala.collection.mutable.ArrayBuffer[Double]
-          var b = 0
-          while (b <= i) {
-            if (!vs(b).isNaN && !os(b).isNaN) { xs += vs(b); ys += os(b) }
-            b += 1
-          }
-          val cp = xs.length
-          if (cp < math.max(minp, 2)) Double.NaN
-          else {
-            val mx = xs.sum / cp; val my = ys.sum / cp
-            var qxy = 0.0; var qx = 0.0; var qy = 0.0; var j = 0
-            while (j < cp) {
-              val dx = xs(j) - mx; val dy = ys(j) - my
-              qxy += dx * dy; qx += dx * dx; qy += dy * dy
-              j += 1
-            }
-            if (m == "corr") qxy / math.sqrt(qx * qy)
-            else qxy / (cp - 1)
-          }
-        }, ls)
+        if (!arg.isInstanceOf[CVecD]) throw new FormulaTypeException(
+          s"'.expanding().$m(other)' on a Series needs a Series other, " +
+            s"got $arg")
+        method(CEwmD(vs, ls, 0.0, minp, adjust = true), m, List(arg), ctx)
       // `.ewm(...).mean()/.var()/.std()` (r10): pandas adjust=True /
       // ignore_na=False / bias=False, EXACT — the r9 truncated-horizon
       // ring (com <= ~8.8, NaN past hk-long hole runs where pandas
@@ -3583,69 +3440,25 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           }, isBool = false)
         }
       case (m @ ("mean" | "var" | "std" | "sum"),
-            CEwmD(vs, ls, alpha, minp, adjust), Nil) => {
+            CEwmD(vs, ls, alpha, minp, adjust), Nil) =>
         if (m == "sum" && !adjust) throw new FormulaTypeException(
           "sum is not implemented with adjust=False")
-        // sequential twin of [[Prefix.ewmScan]], recurrence for
-        // recurrence (decayed weighted-Welford, the DEN = W1² − ΣW²
-        // direct tracking, the underflow rescale), so matrix and vector
-        // paths agree
-        val f = 1.0 - alpha
-        val f2 = f * f
-        var mu = Double.NaN; var w1 = 0.0; var covB = 0.0; var dn = 0.0
-        var lastV = Double.NaN
-        var nobs = 0L
-        // adjust=False (r11): the same recurrence under the generalized
-        // observation weight w = α·T_prev (pendW, refreshed after each
-        // absorb, never decayed; first obs enters at weight 1) — see
-        // [[graft.operators.Prefix.ewmScanRecursive]]
-        var pendW = 1.0
-        CVecD(vs.map { v =>
-          w1 *= f; dn *= f2
-          if (!v.isNaN) nobs += 1
-          val out0 =
-            if (!v.isNaN) {
-              val oldWt = w1
-              val w = if (adjust) 1.0 else pendW
-              // resurrect from a collapsed state: the ε → 0 limit of the
-              // var at this cell is (covB + (μ − v)²)/2 — see
-              // [[graft.operators.Prefix.ewmScan]]
-              val resurrect = f > 0.0 && oldWt == 0.0 && !mu.isNaN
-              val lim = if (resurrect)
-                (math.max(0.0, covB) + (mu - v) * (mu - v)) / 2.0
-              else Double.NaN
-              dn += 2.0 * w * w1
-              w1 += w
-              if (mu.isNaN) { mu = v; covB = 0.0 }
-              else {
-                val oldMean = mu
-                mu = (oldWt * oldMean + w * v) / w1
-                val dm = oldMean - mu; val dv = v - mu
-                covB = (oldWt * (covB + dm * dm) + w * dv * dv) / w1
-              }
-              pendW = alpha * w1
-              if (m == "mean") mu
-              else if (m == "sum") mu * w1 // the unnormalized decayed sum
-              else {
-                val fv =
-                  if (resurrect) lim
-                  else graft.operators.Prefix.ewmVarOf(w1, covB, dn)
-                if (!fv.isNaN) lastV = fv
-                fv
-              }
-            } else {
-              // collapse sub-1e-150 mass instead of rescaling it back to
-              // O(1) (r10 ADVICE) — μ/covB stay for carries + the limit
-              if (w1 > 0 && w1 < 1e-150) { w1 = 0.0; dn = 0.0 }
-              if (m == "mean") mu
-              else if (m == "sum") mu * w1 // decays WITH the mass
-              else lastV
-            }
-          // the pandas min_periods gate: NaN until nobs >= minp
-          val out = if (minp > 0 && nobs < minp) Double.NaN else out0
-          if (m == "std") math.sqrt(out) else out
-        }, ls)
-      }
+        // α = 1 mean: `.ffill()`, as the matrix path runs it
+        if (m == "mean" && alpha == 1.0 && minp <= 1)
+          method(CVecD(vs, ls), "ffill", Nil, ctx)
+        else {
+          // Series twin: the batch [[Prefix.EwmKernel]] on one slice
+          // with an empty history
+          val k = graft.operators.Prefix.EwmKernel.entered(
+            graft.operators.Prefix.EwmKernel.seed(1), alpha, adjust,
+            if (m == "std") "var" else m, minp)
+          val cell = new Array[Any](1)
+          CVecD(vs.map { v =>
+            k.cells(org.apache.spark.sql.Row(v), cell, 0)
+            val out = cell(0).asInstanceOf[Double]
+            if (m == "std") math.sqrt(out) else out
+          }, ls)
+        }
       // `.ewm(...).cov(other)` / `.corr(other)` (r11 session 5): pandas'
       // pairwise exponentially weighted covariance/correlation — both
       // inputs masked to each position's pairwise-complete cells,
@@ -3730,7 +3543,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
               s"got $other")
         }
         requireLen(vs.length, os.length)
-        // the same polarization, through the sequential var twin
+        // the same polarization, through the Series var twin
         val pv = vs.indices.map(i => !vs(i).isNaN && !os(i).isNaN)
         def masked(f: Int => Double): IndexedSeq[Double] =
           vs.indices.map(i => if (pv(i)) f(i) else Double.NaN)

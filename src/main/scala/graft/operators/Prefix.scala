@@ -292,7 +292,7 @@ object Prefix {
     * mode dispatch ran interpreted-slow). Held emission (the centered
     * lag): `out` is the held row due now, or null; `finish` completes a
     * run's still-held rows, oldest first. */
-  private abstract class SliceKernel {
+  private[graft] abstract class SliceKernel {
     def enter(pid: Int): Unit
     def cells(r: Row, out: Array[Any], at: Int): Unit
     def finish(held: scala.collection.mutable.ArrayDeque[Array[Any]],
@@ -921,7 +921,7 @@ object Prefix {
         inNames, n, outNames, fuse)
   }
 
-  private type Ring = scala.collection.mutable.ArrayDeque[Array[Any]]
+  private[graft] type Ring = scala.collection.mutable.ArrayDeque[Array[Any]]
   private val dNaN = java.lang.Double.valueOf(Double.NaN)
 
   /** The fused window-aggregate cell: the k ring-buffered predecessors
@@ -947,10 +947,10 @@ object Prefix {
     * hole-poisoning contract: any invalid cell drops the valid count
     * below the window size. Sums accumulate in STREAM order (oldest
     * first), the same association as a sequential pandas scan. */
-  private def winEmitter(fuse: String, k: Int, minp: Int,
-                         winQ: Double = Double.NaN,
-                         winInterp: Int = 0,
-                         pairOff: Int = 0)
+  private[graft] def winEmitter(fuse: String, k: Int, minp: Int,
+                                winQ: Double = Double.NaN,
+                                winInterp: Int = 0,
+                                pairOff: Int = 0)
       : (Ring, Array[Any], Int) => java.lang.Double = {
     @inline def cellAt(buf: Ring, cur: Array[Any], b: Int, m: Int,
                        j: Int): Double = {
@@ -2075,10 +2075,10 @@ object Prefix {
     * 1.0, where every weighted term (2·w·oldWt, w·v, w·dv²), the
     * relative collapse test W1 < pendW·1e-150 and the never-firing
     * rescale reduce bit-exactly to the unit-weight recurrence. */
-  private final class EwmKernel(incoming: Array[Array[Double]],
-                                inIdx: Array[Int], alpha: Double,
-                                adjust: Boolean, stat: String,
-                                minPeriods: Int) extends SliceKernel {
+  private[graft] final class EwmKernel(incoming: Array[Array[Double]],
+                                       inIdx: Array[Int], alpha: Double,
+                                       adjust: Boolean, stat: String,
+                                       minPeriods: Int) extends SliceKernel {
     private val width = inIdx.length
     private val f = 1.0 - alpha
     private val f2 = f * f
@@ -2102,6 +2102,20 @@ object Prefix {
         cnts(i) = in(i * 8 + 7).toLong
         i += 1
       }
+    }
+
+    /** The state after the rows seen so far, in the seed layout `enter`
+      * reads — a keyed streaming twin's carry between micro-batches. */
+    def exportState(): Array[Double] = {
+      val out = new Array[Double](width * 8)
+      var i = 0
+      while (i < width) {
+        System.arraycopy(st, i * 5, out, i * 8, 5)
+        out(i * 8 + 5) = carryM(i); out(i * 8 + 6) = carryV(i)
+        out(i * 8 + 7) = cnts(i).toDouble
+        i += 1
+      }
+      out
     }
 
     def cells(r: Row, out: Array[Any], at: Int): Unit = {
@@ -2198,6 +2212,28 @@ object Prefix {
         }
         j += 1
       }
+    }
+  }
+
+  /** [[EwmKernel]] on one slice: a driver-side Series is one slice with
+    * an empty history, a streaming key one slice per micro-batch. */
+  private[graft] object EwmKernel {
+    /** The empty-history state of `width` columns: μ unset, unit pendW. */
+    def seed(width: Int): Array[Double] =
+      Array.tabulate(width * 8)(i => i % 8 match {
+        case 0 | 5 | 6 => Double.NaN
+        case 4         => 1.0
+        case _         => 0.0
+      })
+
+    /** A kernel entered from `in` (a [[seed]] or an exported state); row
+      * field j holds column j. */
+    def entered(in: Array[Double], alpha: Double, adjust: Boolean,
+                stat: String, minPeriods: Int): EwmKernel = {
+      val k = new EwmKernel(Array(in), Array.range(0, in.length / 8), alpha,
+        adjust, stat, minPeriods)
+      k.enter(0)
+      k
     }
   }
 
@@ -2315,16 +2351,16 @@ object Prefix {
     * biased = covB, corrected by W1²/DEN where DEN = W1² − ΣW² is
     * tracked by recurrence (exactly 0 with one observation → NaN, the
     * pandas single-obs rule) → var = covB·W1²/DEN. */
-  private[graft] def ewmVarOf(w1: Double, covB: Double,
-                              den: Double): Double =
+  private def ewmVarOf(w1: Double, covB: Double, den: Double): Double =
     if (w1 <= 0.0 || den <= 0.0) Double.NaN
     else math.max(0.0, covB) * w1 * w1 / den
 
   /** Fenwick (binary-indexed) tree over value-domain indices: O(log d)
     * point increment and O(log d) k-th-order-statistic selection by
     * binary descent — the running-histogram engine of
-    * [[runningQuantile]]. Seeded in O(d) from a dense incoming count
-    * vector (the slice's prefix history). */
+    * [[runningQuantile]] and of its Series and streaming twins. Seeded in
+    * O(d) from a dense incoming count vector (the slice's prefix
+    * history). */
   private[graft] final class Fenwick(counts: Array[Long]) {
     private val n = counts.length
     private val tree = new Array[Long](n + 1)
@@ -2357,6 +2393,28 @@ object Prefix {
         step >>= 1
       }
       pos
+    }
+    /** The q-quantile of the counted values (total >= 1) over their
+      * sorted `domain`, at h = (total−1)·q under pandas' five
+      * interpolations (`interp` codes 0..4 as the winquant emit). */
+    def quantile(domain: Array[Double], q: Double, interp: Int): Double = {
+      val n = total0
+      val h = (n - 1) * q
+      val lo = h.toLong
+      val hi = math.min(lo + 1, n - 1)
+      val frac = h - lo
+      val vlo = domain(kth(lo + 1))
+      interp match {
+        case 1 => vlo                                             // lower
+        case 2 => if (frac == 0.0) vlo else domain(kth(hi + 1))   // higher
+        case 3 =>                                                 // nearest
+          domain(kth(math.min(math.rint(h).toLong, n - 1) + 1))
+        case 4 =>                                                 // midpoint
+          if (frac == 0.0) vlo else (vlo + domain(kth(hi + 1))) / 2.0
+        case _ =>                                                 // linear
+          if (frac == 0.0 || lo + 1 >= n) vlo
+          else vlo + frac * (domain(kth(hi + 1)) - vlo)
+      }
     }
   }
 
@@ -2589,30 +2647,9 @@ object Prefix {
                 fen.add(idx)
               }
             }
-            val n = fen.total
             out(at + j) = java.lang.Double.valueOf(
-              if (n < minp) Double.NaN
-              else {
-                val dom = doms(j)
-                val h = (n - 1) * q
-                val lo = h.toLong
-                val hi = math.min(lo + 1, n - 1)
-                val frac = h - lo
-                val vlo = dom(fen.kth(lo + 1))
-                interp match {
-                  case 1 => vlo                                   // lower
-                  case 2 =>                                       // higher
-                    if (frac == 0.0) vlo else dom(fen.kth(hi + 1))
-                  case 3 =>                                       // nearest
-                    dom(fen.kth(math.min(math.rint(h).toLong, n - 1) + 1))
-                  case 4 =>                                       // midpoint
-                    if (frac == 0.0) vlo
-                    else (vlo + dom(fen.kth(hi + 1))) / 2.0
-                  case _ =>                                       // linear
-                    if (frac == 0.0 || lo + 1 >= n) vlo
-                    else vlo + frac * (dom(fen.kth(hi + 1)) - vlo)
-                }
-              })
+              if (fen.total < minp) Double.NaN
+              else fen.quantile(doms(j), q, interp))
             j += 1
           }
         }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.Prefix
 
 /** Structured-Streaming forms of the pipeline operators (the reference is
   * strictly batch — SURVEY §2.8 — but a 100 TB training-data pipeline
@@ -18,7 +19,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - windowed event aggregation uses event-time windows + watermark so
   *    late data is merged until the watermark passes, then state drops.
   */
-object StreamingOps {
+object StreamingOps extends Serializable {
 
   /** Content fingerprint (same normalization as the batch operator). */
   def fingerprinted(docs: DataFrame, textCol: String = "text",
@@ -397,9 +398,26 @@ object StreamingOps {
       }: _*)).as("r")).select(col("r.*"))
   }
 
+  /** One key's micro-batch through a window ring of its last n−1 rows,
+    * carried as state: `cell` sees the row, its predecessors and its
+    * `values` — the ring the batch fused window streams per slice, keyed
+    * instead of sliced. Returns the outputs and the ring to carry. */
+  private def windowed[R, O](carried: Seq[Array[Any]], n: Int,
+                             rows: Iterator[R])(values: R => Array[Any])(
+      cell: (R, Prefix.Ring, Array[Any]) => O): (List[O], Seq[Array[Any]]) = {
+    val ring: Prefix.Ring = scala.collection.mutable.ArrayDeque.from(carried)
+    val out = rows.map { r =>
+      val cur = values(r)
+      val o = cell(r, ring, cur)
+      ring.append(cur)
+      if (ring.length > n - 1) ring.removeHead()
+      o
+    }.toList
+    (out, ring.toSeq)
+  }
+
   case class RwRow(key: Long, id: Long, value: Double)
-  case class RwState(ring: Seq[Double], pending: Seq[Long] = Nil,
-                     pos: Long = 0L)
+  case class RwState(ring: Seq[Double], pending: Seq[Long] = Nil)
   case class RwOut(key: Long, id: Long, sum: Option[Double],
                    mean: Option[Double], min: Option[Double],
                    max: Option[Double], count: Option[Double])
@@ -407,21 +425,20 @@ object StreamingOps {
   /** Streaming positional rolling-window aggregates — the
     * [[graft.compile.FormulaCompiler]] `.rolling(n)` twin (r9 session 3;
     * r11 adds min_periods and center): each key carries ONLY its last
-    * n−1 values, the pending centered ids and a position counter as
-    * state (O(n) per key, fixed-size) — exactly the ring buffer the
-    * batch fused window streams per slice, keyed instead of sliced.
-    * Pandas gates mirror the batch emitter: aggregates are None until
-    * `min_periods` positions exist (default n), run skipna over the
-    * window's valid cells, and read NaN when the valid count sits below
-    * min_periods (count gates on POSITIONS — pandas 2.2); center=true
-    * delays each emission by (n−1)/2 rows (the batch pending-queue
-    * fused lead, keyed): the output for row i appears in the
-    * micro-batch that delivers row i+lead — the unbounded-stream
-    * analogue of the batch tail NaN is simply that the last `lead`
-    * rows stay pending until more data arrives. Within a micro-batch
-    * rows fold in input order (per-batch deterministic; cross-batch
-    * ordering is the source's — the positional contract batch rolling
-    * derives from row-id order). */
+    * n−1 values and the pending centered ids as state (O(n) per key,
+    * fixed-size), and each row runs the batch window emitters
+    * ([[graft.operators.Prefix.winEmitter]]) on that ring. Aggregates are
+    * None until `min_periods` positions exist (default n); past that the
+    * emitters' pandas gates hold: skipna over the window's valid cells,
+    * NaN while the valid count sits below min_periods (count gates on
+    * POSITIONS — pandas 2.2). center=true delays each emission by
+    * (n−1)/2 rows (the batch pending-queue fused lead, keyed): the output
+    * for row i appears in the micro-batch that delivers row i+lead — the
+    * unbounded-stream analogue of the batch tail NaN is simply that the
+    * last `lead` rows stay pending until more data arrives. Within a
+    * micro-batch rows fold in input order (per-batch deterministic;
+    * cross-batch ordering is the source's — the positional contract
+    * batch rolling derives from row-id order). */
   def rollingStream(rows: Dataset[RwRow], n: Int,
                     minPeriods: Int = 0,
                     center: Boolean = false): Dataset[RwOut] = {
@@ -437,35 +454,26 @@ object StreamingOps {
     import spark.implicits._
     def fn(key: Long, in: Iterator[RwRow],
            state: GroupState[RwState]): Iterator[RwOut] = {
-      val st0 = state.getOption.getOrElse(RwState(Vector.empty))
-      var ring = st0.ring.toVector
+      val st0 = state.getOption.getOrElse(RwState(Nil))
+      val emits = Seq("winsum", "winmean", "winmin", "winmax", "wincount")
+        .map(Prefix.winEmitter(_, n - 1, effMinp))
       var pending = st0.pending.toVector
-      var pos = st0.pos
-      val out = scala.collection.mutable.ListBuffer[RwOut]()
-      in.foreach { r =>
-        pos += 1
-        val w = (ring :+ r.value).takeRight(n)
-        val positions = w.length
-        val valid = w.filter(v => !v.isNaN)
-        def agg(f: Vector[Double] => Double): Option[Double] =
-          if (positions < effMinp) None
-          else Some(if (valid.length < effMinp) Double.NaN else f(valid))
-        val cnt: Option[Double] =
-          if (positions < effMinp) None else Some(valid.length.toDouble)
-        def emit(id: Long): Unit =
-          out += RwOut(key, id, agg(_.sum), agg(v => v.sum / v.length),
-            agg(_.min), agg(_.max), cnt)
-        if (lead == 0) emit(r.id)
-        else {
-          pending = pending :+ r.id
-          if (pending.length > lead) {
-            emit(pending.head)
-            pending = pending.tail
-          }
-        }
-        ring = (ring :+ r.value).takeRight(n - 1)
+      val (aggs, ring) = windowed(st0.ring.map(v => Array[Any](v)), n, in)(
+        r => Array[Any](r.value)) { (r, ring, cur) =>
+        (r.id, emits.map(e =>
+          if (ring.length + 1 < effMinp) None
+          else Some(e(ring, cur, 0).doubleValue)))
       }
-      state.update(RwState(ring, pending, pos))
+      val out = aggs.flatMap { case (id0, a) =>
+        pending = pending :+ id0
+        if (pending.length <= lead) None
+        else {
+          val id = pending.head
+          pending = pending.tail
+          Some(RwOut(key, id, a(0), a(1), a(2), a(3), a(4)))
+        }
+      }
+      state.update(RwState(ring.map(_(0).asInstanceOf[Double]), pending))
       out.iterator
     }
     rows.groupByKey(_.key)
@@ -474,51 +482,56 @@ object StreamingOps {
   }
 
   case class EwRow(key: Long, id: Long, value: Double)
-  case class EwState(mu: Double, w1: Double, covB: Double, den: Double,
-                     lastVar: Double, nobs: Long = 0L)
+  /** A key's ewm carry: the mean and var kernels' exported states. */
+  case class EwState(mean: Seq[Double], variance: Seq[Double])
   case class EwOut(key: Long, id: Long, mean: Double, variance: Double)
+
+  /** The batch ewm emit kernel (adjust=True) on one key's micro-batch,
+    * entered from the key's carried state or an empty history. */
+  private def ewmKernel(carried: Option[Seq[Double]], width: Int,
+                        alpha: Double, stat: String,
+                        minPeriods: Int): Prefix.EwmKernel =
+    Prefix.EwmKernel.entered(
+      carried.fold(Prefix.EwmKernel.seed(width))(_.toArray), alpha,
+      adjust = true, stat, minPeriods)
 
   /** Streaming twin of the exact ewm scan (r10): per-key exponentially
     * weighted mean + bias-corrected variance as O(1) keyed state — the
-    * canonical streaming statistic. The state is EXACTLY
-    * [[graft.operators.Prefix.ewmScan]]'s decayed normalized-Welford
-    * tuple (μ, covB, W1, DEN = W1² − ΣW² by its own add-only recurrence,
-    * plus the carried variance), recurrence for recurrence — identical
-    * to the batch EMIT pass step for step. The distributed batch scan
-    * additionally blends per-slice partials through
-    * [[graft.operators.Prefix.ewmMerge]] on the driver, an algebraically
-    * equal but differently-associated expression, so batch cells
-    * downstream of a slice boundary may differ from the pure sequential
-    * recurrence by a few ULPs (StreamingOpsSpec pins the pandas goldens
-    * across micro-batch boundaries, and bounds the stream-vs-batch delta
-    * at ≤ 32 ULPs for the mean / ≤ 128 for the var on the margin-audited
-    * fixture — orders below every audited rounding margin). No ring, no window, no horizon: each event decays the
-    * masses and absorbs itself; invalid (NaN) values decay the weights
-    * and carry the last outputs, with the same 1e-150 underflow collapse.
-    * Events are processed in `id` order within each micro-batch. */
+    * canonical streaming statistic. Each micro-batch runs the batch emit
+    * kernels ([[graft.operators.Prefix.EwmKernel]], mean and var) over
+    * the key's rows as one slice whose incoming state is the carry the
+    * previous micro-batch exported. The distributed batch scan
+    * additionally blends per-slice partials on the driver, an
+    * algebraically equal but differently-associated expression, so batch
+    * cells downstream of a slice boundary may differ from the pure
+    * sequential recurrence by a few ULPs (StreamingOpsSpec pins the
+    * pandas goldens across micro-batch boundaries, and bounds the
+    * stream-vs-batch delta at ≤ 32 ULPs for the mean / ≤ 128 for the var
+    * on the margin-audited fixture — orders below every audited rounding
+    * margin). Invalid (NaN) values decay the weights and carry the last
+    * outputs, with the same 1e-150 underflow collapse; min_periods gates
+    * on the running valid count. Events are processed in `id` order
+    * within each micro-batch. */
   def ewmStream(rows: Dataset[EwRow], alpha: Double,
                 minPeriods: Int = 0): Dataset[EwOut] = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
     require(minPeriods >= 0, s"min_periods must be >= 0, got $minPeriods")
     val spark = rows.sparkSession
     import spark.implicits._
-    val f = 1.0 - alpha
-    val f2 = f * f
     def fn(key: Long, in: Iterator[EwRow],
            state: GroupState[EwState]): Iterator[EwOut] = {
-      var st = state.getOption.getOrElse(
-        EwState(Double.NaN, 0.0, 0.0, 0.0, Double.NaN))
-      val out = scala.collection.mutable.ListBuffer[EwOut]()
-      in.toSeq.sortBy(_.id).foreach { r =>
-        val (st1, fv) = ewmAdvance(st, r.value, f, f2)
-        st = st1
-        // the pandas min_periods gate (r11): NaN until the running
-        // valid observation count reaches minPeriods
-        val g = minPeriods > 0 && st.nobs < minPeriods
-        out += EwOut(key, r.id, if (g) Double.NaN else st.mu,
-          if (g) Double.NaN else fv)
+      val st = state.getOption
+      val mean = ewmKernel(st.map(_.mean), 1, alpha, "mean", minPeriods)
+      val vr = ewmKernel(st.map(_.variance), 1, alpha, "var", minPeriods)
+      val cell = new Array[Any](2)
+      val out = in.toSeq.sortBy(_.id).map { r =>
+        val row = Row(r.value)
+        mean.cells(row, cell, 0)
+        vr.cells(row, cell, 1)
+        EwOut(key, r.id, cell(0).asInstanceOf[Double],
+          cell(1).asInstanceOf[Double])
       }
-      state.update(st)
+      state.update(EwState(mean.exportState().toSeq, vr.exportState().toSeq))
       out.iterator
     }
     rows.groupByKey(_.key)
@@ -526,120 +539,59 @@ object StreamingOps {
         GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** One decayed weighted-Welford step — the ewmStream body factored
-    * (r11 session 5) so the pairwise cov/corr twin can drive four
-    * states with one kernel. Returns the updated state and the value to
-    * EMIT for this event (the current bias-corrected var at a valid
-    * cell — resurrect-aware — or the carried one at an invalid cell). */
-  private def ewmAdvance(st: EwState, v: Double, f: Double,
-                         f2: Double): (EwState, Double) = {
-    var mu = st.mu; var cb = st.covB; var lastV = st.lastVar
-    var w1 = st.w1 * f; var dn = st.den * f2
-    var nobs = st.nobs
-    if (!v.isNaN) {
-      val oldWt = w1
-      // resurrect from a collapsed state: the ε → 0 limit of the var
-      // at this cell — see [[graft.operators.Prefix.ewmScan]]
-      val resurrect = f > 0.0 && oldWt == 0.0 && !mu.isNaN
-      val lim = if (resurrect)
-        (math.max(0.0, cb) + (mu - v) * (mu - v)) / 2.0
-      else Double.NaN
-      dn += 2.0 * oldWt
-      w1 += 1.0
-      if (mu.isNaN) { mu = v; cb = 0.0 }
-      else {
-        val oldMean = mu
-        mu = (oldWt * oldMean + v) / w1
-        val dm = oldMean - mu; val dv = v - mu
-        cb = (oldWt * (cb + dm * dm) + dv * dv) / w1
-      }
-      val fv = if (resurrect) lim
-               else graft.operators.Prefix.ewmVarOf(w1, cb, dn)
-      if (!fv.isNaN) lastV = fv
-      nobs += 1
-      (EwState(mu, w1, cb, dn, lastV, nobs), fv)
-    } else {
-      // collapse sub-1e-150 mass instead of rescaling it to O(1)
-      // (r10 ADVICE); μ/covB stay for the carried outputs
-      if (w1 > 0 && w1 < 1e-150) { w1 = 0.0; dn = 0.0 }
-      (EwState(mu, w1, cb, dn, lastV, nobs), lastV)
-    }
-  }
-
   case class EqRow(key: Long, id: Long, value: Double)
-  case class EqState(values: Seq[Double], counts: Seq[Long], nobs: Long)
+  case class EqState(values: Seq[Double], counts: Seq[Long])
   case class EqOut(key: Long, id: Long, quantile: Double)
 
   /** Streaming twin of the r12 expanding order statistic
     * ([[graft.operators.Prefix.runningQuantile]]): per-key running VALUE
     * counts as keyed state — a sorted (value, count) ledger bounded by
     * the same distinct budget as the batch operator (clean raise above
-    * it; round/bucket first), O(log d) insert + O(log d) Fenwick rank
-    * selection per event (r13 — the batch operator's engine; the ledger
-    * Fenwick rebuilds O(d) only when a NEW distinct value shifts domain
-    * indices, and duplicates on a bounded domain are the common case).
-    * Emits pandas' five interpolations at h = (nobs−1)·q; NaN
-    * until the running valid count reaches max(min_periods, 1); invalid
-    * (NaN) events leave the ledger untouched and re-emit the current
-    * statistic (the pandas carry). Events fold in `id` order within
-    * each micro-batch; the ledger survives micro-batch boundaries
-    * (StreamingOpsSpec pins batch-equivalence across a split). */
+    * it; round/bucket first), O(log d) insert + O(log d) rank selection
+    * per event on the batch operator's [[graft.operators.Prefix.Fenwick]]
+    * and its quantile (the ledger Fenwick rebuilds O(d) only when a NEW
+    * distinct value shifts domain indices, and duplicates on a bounded
+    * domain are the common case). Emits pandas' five interpolations at
+    * h = (n−1)·q; NaN until the running valid count reaches
+    * max(min_periods, 1); invalid (NaN) events leave the ledger untouched
+    * and re-emit the current statistic (the pandas carry). Events fold in
+    * `id` order within each micro-batch; the ledger survives micro-batch
+    * boundaries (StreamingOpsSpec pins batch-equivalence across a
+    * split). */
   def expandingQuantileStream(rows: Dataset[EqRow], q: Double,
                               interp: Int = 0, minPeriods: Int = 1,
                               distinctBudget: Int = 16384): Dataset[EqOut] = {
     require(q >= 0.0 && q <= 1.0, s"quantile must be in [0,1], got $q")
+    val minp = math.max(minPeriods, 1)
     val spark = rows.sparkSession
     import spark.implicits._
     def fn(key: Long, in: Iterator[EqRow],
            state: GroupState[EqState]): Iterator[EqOut] = {
-      val st0 = state.getOption.getOrElse(EqState(Vector.empty, Vector.empty, 0L))
-      var vals = st0.values.toVector
-      var cnts = st0.counts.toVector
-      var nobs = st0.nobs
-      var fen = new graft.operators.Prefix.Fenwick(cnts.toArray)
-      val out = scala.collection.mutable.ListBuffer[EqOut]()
-      in.toSeq.sortBy(_.id).foreach { r =>
+      val st0 = state.getOption.getOrElse(EqState(Nil, Nil))
+      var vals = st0.values.toArray
+      var cnts = st0.counts.toArray
+      var fen = new Prefix.Fenwick(cnts)
+      val out = in.toSeq.sortBy(_.id).map { r =>
         val v = r.value + 0.0 // normalize -0.0, the batch contract
         if (!v.isNaN) {
-          var lo = 0; var hi = vals.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (vals(mid) < v) lo = mid + 1 else hi = mid
-          }
-          if (lo < vals.length && vals(lo) == v) {
-            cnts = cnts.updated(lo, cnts(lo) + 1)
-            fen.add(lo) // O(log d): the common bounded-domain case
+          val at = java.util.Arrays.binarySearch(vals, v)
+          if (at >= 0) {
+            cnts(at) += 1
+            fen.add(at) // O(log d): the common bounded-domain case
           } else {
-            vals = (vals.take(lo) :+ v) ++ vals.drop(lo)
-            cnts = (cnts.take(lo) :+ 1L) ++ cnts.drop(lo)
+            vals = vals.patch(-at - 1, Seq(v), 0)
+            cnts = cnts.patch(-at - 1, Seq(1L), 0)
             if (vals.length > distinctBudget) throw new IllegalArgumentException(
               s"expandingQuantileStream: key $key exceeds $distinctBudget " +
                 "distinct values (graft.percentile.approxAboveDistinct) — " +
                 "round or bucket the values first")
-            fen = new graft.operators.Prefix.Fenwick(cnts.toArray)
+            fen = new Prefix.Fenwick(cnts)
           }
-          nobs += 1
         }
-        def kth(k: Long): Double = vals(fen.kth(k))
-        out += EqOut(key, r.id,
-          if (nobs < math.max(minPeriods, 1)) Double.NaN
-          else {
-            val h = (nobs - 1) * q
-            val lo9 = h.toLong
-            val hi9 = math.min(lo9 + 1, nobs - 1)
-            val frac = h - lo9
-            val vlo = kth(lo9 + 1)
-            interp match {
-              case 1 => vlo
-              case 2 => if (frac == 0.0) vlo else kth(hi9 + 1)
-              case 3 => kth(math.min(math.rint(h).toLong, nobs - 1) + 1)
-              case 4 => if (frac == 0.0) vlo else (vlo + kth(hi9 + 1)) / 2.0
-              case _ => if (frac == 0.0 || lo9 + 1 >= nobs) vlo
-                        else vlo + frac * (kth(hi9 + 1) - vlo)
-            }
-          })
+        EqOut(key, r.id,
+          if (fen.total < minp) Double.NaN else fen.quantile(vals, q, interp))
       }
-      state.update(EqState(vals, cnts, nobs))
+      state.update(EqState(vals.toSeq, cnts.toSeq))
       out.iterator
     }
     rows.groupByKey(_.key)
@@ -648,42 +600,38 @@ object StreamingOps {
   }
 
   case class PairRow(key: Long, id: Long, x: Double, y: Double)
-  case class EwCovState(s: EwState, d: EwState, xs: EwState, ys: EwState)
+  /** A key's pairwise ewm carry: the width-4 kernel's exported state. */
+  case class EwCovState(kernel: Seq[Double])
   case class EwCovOut(key: Long, id: Long, cov: Double, corr: Double)
 
   /** Streaming twin of the pairwise ewm cov/corr (r11 session 5): the
     * batch POLARIZATION — cov = (varC(x̃+ỹ) − varC(x̃−ỹ))/4 over the
-    * pair-masked inputs, corr = cov/√(varC(x̃)·varC(ỹ)) — driven as four
-    * ewm var states per key through the same [[ewmAdvance]] kernel the
-    * single-series twin uses. Non-pair events advance all four decays
-    * with NaN (the pandas carry falls out), min_periods gates on the
-    * running PAIR count (= any one state's nobs). O(1) keyed state. */
+    * pair-masked inputs, corr = cov/√(varC(x̃)·varC(ỹ)) — as the batch
+    * var kernel over the four masked columns (x+y, x−y, x, y) of one
+    * key. Non-pair events advance all four decays with NaN (the pandas
+    * carry falls out), min_periods gates on the running PAIR count (the
+    * columns' shared valid count). O(1) keyed state. */
   def ewmCovStream(rows: Dataset[PairRow], alpha: Double,
                    minPeriods: Int = 0): Dataset[EwCovOut] = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
     require(minPeriods >= 0, s"min_periods must be >= 0, got $minPeriods")
     val spark = rows.sparkSession
     import spark.implicits._
-    val f = 1.0 - alpha
-    val f2 = f * f
-    val zero = EwState(Double.NaN, 0.0, 0.0, 0.0, Double.NaN)
+    val nan = Double.NaN
     def fn(key: Long, in: Iterator[PairRow],
            state: GroupState[EwCovState]): Iterator[EwCovOut] = {
-      var st = state.getOption.getOrElse(EwCovState(zero, zero, zero, zero))
-      val out = scala.collection.mutable.ListBuffer[EwCovOut]()
-      in.toSeq.sortBy(_.id).foreach { r =>
-        val pair = !r.x.isNaN && !r.y.isNaN
-        val (s1, vs) = ewmAdvance(st.s, if (pair) r.x + r.y else Double.NaN, f, f2)
-        val (d1, vd) = ewmAdvance(st.d, if (pair) r.x - r.y else Double.NaN, f, f2)
-        val (x1, vx) = ewmAdvance(st.xs, if (pair) r.x else Double.NaN, f, f2)
-        val (y1, vy) = ewmAdvance(st.ys, if (pair) r.y else Double.NaN, f, f2)
-        st = EwCovState(s1, d1, x1, y1)
-        val g = minPeriods > 0 && s1.nobs < minPeriods
-        val cov = if (g) Double.NaN else (vs - vd) / 4.0
-        val corr = if (g) Double.NaN else cov / math.sqrt(vx * vy)
-        out += EwCovOut(key, r.id, cov, corr)
+      val k = ewmKernel(state.getOption.map(_.kernel), 4, alpha, "var",
+        minPeriods)
+      val v = new Array[Any](4)
+      val out = in.toSeq.sortBy(_.id).map { r =>
+        k.cells(
+          if (r.x.isNaN || r.y.isNaN) Row(nan, nan, nan, nan)
+          else Row(r.x + r.y, r.x - r.y, r.x, r.y), v, 0)
+        val Seq(vs, vd, vx, vy) = v.toSeq.map(_.asInstanceOf[Double])
+        val cov = (vs - vd) / 4.0
+        EwCovOut(key, r.id, cov, cov / math.sqrt(vx * vy))
       }
-      state.update(st)
+      state.update(EwCovState(k.exportState().toSeq))
       out.iterator
     }
     rows.groupByKey(_.key)
@@ -697,11 +645,10 @@ object StreamingOps {
 
   /** Streaming twin of the pairwise rolling cov/corr and sem (r11
     * session 5): each key carries its last n−1 (x, y) pairs — the batch
-    * fused wincov/wincorr/winsem ring, keyed. The emitter mirrors the
-    * batch contract cell for cell: moments over the window's
-    * pairwise-complete cells, gate = valid-pair count >= min_periods
-    * (sem gates on x's valid count), None until the window holds
-    * min_periods positions. */
+    * fused ring, keyed — and each row runs the batch wincov/wincorr/
+    * winsem emitters on it: moments over the window's pairwise-complete
+    * cells, gate = valid-pair count >= min_periods (sem gates on x's
+    * valid count), None until the window holds min_periods positions. */
   def rollingPairStream(rows: Dataset[PairRow], n: Int,
                         minPeriods: Int = 0): Dataset[RpOut] = {
     require(n > 0, s"rollingPairStream needs n > 0, got $n")
@@ -712,39 +659,19 @@ object StreamingOps {
     import spark.implicits._
     def fn(key: Long, in: Iterator[PairRow],
            state: GroupState[RpState]): Iterator[RpOut] = {
-      var ring = state.getOption.map(_.ring).getOrElse(Vector.empty)
-      val out = scala.collection.mutable.ListBuffer[RpOut]()
-      in.foreach { r =>
-        val w = (ring :+ (r.x, r.y)).takeRight(n)
-        val positions = w.length
-        def gated(v: => Double): Option[Double] =
-          if (positions < effMinp) None else Some(v)
-        val pairs = w.filter { case (x, y) => !x.isNaN && !y.isNaN }
-        val cp = pairs.length
-        val (cov, corr) =
-          if (cp < effMinp || cp < 2) (Double.NaN, Double.NaN)
-          else {
-            val mx = pairs.map(_._1).sum / cp
-            val my = pairs.map(_._2).sum / cp
-            var qxy = 0.0; var qx = 0.0; var qy = 0.0
-            pairs.foreach { case (x, y) =>
-              val dx = x - mx; val dy = y - my
-              qxy += dx * dy; qx += dx * dx; qy += dy * dy
-            }
-            (qxy / (cp - 1), qxy / math.sqrt(qx * qy))
-          }
-        val xs = w.map(_._1).filter(!_.isNaN)
-        val sem =
-          if (xs.length < effMinp || xs.length < 2) Double.NaN
-          else {
-            val mu = xs.sum / xs.length
-            math.sqrt(xs.map(v => (v - mu) * (v - mu)).sum) /
-              (xs.length - 1)
-          }
-        out += RpOut(key, r.id, gated(cov), gated(corr), gated(sem))
-        ring = (ring :+ (r.x, r.y)).takeRight(n - 1)
+      val emits = Seq("wincov", "wincorr", "winsem")
+        .map(Prefix.winEmitter(_, n - 1, effMinp, pairOff = 1))
+      val carried = state.getOption.fold(Vector.empty[(Double, Double)])(
+        _.ring).map { case (x, y) => Array[Any](x, y) }
+      val (out, ring) = windowed(carried, n, in)(
+        r => Array[Any](r.x, r.y)) { (r, ring, cur) =>
+        val Seq(cov, corr, sem) = emits.map(e =>
+          if (ring.length + 1 < effMinp) None
+          else Some(e(ring, cur, 0).doubleValue))
+        RpOut(key, r.id, cov, corr, sem)
       }
-      state.update(RpState(ring))
+      state.update(RpState(ring.map(a =>
+        (a(0).asInstanceOf[Double], a(1).asInstanceOf[Double])).toVector))
       out.iterator
     }
     rows.groupByKey(_.key)

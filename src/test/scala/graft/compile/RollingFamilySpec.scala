@@ -8,10 +8,10 @@ import graft.model.{Matrix, Vec}
   * alongside the r9-session-2 mean/sum, all pinned against pandas 2.2
   * goldens (the exact lists in the comments were produced by pandas on the
   * same series). Covers the fused single-pass ring-buffer window, the
-  * prefix-sum fallback for windows past the ring bound (forced via
-  * `graft.rolling.fuseMaxWindow`), the n=1 degenerate window, the
-  * big-mean numerical-stability contract (centered moments), and the
-  * driver vector paths. */
+  * prefix-sum fallback for windows past the ring bound or the edge-cell
+  * budget (forced via `graft.lag.maxEdgeCells`), the n=1 degenerate
+  * window, the big-mean numerical-stability contract (centered moments),
+  * and the driver vector paths. */
 class RollingFamilySpec extends SparkSpec {
 
   /** Single-column matrix with the given cells (NaN = hole). */
@@ -77,13 +77,10 @@ class RollingFamilySpec extends SparkSpec {
     assertSeq(colOf("s.rolling(4).median()", s4),
       Seq(Double.NaN, Double.NaN, Double.NaN, 2.25))
     // big windows reject (order statistics are not prefix-invertible)
-    spark.conf.set("graft.rolling.fuseMaxWindow", "2")
-    try {
-      val ev = new FormulaEvaluator(reg("s" -> s4))
-      val e = intercept[FormulaTypeException](
-        ev.evaluateFormula("s.rolling(3).median()"))
-      assert(e.getMessage.contains("window sizes up to"))
-    } finally spark.conf.unset("graft.rolling.fuseMaxWindow")
+    val ev = new FormulaEvaluator(reg("s" -> s4))
+    val e = intercept[FormulaTypeException](
+      ev.evaluateFormula("s.rolling(300).median()"))
+    assert(e.getMessage.contains("window sizes up to 257"))
   }
 
   test("rolling(3).var/.std: ddof=1, hole-poisoned, full-window only") {
@@ -131,8 +128,9 @@ class RollingFamilySpec extends SparkSpec {
 
   test("prefix-sum fallback (window past the ring bound) matches the " +
       "fused path for sum/mean/count/var; min/max error cleanly") {
+    // an edge-cell budget of 1 takes every window off the streaming ring
     val conf = spark.conf
-    conf.set("graft.rolling.fuseMaxWindow", "2")
+    conf.set("graft.lag.maxEdgeCells", "1")
     try {
       assertSeq(colOf("s.rolling(3).count()", s7),
         Seq(Double.NaN, Double.NaN, 2, 3, 2, 1, 1))
@@ -155,7 +153,11 @@ class RollingFamilySpec extends SparkSpec {
       val e = intercept[FormulaTypeException](
         ev.evaluateFormula("s.rolling(3).min()"))
       assert(e.getMessage.contains("window sizes up to"))
-    } finally conf.unset("graft.rolling.fuseMaxWindow")
+      // the pairwise window has no fallback: the budget rejects it cleanly
+      val e2 = intercept[FormulaTypeException](
+        ev.evaluateFormula("s.rolling(3).cov(s)"))
+      assert(e2.getMessage.contains("window sizes up to 257"))
+    } finally conf.unset("graft.lag.maxEdgeCells")
   }
 
   test("expanding(): count from zero, skipna min/max, ddof-1 var/std") {
@@ -683,13 +685,10 @@ class RollingFamilySpec extends SparkSpec {
     // errors: q out of range; big windows reject (not prefix-invertible)
     assertThrows[FormulaTypeException](
       ev.evaluateFormula("v.rolling(3).quantile(1.5)"))
-    spark.conf.set("graft.rolling.fuseMaxWindow", "2")
-    try {
-      val evm = new FormulaEvaluator(reg("s" -> s))
-      val e = intercept[FormulaTypeException](
-        evm.evaluateFormula("s.rolling(3).skew()"))
-      assert(e.getMessage.contains("window sizes up to"))
-    } finally spark.conf.unset("graft.rolling.fuseMaxWindow")
+    val evm = new FormulaEvaluator(reg("s" -> s))
+    val e = intercept[FormulaTypeException](
+      evm.evaluateFormula("s.rolling(300).skew()"))
+    assert(e.getMessage.contains("window sizes up to 257"))
   }
 
   test("ewm min_periods (r11): NaN until the running valid-observation " +
