@@ -230,8 +230,8 @@ object SparkEntry {
     "e11_emean" -> ((s, d) => formulaQuery("qty.expanding().mean()")(s, d)),
     // r9 session 3: the rest of the rolling/expanding family — count is
     // NaN only while the window is unformed; min/max/var/std are
-    // hole-poisoned full-window (pandas default min_periods); var/std on
-    // CENTERED moment sums (frame-global mean broadcast)
+    // hole-poisoned full-window (pandas default min_periods); the
+    // expanding std is the α = 0 Welford scan
     "e11_rcount" -> ((s, d) => formulaQuery("qty.rolling(3).count()")(s, d)),
     "e11_rmin" -> ((s, d) => formulaQuery("qty.rolling(3).min()")(s, d)),
     "e11_rmax" -> ((s, d) => formulaQuery("qty.rolling(4).max()")(s, d)),
@@ -455,8 +455,8 @@ object SparkEntry {
     // r11 session 4: axis=1 (row-wise) reductions — pure per-row
     // projections, zero shuffle; integer cells keep sum/mean/median
     // exact, std rounds 6 dp (identical IEEE chains, margin only)
-    // interpolate: linear gap fill by POSITION (three slice passes —
-    // dense position prefix + forward/backward struct carries)
+    // interpolate: linear gap fill by POSITION (two running scans — the
+    // last valid value and its distance, forward and reversed)
     "e11_interp" -> ((s, d) =>
       formulaQuery("qty.interpolate()", roundTo = Some(6))(s, d)),
     // describe(percentiles=[...]) — all percentiles still one aggregate

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ast._
 import graft.functions.BigDec
 import graft.model._
+import graft.operators.Prefix.{RunKernel, RunKind}
 
 /** Thrown when a formula references a name absent from the registry; the
   * analogue of the reference's decorated KeyError (coeff_maker.py:778-783). */
@@ -714,6 +715,14 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
     trail.indices.map(i =>
       if (i + lead < trail.length) trail(i + lead) else Double.NaN)
   }
+
+  /** An invalid std-mode cell: NULL or NaN. */
+  private def invalidOf(c: Column): Column = c.isNull || isnan(c)
+
+  /** The running-scan fold of each cumulative method. */
+  private val cumKinds = Map("cumsum" -> RunKind.Sum,
+    "cummax" -> RunKind.Max, "cummin" -> RunKind.Min,
+    "cumprod" -> RunKind.Prod)
 
   /** min_periods from `.expanding(...)`'s args (r10): one optional value,
     * keyword or positional, m >= 1 (pandas default 1). */
@@ -1468,20 +1477,8 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
             }
         })
 
-      // `.cumsum()` (E11 long tail): pandas column-wise running sum down the
-      // index order — the row id is the engine's only ordering contract.
-      // skipna semantics: a NaN/invalid cell stays NaN/NULL in the output
-      // but does NOT poison later cells. Runs the two-phase DISTRIBUTED
-      // prefix ([[graft.operators.Prefix.runningAgg]] — range partition by
-      // row id, per-partition partials, broadcast base offsets), never a
-      // single-partition `ORDER BY` window: the sequential semantics come
-      // from the global row-id order, not from a sequential execution, so
-      // the op stays fully parallel at cluster scale. Matrix cells are
-      // integer-valued or decimal in every oracle query, so the two-phase
-      // association is engine-exact there; arbitrary doubles can differ
-      // from a strict sequential scan in the last ulps (the standard
-      // distributed-prefix trade, disclosed on Prefix.runningAgg).
-      // axis=1 (r11 session 4): the row-wise cumulative — a pure
+      // `.cumsum()/.cummax()/.cummin()/.cumprod()` axis=1 (r11 session 4):
+      // the row-wise cumulative — a pure
       // projection like the axis=1 reductions (column k's cell folds
       // cells 0..k of ITS OWN ROW). skipna: an invalid cell stays
       // NaN but does not poison the cells right of it (pandas).
@@ -1510,48 +1507,57 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           (lbl, cell)
         }
         CMatrix(out, isBool = false)
-      case (cm @ ("cumsum" | "cummax" | "cummin"), CMatrix(cols, false), args)
-          if axisArg(args).contains(0) =>
+      // axis=0 (E11 long tail): pandas column-wise running aggregates down
+      // the index order — the row id is the engine's only ordering
+      // contract. skipna: a NaN/invalid cell stays NaN/NULL in the output
+      // but does NOT poison later cells; skipna=False poisons the tail from
+      // the first invalid cell (a running count of invalid flags). One
+      // [[graft.operators.Prefix.runningScan]] over the session-shared
+      // slice layout: each slice folds its cells in row order from the
+      // driver-combined state of the slices before it — never a
+      // single-partition `ORDER BY` window. Integer-valued and decimal
+      // cells are exact; other doubles can differ from a strictly
+      // sequential scan in the last ulps across slice boundaries. cumprod
+      // is a plain running product (std mode only).
+      case (cm @ ("cumsum" | "cummax" | "cummin" | "cumprod"),
+            CMatrix(cols, false), args) if axisArg(args).contains(0) =>
+        if (cm == "cumprod" && !std) throw new AdpUnsupportedException(
+          "'.cumprod()' is not supported in ADP mode")
         if (ubp) throw new AdpUnsupportedException(
           s"'.$cm()' is not supported in unbounded ADP mode")
-        val kind = cm match {
-          case "cumsum" => "sum"; case "cummax" => "max"; case "cummin" => "min"
-        }
         if (!skipna && !std) throw new AdpUnsupportedException(
           s"'.$cm(skipna=0)' is not supported in ADP mode " +
             "(decimal cells cannot hold the NaN it poisons to)")
+        val kind = cumKinds(cm)
         ctx.seqCounter += 1
         val tag = ctx.seqCounter
         val inNames = cols.indices.map(i => s"__cum${tag}_in_$i")
-        // skipna=False (r11 session 5): one extra running sum of invalid
-        // flags per column — positive prefix count = pandas' poisoned tail
         val invNames =
           if (skipna) Seq.empty
           else cols.indices.map(i => s"__cum${tag}_iv_$i")
-        // encode the skip marker as NULL (std: NaN→NULL; decimal: already
-        // NULL). ONE select, never a p-deep withColumn fold — each
-        // withColumn re-analyzes the whole plan, quadratic in width
-        // (measured: the bulk of the 12.7 s wide-cumprod compile)
-        val marked = ctx.base.get.select(col("*") +:
-          (cols.zip(inNames).map { case ((_, c), n) =>
-            (if (std) when(isnan(c), lit(null)).otherwise(c) else c).as(n)
-          } ++ cols.zip(invNames).map { case ((_, c), n) =>
-            (c.isNull || isnan(c)).cast("double").as(n)
-          }): _*)
-        ctx.base = Some(graft.operators.Prefix.runningAgg(
-          marked, col(ctx.rowIdOut),
-          inNames ++ invNames,
-          Seq.fill(cols.size)(kind) ++ invNames.map(_ => "sum"),
+        // the skip marker is NULL (std: NaN→NULL; decimal: already NULL)
+        val derived = cols.zip(inNames).map { case ((_, c), n) =>
+          (if (std) when(isnan(c), lit(null)).otherwise(c) else c).as(n)
+        } ++ cols.zip(invNames).map { case ((_, c), n) =>
+          invalidOf(c).cast("double").as(n)
+        }
+        ctx.base = Some(graft.operators.Prefix.runningScan(ctx.base.get,
+          derived, ctx.rowIdOut, col(ctx.rowIdOut), inNames ++ invNames,
+          Seq.fill(cols.size)(kind) ++ invNames.map(_ => RunKind.Sum),
           (inNames ++ invNames).map(_ + "_run")))
         val out = cols.zipWithIndex.map { case ((lbl, c), i) =>
-          val running = col(inNames(i) + "_run")
+          val run = col(inNames(i) + "_run")
+          // a zero product reads +0.0 whatever its sign: numpy would keep
+          // the −0.0 a negative factor gives it, but the catalog oracle's
+          // exact compare holds one zero
+          val running = if (kind == RunKind.Prod) run + lit(0.0) else run
           val cell =
             if (!skipna)
               when(col(invNames(i) + "_run") > 0, litOf(Double.NaN))
                 .otherwise(running)
             else if (std) {
               // cumsum of a leading-NaN prefix is 0 in pandas only for sum
-              // (empty sum = 0); cummax/cummin stay NaN until a real value
+              // (empty sum = 0); the others stay NaN until a real value
               val empty = if (cm == "cumsum") lit(0.0) else litOf(Double.NaN)
               when(isnan(c), c).otherwise(coalesce(running, empty))
             } else
@@ -1666,48 +1672,30 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
       // `.ffill()` / `.bfill()` (r9): pandas positional fill — each hole
       // takes the nearest valid value before (ffill) / after (bfill) it in
       // the row-id order; a leading (trailing) run of holes stays invalid.
-      // Distributed as a running max (min) over `struct(row id, value)`
-      // through [[graft.operators.Prefix.runningAgg]] — valid cells carry
-      // their (rid, value) pair, holes carry NULL, and the struct's
-      // lexicographic order makes the running extreme exactly "the pair of
-      // the nearest valid row seen so far": bfill runs the same prefix in
-      // DESCENDING row order with `min`, so "seen so far" is the rows
-      // after the current one and the minimum rid among them is the
-      // nearest. One exchange, slice-count-bounded state — the cumsum
-      // scale shape, nothing resembling an unbounded window. All modes
-      // (the fill MOVES cells, no arithmetic): std holes are NULL/NaN,
-      // decimal/unbounded holes are NULL.
+      // The running scan's `Last` carry over the shared slice layout —
+      // bfill runs it down the reversed layout. All modes (the fill MOVES
+      // cells, no arithmetic): std holes are NULL/NaN, decimal/unbounded
+      // holes are NULL.
       case (m @ ("ffill" | "bfill"), CMatrix(cols, false), Nil) =>
         ctx.seqCounter += 1
         val tag = ctx.seqCounter
-        val rid = col(ctx.rowIdOut)
         val inNames = cols.indices.map(i => s"__ff${tag}_s_$i")
-        val outNames = cols.indices.map(i => s"__ff${tag}_r_$i")
-        val marked = ctx.base.get.select(col("*") +:
-          cols.zipWithIndex.map { case ((_, c), i) =>
-            val valid = if (std) c.isNotNull && !isnan(c) else c.isNotNull
-            when(valid, struct(rid.as("o"), c.as("v")))
-              .as(s"__ff${tag}_s_$i")
-          }: _*)
-        val back = m == "bfill"
-        ctx.base = Some(graft.operators.Prefix.runningAgg(
-          marked, rid,
-          inNames, Seq.fill(cols.size)(if (back) "min" else "max"),
-          outNames, descending = back))
-        val out = cols.zipWithIndex.map { case ((lbl, _), i) =>
-          val f = col(s"__ff${tag}_r_$i").getField("v")
+        val derived = cols.zip(inNames).map { case ((_, c), n) =>
+          val valid = if (std) c.isNotNull && !isnan(c) else c.isNotNull
+          when(valid, c).as(n)
+        }
+        ctx.base = Some(graft.operators.Prefix.runningScan(ctx.base.get,
+          derived, ctx.rowIdOut, col(ctx.rowIdOut), inNames,
+          inNames.map(_ => RunKind.Last), inNames.map(_ + "_r"),
+          rev = m == "bfill"))
+        val out = cols.zip(inNames).map { case ((lbl, _), n) =>
+          val f = col(n + "_r")
           (lbl, if (std) coalesce(f, litOf(Double.NaN)) else f)
         }
         CMatrix(out, isBool = false)
       case (m @ ("ffill" | "bfill"), CVecD(vs, ls), Nil) =>
-        val out = new Array[Double](vs.length)
-        var acc = Double.NaN
-        val order = if (m == "ffill") vs.indices else vs.indices.reverse
-        order.foreach { i =>
-          if (!vs(i).isNaN) acc = vs(i)
-          out(i) = if (vs(i).isNaN) acc else vs(i)
-        }
-        CVecD(scala.collection.immutable.ArraySeq.unsafeWrapArray(out), ls)
+        CVecD(RunKernel.series(Seq(vs), Seq(RunKind.Last), m == "bfill")
+          .map(_(0)), ls)
 
       // `.interpolate()` (r11 session 4): pandas linear gap fill down the
       // row order — each hole blends its nearest valid neighbors by
@@ -1715,156 +1703,57 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
       // and ignores index values; row ids are the ORDER contract only).
       // Pandas' default limit_direction='forward' edges: a leading hole
       // run stays NaN, a trailing run carries the last valid value.
-      // Distributed as TWO slice passes with slice-count-bounded state
-      // (the ffill shape): (1) the dense position as a running count of
-      // 1s ([[graft.operators.Prefix.runningAgg]]), (2) the forward AND
-      // backward carries of struct(position, value) at valid cells in
-      // one slicing ([[graft.operators.Prefix.runningAggBidi]] — the
-      // desc direction is a second window spec over the same slice
-      // partition, a sort rather than a shuffle) — then one closing
-      // projection does the blend. Never a data-scaled window or join.
+      // Two `Last` running scans: forward over the shared slice layout
+      // (the previous valid value pv and its distance gPrev), then
+      // reversed over that one-shot output under its own exchange (the
+      // next valid value nv and gNext); one closing projection blends
+      // pv + (nv − pv)·gPrev/(gPrev + gNext). The gaps are integers, so
+      // the blend is the positional (pos − po)/(no − po) bit for bit.
       case ("interpolate", CMatrix(cols, false), Nil) =>
         if (!std) throw new AdpUnsupportedException(
           "'.interpolate()' is not supported in ADP mode")
         ctx.seqCounter += 1
         val tag = ctx.seqCounter
-        val rid = col(ctx.rowIdOut)
-        val one = s"__ip${tag}_one"; val posN = s"__ip${tag}_pos"
-        val withPos = graft.operators.Prefix.runningAgg(
-          ctx.base.get.select(col("*") +: Seq(lit(1.0).as(one)): _*),
-          rid, Seq(one), Seq("sum"), Seq(posN))
         val sNames = cols.indices.map(i => s"__ip${tag}_s_$i")
-        val fNames = cols.indices.map(i => s"__ip${tag}_f_$i")
-        val bNames = cols.indices.map(i => s"__ip${tag}_b_$i")
-        val marked = withPos.select(col("*") +:
-          cols.zipWithIndex.map { case ((_, c), i) =>
-            when(c.isNotNull && !isnan(c),
-              struct(col(posN).as("o"), c.as("v"))).as(sNames(i))
-          }: _*)
-        // both carries in ONE slicing/exchange (runningAggBidi): the
-        // desc direction is just a second window spec over the same
-        // __pfx_pid partition — a sort, not a shuffle
-        ctx.base = Some(graft.operators.Prefix.runningAggBidi(
-          marked, rid, sNames ++ sNames,
-          Seq.fill(cols.size)("max") ++ Seq.fill(cols.size)("min"),
-          fNames ++ bNames,
-          Seq.fill(cols.size)(false) ++ Seq.fill(cols.size)(true)))
-        val out = cols.zipWithIndex.map { case ((lbl, c), i) =>
-          val f = col(fNames(i)); val b = col(bNames(i))
-          val pv = f.getField("v"); val po = f.getField("o")
-          val nv = b.getField("v"); val no = b.getField("o")
+        val derived = cols.zip(sNames).map { case ((_, c), n) =>
+          when(c.isNotNull && !isnan(c), c).as(n) }
+        val fwd = graft.operators.Prefix.runningScan(ctx.base.get, derived,
+          ctx.rowIdOut, col(ctx.rowIdOut), sNames,
+          sNames.map(_ => RunKind.Last), sNames.map(_ + "_f"))
+        ctx.base = Some(graft.operators.Prefix.runningScan(fwd, Nil,
+          ctx.rowIdOut, col(ctx.rowIdOut), sNames,
+          sNames.map(_ => RunKind.Last), sNames.map(_ + "_b"), rev = true,
+          persist = false))
+        val out = cols.zip(sNames).map { case ((lbl, c), n) =>
+          val pv = col(n + "_f"); val nv = col(n + "_b")
+          val gPrev = col(n + "_f_gap"); val gNext = col(n + "_b_gap")
           val cell = when(c.isNotNull && !isnan(c), c)
-            .otherwise(when(f.isNull, litOf(Double.NaN))
-              .otherwise(when(b.isNull, pv)
-                .otherwise(pv + (nv - pv) * (col(posN) - po) / (no - po))))
+            .otherwise(when(pv.isNull, litOf(Double.NaN))
+              .otherwise(when(nv.isNull, pv)
+                .otherwise(pv + (nv - pv) * gPrev / (gPrev + gNext))))
           (lbl, cell)
         }
         CMatrix(out, isBool = false)
       case ("interpolate", CVecD(vs, ls), Nil) =>
-        val out = vs.toArray
-        var i = 0
-        var lastValid = -1
-        while (i < vs.length) {
-          if (!vs(i).isNaN) {
-            if (lastValid >= 0 && i - lastValid > 1) {
-              val (a, b) = (vs(lastValid), vs(i))
-              var k = lastValid + 1
-              while (k < i) {
-                out(k) = a + (b - a) * (k - lastValid).toDouble / (i - lastValid)
-                k += 1
-              }
-            }
-            lastValid = i
-          }
-          i += 1
-        }
-        // trailing run: carry the last valid forward (pandas default)
-        if (lastValid >= 0) {
-          var k = lastValid + 1
-          while (k < vs.length) { out(k) = vs(lastValid); k += 1 }
-        }
-        CVecD(scala.collection.immutable.ArraySeq.unsafeWrapArray(out), ls)
-
-      case (cm @ ("cumsum" | "cummax" | "cummin" | "cumprod"), CVecD(vs, ls), Nil) =>
-        val combine: (Double, Double) => Double = cm match {
-          case "cumsum" => _ + _; case "cummax" => math.max; case "cummin" => math.min
-          case "cumprod" => _ * _
-        }
-        var acc = Double.NaN
-        var poisoned = false // skipna=False: first NaN kills the tail
-        CVecD(vs.map { x =>
-          if (x.isNaN) { poisoned = true; Double.NaN }
-          else if (!skipna && poisoned) Double.NaN
-          else { acc = if (acc.isNaN) x else combine(acc, x); acc }
+        val fwd = RunKernel.series(Seq(vs), Seq(RunKind.Last))
+        val bwd = RunKernel.series(Seq(vs), Seq(RunKind.Last), rev = true)
+        CVecD(vs.indices.map { i =>
+          // [value, gap] of the previous and the next valid cell
+          val (Seq(pv, gPrev), Seq(nv, gNext)) = (fwd(i), bwd(i))
+          if (!vs(i).isNaN || nv.isNaN) pv
+          else pv + (nv - pv) * gPrev / (gPrev + gNext)
         }, ls)
 
-      // `.cumprod()` (E11 long tail, r6): pandas skipna running product.
-      // Products don't distribute as products (no partial-product window
-      // at scale without the same single-partition trap), but they DO as
-      // running SUMS through the same distributed prefix. r8 packs the
-      // working width to TWO columns per source column (was three):
-      //   ln Σ    = running sum of ln|v| over non-zero cells,
-      //   packed  = running sum of (zero?·2³¹ + negative?) — the zero
-      //             count in the high bits, the negative count (sign =
-      //             parity) in the low 31; exact while each column has
-      //             < 2³¹ zero and < 2³¹ negative cells (≈2.1 billion —
-      //             beyond any engine frame's per-column pathology).
-      // out = 0 if zeros > 0 else (−1)^negs · e^lnΣ. The exp/ln round-trip
-      // costs ~1 ulp relative vs a sequential multiply — documented, so
-      // this method is golden-tested, not oracle-hashed (the e9_log
-      // float-function policy).
-      case ("cumprod", CMatrix(cols, false), args)
-          if axisArg(args).contains(0) =>
-        if (!std) throw new AdpUnsupportedException(
-          "'.cumprod()' is not supported in ADP mode")
-        ctx.seqCounter += 1
-        val tag = ctx.seqCounter
-        val inNames = cols.indices.flatMap(i =>
-          Seq(s"__cp${tag}_ln_$i", s"__cp${tag}_pk_$i")) ++
-          (if (skipna) Nil
-           else cols.indices.map(i => s"__cp${tag}_iv_$i"))
-        val runNames = cols.indices.flatMap(i =>
-          Seq(s"__cp${tag}_lns_$i", s"__cp${tag}_pks_$i")) ++
-          (if (skipna) Nil
-           else cols.indices.map(i => s"__cp${tag}_ivs_$i"))
-        // ONE select (see the cumsum note: withColumn folds re-analyze
-        // the plan per column, quadratic in width)
-        val marked = ctx.base.get.select(col("*") +:
-          (cols.zipWithIndex.flatMap { case ((_, c), i) =>
-            val valid = !isnan(c)
-            Seq(
-              when(valid && c =!= 0.0, log(abs(c))).otherwise(lit(null))
-                .as(s"__cp${tag}_ln_$i"),
-              when(valid, (c === 0.0).cast("long") * lit(2147483648L) +
-                  (c < 0.0).cast("long")).otherwise(lit(null))
-                .as(s"__cp${tag}_pk_$i"))
-          } ++ (if (skipna) Nil
-                else cols.zipWithIndex.map { case ((_, c), i) =>
-                  (c.isNull || isnan(c)).cast("double")
-                    .as(s"__cp${tag}_iv_$i") })): _*)
-        ctx.base = Some(graft.operators.Prefix.runningAgg(
-          marked, col(ctx.rowIdOut),
-          inNames, Seq.fill(inNames.size)("sum"), runNames))
-        val out = cols.zipWithIndex.map { case ((lbl, c), i) =>
-          val lns = col(s"__cp${tag}_lns_$i")
-          val pks = coalesce(col(s"__cp${tag}_pks_$i"), lit(0L))
-          val ngs = pks.bitwiseAND(lit(0x7FFFFFFFL))
-          val zrs = shiftright(pks, 31)
-          val sign = lit(1.0) - lit(2.0) * (ngs % 2).cast("double")
-          val cell0 = when(isnan(c), c)
-            .otherwise(when(zrs > 0, lit(0.0))
-              // a leading all-NaN prefix has no factors: pandas keeps NaN
-              // until the first real value (unlike cumsum's empty-sum 0)
-              .otherwise(when(lns.isNull && pks === 0, litOf(Double.NaN))
-                .otherwise(sign * exp(coalesce(lns, lit(0.0))))))
-          // skipna=False: the first invalid cell poisons the tail
-          val cell =
-            if (skipna) cell0
-            else when(col(s"__cp${tag}_ivs_$i") > 0, litOf(Double.NaN))
-              .otherwise(cell0)
-          (lbl, cell)
-        }
-        CMatrix(out, isBool = false)
+      // Series twin: the matrix path's running scan on one slice
+      case (cm @ ("cumsum" | "cummax" | "cummin" | "cumprod"), CVecD(vs, ls), Nil) =>
+        val kind = cumKinds(cm)
+        var poisoned = false // skipna=False: first NaN kills the tail
+        CVecD(RunKernel.series(Seq(vs), Seq(kind)).zip(vs).map { case (r, x) =>
+          if (x.isNaN) { poisoned = true; Double.NaN }
+          else if (!skipna && poisoned) Double.NaN
+          else if (kind == RunKind.Prod) r(0) + 0.0
+          else r(0)
+        }, ls)
 
       // `.rank(...)` (E11 long tail): pandas column-wise rank — r11 adds
       // the full keyword surface (method='average'/'min'/'max'/'first'/
@@ -2909,7 +2798,6 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
               (lbl, coalesce(col(tmpIn(i) + "_c"), litOf(Double.NaN)))
             }, isBool = false)
           }
-        def invalidOf(c: Column) = c.isNull || isnan(c)
         val needsSq = m == "std" || m == "var" || m == "sem"
         // std/var center on the frame-global column means (broadcast
         // 1-row aggregate) before forming moment sums: raw power sums
@@ -3086,7 +2974,6 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         ctx.seqCounter += 1
         val tag = ctx.seqCounter
         val rid = col(ctx.rowIdOut)
-        def invalidOf(c: Column) = c.isNull || isnan(c)
         val lm = cols.toMap; val rm = ocols.toMap
         val union: Seq[String] =
           if (cols.map(_._1) == ocols.map(_._1)) cols.map(_._1)
@@ -3126,56 +3013,38 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
             (l, if (i < 0) litOf(Double.NaN) else col(xIn(i) + "_w"))
           }, isBool = false)
         }
-      case (m @ ("mean" | "sum" | "count" | "min" | "max" | "std" | "var" |
-            "sem"),
+      // `.expanding()` sum/mean/count/min/max: one running scan over the
+      // shared slice layout — the valid cells' Sum (Max, Min) beside their
+      // running count (plus a running count of positions when count gates
+      // on them). var/std/sem: the exact α = 0 Welford ewm scan (unit
+      // weights, no decay: the corrected expanding variance — exact under
+      // any offset or trend, where centered power sums cancel), with the
+      // sem's count from a one-shot running scan chained on its output.
+      case (m @ ("mean" | "sum" | "count" | "min" | "max"),
             CExpand(cols, minp), Nil) =>
         ctx.seqCounter += 1
         val tag = ctx.seqCounter
-        val rid = col(ctx.rowIdOut)
-        def invalidOf(c: Column) = c.isNull || isnan(c)
-        val needsSq = m == "std" || m == "var" || m == "sem"
-        // the expanding aggregate IS the skipna distributed prefix — one
-        // runningAgg pass; min/max ride the prefix extreme kinds, std/var
-        // center on the frame-global means first (see the rolling case)
-        val based =
-          if (!needsSq) ctx.base.get
-          else {
-            val mus = cols.zipWithIndex.map { case ((_, c), i) =>
-              coalesce(avg(when(!invalidOf(c), c)), lit(0.0))
-                .as(s"__ex${tag}_mu_$i")
-            }
-            ctx.base.get.crossJoin(
-              broadcast(ctx.base.get.agg(mus.head, mus.tail: _*)))
-          }
         val valIn = cols.indices.map(i => s"__ex${tag}_v_$i")
         val cntIn = cols.indices.map(i => s"__ex${tag}_c_$i")
-        val sqIn = cols.indices.map(i => s"__ex${tag}_q_$i")
-        // count with min_periods > 1 gates on POSITIONS (pandas 2.2) —
-        // one extra running sum of ones, only when actually needed
+        // count with min_periods > 1 gates on POSITIONS (pandas 2.2)
         val needPos = m == "count" && minp > 1
         val posIn = s"__ex${tag}_one"
-        val marked = based.select(col("*") +:
-          (cols.zipWithIndex.flatMap { case ((_, c), i) =>
+        val derived = cols.zip(valIn.zip(cntIn)).flatMap {
+          case ((_, c), (v, n)) =>
             val valid = !invalidOf(c)
-            val cc = if (needsSq) c.cast("double") - col(s"__ex${tag}_mu_$i")
-                     else c.cast("double")
-            // NULL cells fall out of the skipna running aggregates
-            Seq(when(valid, cc).as(valIn(i)),
-              when(valid, lit(1.0)).as(cntIn(i))) ++
-              (if (needsSq) Seq(when(valid, cc * cc).as(sqIn(i))) else Nil)
-          } ++ (if (needPos) Seq(lit(1.0).as(posIn)) else Nil)): _*)
-        val inNames = valIn ++ cntIn ++
-          (if (needsSq) sqIn else Nil) ++ (if (needPos) Seq(posIn) else Nil)
-        val kinds = (m match {
-          case "min" => valIn.map(_ => "min")
-          case "max" => valIn.map(_ => "max")
-          case _     => valIn.map(_ => "sum")
-        }) ++ cntIn.map(_ => "sum") ++
-          (if (needsSq) sqIn.map(_ => "sum") else Nil) ++
-          (if (needPos) Seq("sum") else Nil)
-        ctx.base = Some(graft.operators.Prefix.runningAgg(marked, rid,
-          inNames, kinds, inNames.map(_ + "_s")))
-        val out = cols.zipWithIndex.map { case ((lbl, _), i) =>
+            Seq(when(valid, c.cast("double")).as(v),
+              when(valid, lit(1.0)).as(n))
+        } ++ (if (needPos) Seq(lit(1.0).as(posIn)) else Nil)
+        val inNames = valIn ++ cntIn ++ (if (needPos) Seq(posIn) else Nil)
+        val kind = m match {
+          case "min" => RunKind.Min; case "max" => RunKind.Max
+          case _     => RunKind.Sum
+        }
+        ctx.base = Some(graft.operators.Prefix.runningScan(ctx.base.get,
+          derived, ctx.rowIdOut, col(ctx.rowIdOut), inNames,
+          valIn.map(_ => kind) ++ inNames.drop(valIn.size).map(_ =>
+            RunKind.Sum), inNames.map(_ + "_s")))
+        CMatrix(cols.zipWithIndex.map { case ((lbl, _), i) =>
           val s = col(valIn(i) + "_s")
           val ccnt = coalesce(col(cntIn(i) + "_s"), lit(0.0))
           val cell = m match {
@@ -3188,26 +3057,35 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
               if (!needPos) ccnt
               else when(col(posIn + "_s") < minp, litOf(Double.NaN))
                 .otherwise(ccnt)
+            // a Sum starts from its first cell; + 0.0 is pandas' 0.0 start
             case "sum"   => when(ccnt < minp.max(1), litOf(Double.NaN))
-              .otherwise(s)
+              .otherwise(s + lit(0.0))
             case "mean"  => when(ccnt < minp.max(1), litOf(Double.NaN))
-              .otherwise(s / ccnt)
-            case "min" | "max" =>
-              when(s.isNull || ccnt < minp, litOf(Double.NaN)).otherwise(s)
+              .otherwise((s + lit(0.0)) / ccnt)
             case _ =>
-              val q = col(sqIn(i) + "_s")
-              val v = greatest((q - s * s / ccnt) / (ccnt - 1), lit(0.0))
-              // sem: the pandas window denominator sqrt(count − ddof)
-              when(ccnt < minp.max(2), litOf(Double.NaN))
-                .otherwise(m match {
-                  case "var" => v
-                  case "sem" => sqrt(v / (ccnt - 1))
-                  case _     => sqrt(v)
-                })
+              when(s.isNull || ccnt < minp, litOf(Double.NaN)).otherwise(s)
           }
           (lbl, cell)
+        }, isBool = false)
+      case (m @ ("std" | "var" | "sem"), CExpand(cols, minp), Nil) =>
+        val CMatrix(v, _) = method(CEwm(cols, 0.0, minp, adjust = true),
+          if (m == "sem") "var" else m, Nil, ctx): @unchecked
+        if (m != "sem") CMatrix(v, isBool = false)
+        else {
+          ctx.seqCounter += 1
+          val cntIn = cols.indices.map(i => s"__ex${ctx.seqCounter}_c_$i")
+          ctx.base = Some(graft.operators.Prefix.runningScan(ctx.base.get,
+            cols.zip(cntIn).map { case ((_, c), n) =>
+              when(!invalidOf(c), lit(1.0)).as(n) },
+            ctx.rowIdOut, col(ctx.rowIdOut), cntIn,
+            cntIn.map(_ => RunKind.Sum), cntIn.map(_ + "_s"),
+            persist = false))
+          // the pandas window denominator sqrt(count − ddof)
+          CMatrix(v.zip(cntIn).map { case ((l, x), n) =>
+            val cnt = coalesce(col(n + "_s"), lit(0.0))
+            (l, when(cnt < 2, litOf(Double.NaN)).otherwise(sqrt(x / (cnt - 1))))
+          }, isBool = false)
         }
-        CMatrix(out, isBool = false)
       // `.expanding().median()/.quantile(q[, interpolation=])` (r12):
       // the last clean-rejection in the window family — the running
       // order statistic has no invertible prefix SHAPE, but under the
@@ -3229,7 +3107,6 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         ctx.seqCounter += 1
         val tag = ctx.seqCounter
         val rid = col(ctx.rowIdOut)
-        def invalidOf(c: Column) = c.isNull || isnan(c)
         val vIn = cols.indices.map(i => s"__eq${tag}_v_$i")
         val derived = cols.zipWithIndex.map { case ((_, c), i) =>
           when(invalidOf(c), litOf(Double.NaN))
@@ -3243,17 +3120,18 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         }, isBool = false)
       // `.expanding().cov(other)` / `.corr(other)` (r11 session 5;
       // replanned r12): the same pandas pairwise contract as the
-      // rolling form, over the unbounded prefix — polarization on the
-      // EXACT corrected-var scan the ewm pairwise family runs
-      // ([[Prefix.ewmScan]] at α = 0 = unit weights = expanding
-      // Welford + Chan merge): cov = (varC(x̃+ỹ) − varC(x̃−ỹ))/4 over
-      // the pair-masked inputs; gate = running pair count >=
-      // max(min_periods, 2) (the den = n² − n guard supplies the 2).
+      // rolling form, over the unbounded prefix — the `.ewm()` pairwise
+      // polarization below at α = 0 (unit weights: the expanding Welford
+      // + Chan merge, no closed-form moment subtraction anywhere; the
+      // r11 centered-power-sum identity left a ~1e-12 cross-engine
+      // residue that sat ON a 6-dp rounding quantum): cov =
+      // (varC(x̃+ỹ) − varC(x̃−ỹ))/4 over the pair-masked inputs; gate =
+      // running pair count >= max(min_periods, 2) (the den = n² − n guard
+      // supplies the 2).
       case (m @ ("cov" | "corr"), CExpand(cols, minp), List(arg)) =>
-        if (!std) throw new AdpUnsupportedException(
-          s"'.expanding().$m()' is not supported in ADP mode")
-        val ocols = arg match {
-          case CMatrix(oc, false) => oc
+        arg match {
+          case CMatrix(_, false) =>
+            method(CEwm(cols, 0.0, minp, adjust = true), m, List(arg), ctx)
           case _: CVecD | _: CVecC => throw new FormulaTypeException(
             s"'.expanding().$m(other)' needs a DataFrame other: the " +
               "DSL's Series broadcast COLUMN-positionally (SURVEY §2.3 " +
@@ -3261,56 +3139,6 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
               "ill-formed")
           case other => throw new FormulaTypeException(
             s"'.expanding().$m(other)' is not applicable to $other")
-        }
-        ctx.seqCounter += 1
-        val tag = ctx.seqCounter
-        val rid = col(ctx.rowIdOut)
-        def invalidOf(c: Column) = c.isNull || isnan(c)
-        val lm = cols.toMap; val rm = ocols.toMap
-        val union: Seq[String] =
-          if (cols.map(_._1) == ocols.map(_._1)) cols.map(_._1)
-          else (cols.map(_._1) ++ ocols.map(_._1)).distinct.sorted
-        val shared = union.filter(l => lm.contains(l) && rm.contains(l))
-        if (shared.isEmpty)
-          CMatrix(union.map(l => (l, litOf(Double.NaN))), isBool = false)
-        else {
-          // r12: the r11 centered-power-sum closing identity left a
-          // ~1e-12 cross-engine residue vs DuckDB's pairwise kernel —
-          // at 6 dp one sf0.01 cell sat ON the rounding quantum (the
-          // r11 red row). Same body as the ewm pairwise case below at
-          // α = 0: every term is a Welford product, no closed-form
-          // moment subtraction anywhere; the n/(n−1) bias factors in
-          // corr share the pair mask and cancel.
-          val wantCorr = m == "corr"
-          val nan = litOf(Double.NaN)
-          val sIn = shared.indices.map(i => s"__ep${tag}_s_$i")
-          val dIn = shared.indices.map(i => s"__ep${tag}_d_$i")
-          val xIn = shared.indices.map(i => s"__ep${tag}_x_$i")
-          val yIn = shared.indices.map(i => s"__ep${tag}_y_$i")
-          val derived =
-            shared.zipWithIndex.flatMap { case (l, i) =>
-              val x = lm(l).cast("double"); val y = rm(l).cast("double")
-              val pv = !invalidOf(lm(l)) && !invalidOf(rm(l))
-              Seq(when(pv, x + y).otherwise(nan).as(sIn(i)),
-                when(pv, x - y).otherwise(nan).as(dIn(i))) ++
-                (if (wantCorr)
-                   Seq(when(pv, x).otherwise(nan).as(xIn(i)),
-                     when(pv, y).otherwise(nan).as(yIn(i)))
-                 else Nil)
-            }
-          val scanIns = sIn ++ dIn ++ (if (wantCorr) xIn ++ yIn else Nil)
-          ctx.base = Some(graft.operators.Prefix.ewmScan(ctx.base.get,
-            derived, ctx.rowIdOut, rid, scanIns, 0.0, scanIns.map(_ + "_w"),
-            "var", minp))
-          CMatrix(union.map { l =>
-            val i = shared.indexOf(l)
-            if (i < 0) (l, litOf(Double.NaN))
-            else {
-              val cov = (col(sIn(i) + "_w") - col(dIn(i) + "_w")) / 4.0
-              (l, if (!wantCorr) cov
-                  else cov / sqrt(col(xIn(i) + "_w") * col(yIn(i) + "_w")))
-            }
-          }, isBool = false)
         }
       // Series twin: the fused batch emit on one slice
       case (m, CRollD(vs, ls, n, minp, center), rollArgs)
@@ -3324,39 +3152,38 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
             graft.operators.Prefix.winEmitter(rollingFuse(m), n - 1, minp,
               rq, rInterp))
         CVecD(if (m == "std") out.map(math.sqrt) else out, ls)
-      case (m @ ("mean" | "sum" | "count" | "min" | "max" | "std" | "var" |
-            "sem"),
-            CExpandD(vs, ls, minp), Nil) => {
-        var s = 0.0; var q = 0.0; var c = 0; var pos = 0
-        var mn = Double.NaN; var mx = Double.NaN
-        CVecD(vs.map { v =>
-          pos += 1
-          if (!v.isNaN) {
-            c += 1; s += v; q += v * v
-            mn = if (c == 1) v else math.min(mn, v)
-            mx = if (c == 1) v else math.max(mx, v)
-          }
+      // Series twins: the matrix path's running scan / α = 0 Welford ewm
+      // scan on one slice
+      case (m @ ("mean" | "sum" | "count" | "min" | "max"),
+            CExpandD(vs, ls, minp), Nil) =>
+        val kind = m match {
+          case "min" => RunKind.Min; case "max" => RunKind.Max
+          case _     => RunKind.Sum
+        }
+        val ones = vs.map(v => if (v.isNaN) Double.NaN else 1.0)
+        CVecD(RunKernel.series(Seq(vs, ones), Seq(kind, RunKind.Sum))
+          .zipWithIndex.map { case (Seq(s, cnt), i) =>
+            val c = if (cnt.isNaN) 0.0 else cnt
+            m match {
+              case "count"            => if (i + 1 < minp) Double.NaN else c
+              case _ if c < minp.max(1) => Double.NaN
+              case "sum"              => s + 0.0
+              case "mean"             => (s + 0.0) / c
+              case _                  => s
+            }
+          }, ls)
+      case (m @ ("std" | "var" | "sem"), CExpandD(vs, ls, minp), Nil) =>
+        val CVecD(v, _) = method(CEwmD(vs, ls, 0.0, minp, adjust = true),
+          "var", Nil, ctx): @unchecked
+        var c = 0
+        CVecD(v.zip(vs).map { case (x, raw) =>
+          if (!raw.isNaN) c += 1
           m match {
-            case "count"            => if (pos < minp) Double.NaN
-                                       else c.toDouble
-            case _ if c < minp.max(1) => Double.NaN
-            case "sum"              => s
-            case "mean"             => s / c
-            case "min"              => mn
-            case "max"              => mx
-            case _ =>
-              if (c < minp.max(2)) Double.NaN
-              else {
-                val v2 = math.max(0.0, (q - s * s / c) / (c - 1))
-                m match {
-                  case "var" => v2
-                  case "sem" => math.sqrt(v2 / (c - 1))
-                  case _     => math.sqrt(v2)
-                }
-              }
+            case "var" => x
+            case "std" => math.sqrt(x)
+            case _     => math.sqrt(x / (c - 1))
           }
         }, ls)
-      }
       // Series twin of the r12 expanding order statistic: the batch
       // emit on one slice — a [[Prefix.Fenwick]] over the sorted distinct
       // valid domain (−0.0 normalized), starting from an empty histogram
@@ -3419,7 +3246,6 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           ctx.seqCounter += 1
           val tag = ctx.seqCounter
           val rid = col(ctx.rowIdOut)
-          def invalidOf(c: Column) = c.isNull || isnan(c)
           val valIn = cols.indices.map(i => s"__ew${tag}_v_$i")
           val derived = cols.zipWithIndex.map { case ((_, c), i) =>
             when(invalidOf(c), litOf(Double.NaN))
@@ -3490,7 +3316,6 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         ctx.seqCounter += 1
         val tag = ctx.seqCounter
         val rid = col(ctx.rowIdOut)
-        def invalidOf(c: Column) = c.isNull || isnan(c)
         val lm = cols.toMap; val rm = ocols.toMap
         val union: Seq[String] =
           if (cols.map(_._1) == ocols.map(_._1)) cols.map(_._1)

@@ -102,7 +102,7 @@ object Prefix {
     * hash-exchanged ONCE on the slice id and sorted on the total
     * (order, key) processing order, PERSISTED per session per canonical
     * plan. Every keyCol-tied scan operator (positionalLag window fuses,
-    * ewmScan/ewmScanRecursive, runningQuantile) over the same
+    * ewmScan/ewmScanRecursive, runningQuantile, runningScan) over the same
     * (base, orderCol, keyCol, parts, direction) consumes the IDENTICAL
     * physical layout, so a query batch pays the exchange + sort once
     * instead of once per query — the in-session analogue of writing the
@@ -224,13 +224,14 @@ object Prefix {
 
   // ---- the slice-scan skeleton: layout → partials → combine → emit ----
   //
-  // The four slice scans (positional lag, ewm adjust=True/False, running
-  // quantile) share one flow: lay the frame out by slice, run a narrow
-  // per-slice partial pass, combine the ≤ parts partials on the driver
-  // into each slice's incoming state, and emit every row in one fully
-  // parallel pass that seeds each slice from its incoming state. Each
-  // operator supplies only its monoid — a [[SlicePartial]], the driver
-  // combine, and a [[SliceKernel]]; [[SliceScan]] owns the rest.
+  // The five slice scans (positional lag, ewm adjust=True/False, running
+  // quantile, running aggregate) share one flow: lay the frame out by
+  // slice, run a narrow per-slice partial pass, combine the ≤ parts
+  // partials on the driver into each slice's incoming state, and emit
+  // every row in one fully parallel pass that seeds each slice from its
+  // incoming state. Each operator supplies only its monoid — a
+  // [[SlicePartial]], the driver combine, and a [[SliceKernel]];
+  // [[SliceScan]] owns the rest.
 
   /** Schema-only (analysis, no job) DoubleType check of a scan's value
     * columns: the `derived` projections when given, else the named
@@ -449,6 +450,13 @@ object Prefix {
     * to the slice matching Spark's sort convention (greatest value: last
     * slice ASC, first slice DESC) — without the guard the slice cast
     * would throw under ANSI.
+    *
+    * Callers: the paths with no unique key or a VALUE order — the
+    * compiler's rank family (value-count prefix, 'first' tie positions),
+    * [[graft.plans.GlobalRowNumberRule]], [[Sampling.tokenBudget]],
+    * grouped [[Packing.lengthBatches]], [[positionalLagJoin]] and the
+    * rolling prefix-sum fallback past the ring bound. The row-order
+    * cumulative family runs [[runningScan]] instead.
     */
   def runningAgg(df: DataFrame, orderCol: Column,
                  inNames: Seq[String], kinds: Seq[String],
@@ -524,68 +532,191 @@ object Prefix {
       .drop("__pfx_pid")
   }
 
-  /** Bidirectional sibling of [[runningAgg]] (r11): per-column running
-    * DIRECTION over one slicing and ONE exchange — `descending(i)` runs
-    * `outNames(i)` as a running suffix aggregate (the bfill direction)
-    * while ascending columns keep the prefix direction. Built for
-    * interpolate's forward+backward neighbor carries: the two directions
-    * become two window specs (asc / desc) over the SAME `__pfx_pid`
-    * partition — one extra within-partition sort, zero extra exchanges,
-    * where a second [[runningAgg]] call would re-slice and re-shuffle
-    * the whole frame. Offsets for descending columns aggregate the
-    * partials over the pid order REVERSED (the exclusive suffix of
-    * slices after this one). Ungrouped, no tie columns — callers
-    * guarantee a unique order column (the row id contract). */
-  def runningAggBidi(df: DataFrame, orderCol: Column,
-                     inNames: Seq[String], kinds: Seq[String],
-                     outNames: Seq[String],
-                     descending: Seq[Boolean]): DataFrame = {
-    require(inNames.length == kinds.length &&
-      kinds.length == outNames.length &&
-      outNames.length == descending.length, "argument lists must align")
-    require(kinds.forall(Set("sum", "max", "min")),
-      s"unsupported running-aggregate kind in $kinds")
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def aggOf(kind: String, c: Column): Column = kind match {
-      case "sum" => sum(c); case "max" => max(c); case "min" => min(c)
+  /** The fold of one [[runningScan]] column. */
+  private[graft] sealed trait RunKind
+  private[graft] object RunKind {
+    case object Sum extends RunKind
+    case object Max extends RunKind
+    case object Min extends RunKind
+    case object Prod extends RunKind
+    /** The last valid cell, plus its distance in rows. */
+    case object Last extends RunKind
+  }
+
+  /** Appends `outNames(i)` = the running `kinds(i)` fold of `inNames(i)`
+    * down the (orderCol, keyCol) total order: the pandas
+    * `cumsum/cummax/cummin/cumprod`, `ffill/bfill`, `interpolate` and
+    * `expanding()` family on the slice-scan skeleton. NULL cells are
+    * skipped (callers mark NaN as NULL first) and the output is NULL until
+    * the first valid cell. Each slice's accumulator is seeded with its
+    * incoming state — the driver fold of the earlier slices' partials, in
+    * pid order, or from the highest slice down for `rev` (the reversed
+    * stream, i.e. a running suffix) — and folds its own rows in stream
+    * order. Integer-valued doubles and decimals are exact; sums and
+    * products of other doubles associate differently from a sequential
+    * scan across slice boundaries (last ulps). A Sum starts from its first
+    * valid cell, so a leading −0.0 stays −0.0, as numpy's cumsum keeps it.
+    *
+    * `Last` also appends `outNames(i) + "_gap"` (DoubleType): the distance
+    * in rows back to that last valid cell (0 on a valid cell, NULL before
+    * the first). Sum/Max/Min fold DoubleType or DecimalType cells — the
+    * decimals exactly, as `java.math.BigDecimal`, a Sum emitting at
+    * Spark's `sum` result type; Last carries a cell of any type; Prod
+    * folds doubles. `keyCol` must be a non-null unique key; `derived` and
+    * `persist` as in [[sliceScan]]. */
+  private[graft] def runningScan(base: DataFrame, derived: Seq[Column],
+                                 keyCol: String, orderCol: Column,
+                                 inNames: Seq[String], kinds: Seq[RunKind],
+                                 outNames: Seq[String], rev: Boolean = false,
+                                 persist: Boolean = true): DataFrame = {
+    require(inNames.length == kinds.length && kinds.length == outNames.length,
+      "inNames, kinds and outNames must align")
+    val scan = sliceScan(base, derived, keyCol, orderCol, inNames, rev = rev,
+      persist = persist)
+    val w = inNames.length
+    val types = scan.inIdx.map(scan.laid.schema(_).dataType).toSeq
+    // the driver's fold of the partials; building it checks every kind
+    val glob = RunKernel.entered(kinds, types, RunKernel.seed(w))
+    val outs = outNames.zip(kinds.zip(types)).map {
+      case (o, (RunKind.Sum, d: DecimalType)) => StructField(o,
+        DecimalType(math.min(DecimalType.MAX_PRECISION, d.precision + 10),
+          d.scale))
+      case (o, (_, t)) => StructField(o, t)
     }
-    val sliced = withSliceId(df, orderCol, inNames, Nil, false, false,
-      Nil, parts)
-    val partialCols = inNames.zip(kinds).zipWithIndex.map {
-      case ((n, k), i) => aggOf(k, col(n)).as(s"__pfx_p_$i") }
-    val partials = sliced.groupBy(col("__pfx_pid"))
-      .agg(partialCols.head, partialCols.tail: _*)
-    val offAsc = Window.orderBy(col("__pfx_pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offDesc = Window.orderBy(col("__pfx_pid").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = partials.select(col("__pfx_pid") +:
-      kinds.zipWithIndex.map { case (k, i) =>
-        aggOf(k, col(s"__pfx_p_$i"))
-          .over(if (descending(i)) offDesc else offAsc).as(s"__pfx_o_$i")
-      }: _*)
-    val wAsc = Window.partitionBy(col("__pfx_pid"))
-      .orderBy(orderCol.asc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wDesc = Window.partitionBy(col("__pfx_pid"))
-      .orderBy(orderCol.desc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val joined = sliced.join(broadcast(offsets), Seq("__pfx_pid"), "left")
-    val outCols = inNames.zip(kinds).zipWithIndex.map { case ((n, k), i) =>
-      val run = aggOf(k, col(n)).over(if (descending(i)) wDesc else wAsc)
-      val off = col(s"__pfx_o_$i")
-      val merged = k match {
-        case "sum" => when(run.isNull, off).otherwise(
-          when(off.isNull, run).otherwise(off + run))
-        case "max" => greatest(off, run)
-        case "min" => least(off, run)
+
+    // ---- pass 1: each slice's state [acc…, gap…] from an empty history;
+    // a slice with no valid cell in column j exports its row count as
+    // gap j ----
+    val byPid = scan.partials[Row](StructType(outs.zipWithIndex.map {
+      case (f, j) => f.copy(name = s"a$j") } ++ (0 until w).map(j =>
+      StructField(s"g$j", LongType, nullable = false)))) { () =>
+      new SlicePartial {
+        private val k = new RunKernel(Array(RunKernel.seed(w)),
+          Array.range(1, w + 1), kinds, types)
+        k.enter(0)
+        def step(r: Row): Unit = k.absorb(r)
+        def result: Seq[Any] = Seq(Row.fromSeq(k.exportState().toSeq))
       }
-      merged.as(outNames(i))
     }
-    joined.select(col("*") +: outCols: _*)
-      .drop(kinds.indices.map(i => s"__pfx_o_$i"): _*)
-      .drop("__pfx_pid")
+
+    // ---- driver combine: fold the partials in stream order ----
+    val incoming = new Array[Array[Any]](scan.parts)
+    (if (rev) incoming.indices.reverse else incoming.indices).foreach { s =>
+      incoming(s) = glob.exportState()
+      byPid.get(s).foreach(ps => glob.merge(ps.head))
+    }
+
+    // ---- pass 2: fully parallel emit ----
+    val inIdx = scan.inIdx
+    scan.emit(outs ++ outNames.zip(kinds).collect { case (o, RunKind.Last) =>
+      StructField(o + "_gap", DoubleType) }) { () =>
+      new RunKernel(incoming, inIdx, kinds, types)
+    }
+  }
+
+  /** The [[runningScan]] kernel. Its state [acc…, gap…] holds per column
+    * the accumulator (NULL until a valid cell) and the rows since its last
+    * valid cell, seeded per slice from `incoming`; `cells` writes the
+    * accumulators, then the gaps of the `Last` columns. Max/Min replace
+    * only on a strict compare, so a tie (0.0 vs −0.0) keeps the earlier
+    * cell, as Spark's `greatest`/`least` do. */
+  private[graft] final class RunKernel(incoming: Array[Array[Any]],
+                                       inIdx: Array[Int], kinds: Seq[RunKind],
+                                       types: Seq[DataType])
+      extends SliceKernel {
+    private val w = inIdx.length
+    private val ops: Array[(Any, Any) => Any] = Array.tabulate(w) { j =>
+      type B = java.math.BigDecimal
+      @inline def d(x: Any): Double = x.asInstanceOf[Double]
+      @inline def b(x: Any): B = x.asInstanceOf[B]
+      (kinds(j), types(j)) match {
+        case (RunKind.Last, _) => (_, v) => v
+        case (RunKind.Sum, DoubleType) => (a, v) => d(a) + d(v)
+        case (RunKind.Prod, DoubleType) => (a, v) => d(a) * d(v)
+        case (RunKind.Max, DoubleType) => (a, v) => if (d(v) > d(a)) v else a
+        case (RunKind.Min, DoubleType) => (a, v) => if (d(v) < d(a)) v else a
+        case (RunKind.Sum, _: DecimalType) => (a, v) => b(a).add(b(v))
+        case (RunKind.Max, _: DecimalType) =>
+          (a, v) => if (b(v).compareTo(b(a)) > 0) v else a
+        case (RunKind.Min, _: DecimalType) =>
+          (a, v) => if (b(v).compareTo(b(a)) < 0) v else a
+        case (k, t) => throw new IllegalArgumentException(
+          s"runningScan: $k does not fold $t cells")
+      }
+    }
+    private val lasts = (0 until w).filter(kinds(_) == RunKind.Last)
+    private val st = new Array[Any](2 * w)
+
+    def enter(pid: Int): Unit = System.arraycopy(incoming(pid), 0, st, 0, 2 * w)
+
+    /** The state after the rows seen so far, in the layout `enter` reads. */
+    def exportState(): Array[Any] = st.clone()
+
+    /** Folds cell `v` into column j: a row's cell (`g` = 0 when valid, 1
+      * when not) or a slice's exported state (`g` = its gap). */
+    private def fold(j: Int, v: Any, g: Long): Unit =
+      if (v == null) st(w + j) = st(w + j).asInstanceOf[Long] + g
+      else {
+        st(j) = if (st(j) == null) v else ops(j)(st(j), v)
+        st(w + j) = g
+      }
+
+    def absorb(r: Row): Unit = {
+      var j = 0
+      while (j < w) {
+        val v = r.get(inIdx(j))
+        fold(j, v, if (v == null) 1L else 0L)
+        j += 1
+      }
+    }
+
+    /** Folds a slice's exported state in after the rows seen so far. */
+    def merge(p: Row): Unit =
+      (0 until w).foreach(j => fold(j, p.get(j), p.getLong(w + j)))
+
+    def cells(r: Row, out: Array[Any], at: Int): Unit = {
+      absorb(r)
+      System.arraycopy(st, 0, out, at, w)
+      lasts.indices.foreach { l =>
+        val j = lasts(l)
+        out(at + w + l) = if (st(j) == null) null
+          else java.lang.Double.valueOf(st(w + j).asInstanceOf[Long].toDouble)
+      }
+    }
+  }
+
+  /** [[RunKernel]] on one slice: a driver-side Series is one slice with an
+    * empty history, a streaming key one slice per micro-batch. */
+  private[graft] object RunKernel {
+    /** The empty-history state of `width` columns. */
+    def seed(width: Int): Array[Any] =
+      Array.tabulate[Any](2 * width)(i => if (i < width) null else 0L)
+
+    /** A kernel entered from `in` (a [[seed]] or an exported state); row
+      * field j holds column j. */
+    def entered(kinds: Seq[RunKind], types: Seq[DataType],
+                in: Array[Any]): RunKernel = {
+      val k = new RunKernel(Array(in), Array.range(0, kinds.length), kinds,
+        types)
+      k.enter(0)
+      k
+    }
+
+    /** The kernel down driver-side double columns (NaN = invalid), from
+      * the last row back when `rev`: row i's outputs, NULL read as NaN. */
+    def series(cols: Seq[IndexedSeq[Double]], kinds: Seq[RunKind],
+               rev: Boolean = false): IndexedSeq[IndexedSeq[Double]] = {
+      val k = entered(kinds, kinds.map(_ => DoubleType), seed(kinds.length))
+      val out = new Array[Any](kinds.length + kinds.count(_ == RunKind.Last))
+      val at = cols.head.indices
+      val rows = (if (rev) at.reverse else at).map { i =>
+        k.cells(Row.fromSeq(cols.map(c => if (c(i).isNaN) null else c(i))),
+          out, 0)
+        out.toIndexedSeq.map(v => if (v == null) Double.NaN
+                                  else v.asInstanceOf[Double])
+      }
+      if (rev) rows.reverse else rows
+    }
   }
 
   /** The deterministic slice-id projection behind [[runningAgg]]: appends

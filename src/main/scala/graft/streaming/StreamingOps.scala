@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.DoubleType
 import graft.operators.Prefix
 
 /** Structured-Streaming forms of the pipeline operators (the reference is
@@ -335,36 +336,44 @@ object StreamingOps extends Serializable {
   case class GfRow(key: Long, id: Long, value: Option[Double])
   case class GfState(last: Double, has: Boolean)
 
+  /** The batch running-scan `Last` carry ([[Prefix.RunKernel]]) on one
+    * key's micro-batch, entered from the key's last valid value (NaN:
+    * none yet). `apply` folds a cell (NaN = hole) and returns the carried
+    * value. */
+  private final class LastCarry(from: Double) {
+    private val k = Prefix.RunKernel.entered(Seq(Prefix.RunKind.Last),
+      Seq(DoubleType), Array[Any](if (from.isNaN) null else from, 0L))
+    def apply(v: Double): Double = { k.absorb(Row(if (v.isNaN) null else v)); last }
+    def last: Double =
+      Option(k.exportState()(0)).fold(Double.NaN)(_.asInstanceOf[Double])
+  }
+
   /** Streaming forward fill — the
     * [[graft.compile.FormulaCompiler]] `.ffill()` twin (r9 session 2):
     * each key carries ONLY its last valid value as state (O(keys),
-    * fixed-size — the smallest state any streaming operator can hold), a
-    * hole (None/NaN) emits that carried value, a valid value updates the
-    * state and passes through; a leading run of holes before any valid
-    * value stays empty. The gap-fill every telemetry/feature pipeline
-    * runs at ingest. Within a micro-batch rows fold in input order
-    * (per-batch deterministic; cross-batch ordering is the source's —
-    * the positional contract batch ffill derives from the row-id
-    * order). */
+    * fixed-size — the smallest state any streaming operator can hold),
+    * and each micro-batch runs the batch `Last` carry on it
+    * ([[LastCarry]]): a hole (None/NaN) emits the carried value, a
+    * valid value updates it and passes through; a leading run of holes
+    * before any valid value stays empty. The gap-fill every
+    * telemetry/feature pipeline runs at ingest. Within a micro-batch rows
+    * fold in input order (per-batch deterministic; cross-batch ordering
+    * is the source's — the positional contract batch ffill derives from
+    * the row-id order). */
   def gapFillStream(rows: Dataset[GfRow])
       : Dataset[(Long, Long, Option[Double])] = {
     val spark = rows.sparkSession
     import spark.implicits._
     def fn(key: Long, in: Iterator[GfRow], state: GroupState[GfState])
         : Iterator[(Long, Long, Option[Double])] = {
-      var st = state.getOption.getOrElse(GfState(0.0, has = false))
-      val out =
-        scala.collection.mutable.ListBuffer[(Long, Long, Option[Double])]()
-      in.foreach { r =>
-        r.value.filter(v => !v.isNaN) match {
-          case Some(v) =>
-            st = GfState(v, has = true)
-            out += ((key, r.id, Some(v)))
-          case None =>
-            out += ((key, r.id, if (st.has) Some(st.last) else None))
-        }
-      }
-      state.update(st)
+      val carry = new LastCarry(
+        state.getOption.filter(_.has).fold(Double.NaN)(_.last))
+      val out = in.map { r =>
+        val v = carry(r.value.getOrElse(Double.NaN))
+        (key, r.id, if (v.isNaN) None else Some(v))
+      }.toList
+      state.update(GfState(if (carry.last.isNaN) 0.0 else carry.last,
+        has = !carry.last.isNaN))
       out.iterator
     }
     rows.groupByKey(_.key)
@@ -510,28 +519,38 @@ object StreamingOps extends Serializable {
     * on the margin-audited fixture — orders below every audited rounding
     * margin). Invalid (NaN) values decay the weights and carry the last
     * outputs, with the same 1e-150 underflow collapse; min_periods gates
-    * on the running valid count. Events are processed in `id` order
-    * within each micro-batch. */
+    * on the running valid count. At α = 1 (min_periods ≤ 1) the mean is
+    * the batch path's `.ffill()`: the running-scan `Last` carry
+    * ([[LastCarry]]), whose state is the last valid value. Events are
+    * processed in `id` order within each micro-batch. */
   def ewmStream(rows: Dataset[EwRow], alpha: Double,
                 minPeriods: Int = 0): Dataset[EwOut] = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
     require(minPeriods >= 0, s"min_periods must be >= 0, got $minPeriods")
     val spark = rows.sparkSession
     import spark.implicits._
+    val ffill = alpha == 1.0 && minPeriods <= 1
     def fn(key: Long, in: Iterator[EwRow],
            state: GroupState[EwState]): Iterator[EwOut] = {
       val st = state.getOption
-      val mean = ewmKernel(st.map(_.mean), 1, alpha, "mean", minPeriods)
       val vr = ewmKernel(st.map(_.variance), 1, alpha, "var", minPeriods)
       val cell = new Array[Any](2)
+      // the mean of one value, and the state the mean carries
+      val (mean, meanState): (Double => Double, () => Seq[Double]) =
+        if (ffill) {
+          val carry = new LastCarry(st.fold(Double.NaN)(_.mean.head))
+          (carry(_), () => Seq(carry.last))
+        } else {
+          val k = ewmKernel(st.map(_.mean), 1, alpha, "mean", minPeriods)
+          (v => { k.cells(Row(v), cell, 0); cell(0).asInstanceOf[Double] },
+            () => k.exportState().toSeq)
+        }
       val out = in.toSeq.sortBy(_.id).map { r =>
-        val row = Row(r.value)
-        mean.cells(row, cell, 0)
-        vr.cells(row, cell, 1)
-        EwOut(key, r.id, cell(0).asInstanceOf[Double],
-          cell(1).asInstanceOf[Double])
+        val m = mean(r.value)
+        vr.cells(Row(r.value), cell, 1)
+        EwOut(key, r.id, m, cell(1).asInstanceOf[Double])
       }
-      state.update(EwState(mean.exportState().toSeq, vr.exportState().toSeq))
+      state.update(EwState(meanState(), vr.exportState().toSeq))
       out.iterator
     }
     rows.groupByKey(_.key)

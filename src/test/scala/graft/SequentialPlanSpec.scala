@@ -5,11 +5,14 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-shape pins for the sequential formula methods (`.cumsum()`,
-  * `.cummax()`, `.cummin()`, `.rank()`): the round-5 verdict's one
-  * scale-killer shape was these running on a GLOBAL single-partition
-  * window. They now compile through the two-phase distributed prefix
-  * ([[graft.operators.Prefix.runningAgg]]) / grouped value counts, so no
-  * window in any executed plan may have an empty partition spec — the
+  * `.cummax()`, `.cumprod()`, `.ffill()`, `.interpolate()`, `.rank()`,
+  * …): the round-5 verdict's one scale-killer shape was these running on
+  * a GLOBAL single-partition window. The row-order cumulative family now
+  * runs the running scan ([[graft.operators.Prefix.runningScan]]) on the
+  * slice-scan skeleton, so its plans hold no window at all; rank compiles
+  * through grouped value counts and the two-phase distributed prefix
+  * ([[graft.operators.Prefix.runningAgg]]), whose only unpartitioned
+  * window is the bounded partials-offsets one. Either way the
   * whole-matrix serialization through one task is structurally gone.
   */
 class SequentialPlanSpec extends SparkSpec {
@@ -46,11 +49,21 @@ class SequentialPlanSpec extends SparkSpec {
       s"$name: row-id-ordered unpartitioned window in plan:\n$s")
   }
 
+  /** The running-scan queries: mapPartitions passes over the slice
+    * layout, no WindowExec anywhere in the plan. */
+  private def assertNoWindow(name: String): Unit = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.count()
+    val plan = finalPlan(df.queryExecution.executedPlan)
+    val windows = plan.collect { case w: WindowExec => w }
+    assert(windows.isEmpty, s"$name: window in a running-scan plan:\n$plan")
+  }
+
   test("e11_cumsum plans with no single-partition window") {
-    assertNoGlobalWindow("e11_cumsum")
+    assertNoWindow("e11_cumsum")
   }
   test("e11_cummax plans with no single-partition window") {
-    assertNoGlobalWindow("e11_cummax")
+    assertNoWindow("e11_cummax")
   }
   test("e11_rank plans with no single-partition window") {
     assertNoGlobalWindow("e11_rank")
@@ -63,11 +76,14 @@ class SequentialPlanSpec extends SparkSpec {
       assertNoGlobalWindow(name)
   }
   test("e11_cumprod plans with no single-partition window") {
-    assertNoGlobalWindow("e11_cumprod")
+    assertNoWindow("e11_cumprod")
   }
-  test("e11_interp plans with no single-partition window (three " +
-      "slice-prefix passes, r11)") {
-    assertNoGlobalWindow("e11_interp")
+  test("e11_interp plans with no window (two running-scan passes)") {
+    assertNoWindow("e11_interp")
+  }
+  test("e11_ffill/e11_bfill plan with no window (one running-scan pass)") {
+    assertNoWindow("e11_ffill")
+    assertNoWindow("e11_bfill")
   }
   test("r11 axis=1 reductions are pure projections: no exchange, no " +
       "window, no aggregate anywhere in the plan") {

@@ -298,8 +298,8 @@ class FormulaEvaluatorSpec extends SparkSpec {
   }
 
   test(".cumsum()/.cummax() in bounded ADP mode (decimal prefix offsets)") {
-    // exercises Prefix.runningAgg's java.math.BigDecimal offset fold: the
-    // decimal partials collected per partition must combine exactly
+    // exercises Prefix.runningScan's java.math.BigDecimal fold: the
+    // decimal partials collected per slice must combine exactly
     val ev = new FormulaEvaluator(
       reg("a" -> fixA, "i" -> fixI), adpEnabled = true)
     val got = evalMat(ev, "a.cumsum()")

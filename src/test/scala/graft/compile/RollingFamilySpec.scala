@@ -114,6 +114,32 @@ class RollingFamilySpec extends SparkSpec {
     assertCell(tv(8), 1.0, 1e-6)
   }
 
+  test("expanding var at |mean| >> spread and under a trend: the Welford " +
+      "scan on the matrix and the Series path (pandas 2.2)") {
+    def vec(vs: Double*): Seq[Double] =
+      new FormulaEvaluator(reg("v" -> Vec(vs.toIndexedSeq,
+        vs.indices.map(i => s"r$i")))).evaluateFormula(
+        "v.expanding().var()") match {
+        case VecResult(out) => out.values
+        case other => fail(s"expected vector result, got $other")
+      }
+    // raw power sums cancel every digit here: (Σv² − (Σv)²/n) reads 0.0
+    assertSeq(vec(1e9 + 1, 1e9 + 2, 1e9 + 3, 1e9 + 4),
+      Seq(Double.NaN, 0.5, 1.0, 5.0 / 3.0), tol = 0.0)
+    // pandas 2.2: Series(trend).expanding().var()
+    val trend = Seq(0.0, 0.0, 0.0, 1e12, 1e12, 1e12, 2e12 + 1, 2e12 + 2,
+      2e12 + 3)
+    val want = Seq(Double.NaN, 0.0, 0.0, 2.5e+23, 3e+23, 3e+23,
+      5.7142857142900004e+23, 6.964285714295357e+23, 7.500000000015e+23)
+    for ((path, got) <- Seq("matrix" -> colOf("s.expanding().var()",
+        series(trend: _*)), "Series" -> vec(trend: _*)))
+      got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+        if (w.isNaN) assert(g.isNaN, s"$path row $i: expected NaN, got $g")
+        else assert(math.abs(g - w) <= 1e-15 * w,
+          s"$path row $i: expected $w, got $g")
+      }
+  }
+
   test("rolling(1): the cell itself for sum/mean/min/max, valid-indicator " +
       "for count, NaN for var/std (ddof division by zero)") {
     assertSeq(colOf("s.rolling(1).min()", s6),

@@ -8,14 +8,15 @@ import graft.model.{Matrix, Vec}
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps._
 
-/** One window arithmetic, three drivers: every rolling, ewm and
-  * expanding-quantile formula runs down the matrix path on ONE slice
+/** One window arithmetic, three drivers: every rolling, ewm, expanding
+  * and cumulative/fill formula runs down the matrix path on ONE slice
   * (`spark.sql.shuffle.partitions = 1`: no partial merge), the driver-side
   * Series twin, and — where one exists — the keyed streaming twin fed in
   * three micro-batches, and all of them must agree bit for bit
   * (`doubleToLongBits`, so NaN is canonical; a streaming `None` reads NaN).
-  * The inputs carry holes, a −0.0 cell, ties, and (z) a hole run long
-  * enough to collapse the ewm mass at α = 0.5 (0.5^520 < 0.5·1e-150). */
+  * The inputs carry holes, a −0.0 cell, ties, (z) a hole run long enough
+  * to collapse the ewm mass at α = 0.5 (0.5^520 < 0.5·1e-150), and (1e9)
+  * the short series shifted by 1e9, where power sums cancel. */
 class TwinParitySpec extends SparkSpec {
 
   private val nan = Double.NaN
@@ -32,13 +33,14 @@ class TwinParitySpec extends SparkSpec {
   private type Frame = Seq[(String, IndexedSeq[Double])]
   private val short: Frame = Seq("c0" -> xs, "c1" -> ys)
   private val long: Frame = Seq("c0" -> zs)
+  private val offset: Frame = short.map { case (l, v) => l -> v.map(_ + 1e9) }
   private def swapped(fr: Frame): Frame = fr.map(_._1).zip(fr.map(_._2).reverse)
 
   /** Results are keyed (case, label); a case is the formula, tagged when
-    * it runs on the long frame. */
+    * it runs on the long or the offset frame. */
   private type Out = Map[(String, String), Seq[Double]]
   private def caseOf(f: String, fr: Frame): String =
-    if (fr eq long) s"$f [z]" else f
+    if (fr eq long) s"$f [z]" else if (fr eq offset) s"$f [1e9]" else f
 
   private val roll = "rolling(5, min_periods=2)"
   private val ewm1 = "ewm(alpha=0.5, min_periods=2)"
@@ -63,6 +65,14 @@ class TwinParitySpec extends SparkSpec {
       Seq(short, long).flatMap { fr =>
         (Seq("mean", "var", "std", "sum").map(m => s"s.$ewm1.$m()") ++
           Seq("mean", "var", "std").map(m => s"s.$ewm0.$m()")).map((_, fr))
+      } ++
+      Seq(short, offset).flatMap { fr =>
+        (Seq("cumsum", "cummax", "cummin", "cumprod").flatMap(m =>
+          Seq(s"s.$m()", s"s.$m(skipna=0)")) ++
+          Seq("s.ffill()", "s.bfill()", "s.interpolate()",
+            "s.expanding(3).mean()", "s.expanding(3).count()") ++
+          Seq("sum", "mean", "count", "min", "max", "var", "std", "sem")
+            .map(m => s"s.expanding().$m()")).map((_, fr))
       }
 
   private def matrixOf(fr: Frame): Matrix =
@@ -70,7 +80,7 @@ class TwinParitySpec extends SparkSpec {
 
   /** The matrix path on one slice. */
   private def matrixPath(): Out = {
-    val frames = Seq(short, long).map(fr =>
+    val frames = Seq(short, long, offset).map(fr =>
       fr -> ((matrixOf(fr), matrixOf(swapped(fr))))).toMap
     val conf = spark.conf
     val parts = conf.get("spark.sql.shuffle.partitions")
@@ -157,6 +167,13 @@ class TwinParitySpec extends SparkSpec {
     val eq = streamed("tp_expq", keyed(short).map(t =>
       EqRow(t._1, t._2, t._3)), (r: EqRow) => r.id)(
       StreamingOps.expandingQuantileStream(_, 0.5))
+    // α = 1: the mean is the `.ffill()` carry, as is the gap fill
+    val ew1 = streamed("tp_ewm1", keyed(short).map(t =>
+      EwRow(t._1, t._2, t._3)), (r: EwRow) => r.id)(
+      StreamingOps.ewmStream(_, 1.0))
+    val gf = streamed("tp_gapfill", keyed(short).map(t =>
+      GfRow(t._1, t._2, Some(t._3))), (r: GfRow) => r.id)(
+      StreamingOps.gapFillStream)
     val (ewShort, ewLong) = ew.partition(_.key <= 2)
     val ewFields = Seq[(String, EwOut => Double)](
       s"s.$ewm1.mean()" -> (_.mean), s"s.$ewm1.var()" -> (_.variance))
@@ -177,7 +194,12 @@ class TwinParitySpec extends SparkSpec {
       series(short, ec, (o: EwCovOut) => o.key, (o: EwCovOut) => o.id)(
         s"s.$ewm1.cov(o)" -> (_.cov), s"s.$ewm1.corr(o)" -> (_.corr)) ++
       series(short, eq, (o: EqOut) => o.key, (o: EqOut) => o.id)(
-        "s.expanding().median()" -> (_.quantile))
+        "s.expanding().median()" -> (_.quantile)) ++
+      series(short, ew1, (o: EwOut) => o.key, (o: EwOut) => o.id)(
+        "s.ewm(alpha=1).mean()" -> (_.mean)) ++
+      series(short, gf, (o: (Long, Long, Option[Double])) => o._1,
+        (o: (Long, Long, Option[Double])) => o._2)(
+        "s.ffill()" -> (o => opt(o._3)))
   }
 
   private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
@@ -187,7 +209,7 @@ class TwinParitySpec extends SparkSpec {
     val series = seriesPath()
     val stream = streamingPath()
     assert(series.keySet == matrix.keySet)
-    assert(stream.size == 28, stream.keySet)
+    assert(stream.size == 32, stream.keySet)
     val mismatches = for {
       (path, got) <- Seq("Series" -> series, "streaming" -> stream)
       (k, v) <- got.toSeq.sortBy(_._1)

@@ -27,7 +27,10 @@ import org.apache.spark.sql.types._
   *   4. freshness: a Spark overwrite of a parquet source is seen by the
   *      next shared-layout scan over a re-read of that path;
   *   5. the skeleton's one-partition-per-slice guard on the collected
-  *      partials.
+  *      partials;
+  *   6. the running scan's combine: every fold, forward and reversed,
+  *      emits the same bits on four slices as on one, equal to a
+  *      sequential fold, on integer-valued and decimal cells.
   */
 class SliceLayoutSpec extends SparkSpec {
 
@@ -160,7 +163,12 @@ class SliceLayoutSpec extends SparkSpec {
       "ewmScanRecursive" -> Prefix.ewmScanRecursive(df, d, "rid",
         col("rid"), names, 0.3, outs, "mean", 2),
       "runningQuantile" -> Prefix.runningQuantile(df, d, "rid", col("rid"),
-        names, 0.5, 0, outs, 1))
+        names, 0.5, 0, outs, 1),
+      "runningScan" -> Prefix.runningScan(df, d, "rid", col("rid"), names,
+        Seq(Prefix.RunKind.Sum, Prefix.RunKind.Last), outs),
+      "runningScan rev" -> Prefix.runningScan(df, d, "rid", col("rid"),
+        names, Seq(Prefix.RunKind.Max, Prefix.RunKind.Last), outs,
+        rev = true))
     import org.apache.spark.sql.execution.SparkPlan
     // find the MapPartitions emitter and walk its subtree: it must reach
     // an InMemoryTableScan without crossing a shuffle exchange
@@ -268,5 +276,92 @@ class SliceLayoutSpec extends SparkSpec {
     assert(dup.getMessage.contains("two partitions"))
     intercept[IllegalStateException](
       Prefix.slicePartials[Double](Array(Row(4, Seq(1.0))), 4))
+  }
+
+  test("runningScan: every fold, forward and reversed, emits the same " +
+      "bits on 4 slices as on 1, equal to the sequential fold") {
+    import Prefix.RunKind._
+    val n = 3000
+    val rnd = new scala.util.Random(7)
+    // integer-valued doubles, ±1/2 factors (exact products) and decimals,
+    // each with one hole in six
+    val rows = (0 until n).map { i =>
+      def hole = rnd.nextInt(6) == 0
+      Row(i.toLong,
+        if (hole) null else Double.box(rnd.nextInt(201) - 100),
+        if (hole) null
+        else Double.box(if (i % 97 == 0) 2.0 else if (rnd.nextBoolean()) 1.0
+                        else -1.0),
+        if (hole) null
+        else java.math.BigDecimal.valueOf(rnd.nextInt(20001) - 10000L, 2))
+    }
+    val df = spark.createDataFrame(
+      new java.util.ArrayList[Row](
+        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
+      StructType(Seq(StructField("rid", LongType, nullable = false),
+        StructField("x", DoubleType), StructField("p", DoubleType),
+        StructField("d", DecimalType(12, 2)))))
+      .repartition(5)
+    val specs = Seq("x" -> Sum, "x" -> Max, "x" -> Min, "p" -> Prod,
+      "x" -> Last, "d" -> Sum, "d" -> Max, "d" -> Min, "d" -> Last)
+    val ins = specs.indices.map(i => s"i$i")
+    val outs = ins.map(_ + "_o")
+    val gaps = specs.zip(outs).collect { case ((_, Last), o) => o + "_gap" }
+    def cell(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case other => other
+    }
+    def scanned(parts: Int, rev: Boolean): Seq[Seq[Any]] = {
+      val saved = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      try Prefix.runningScan(df, specs.zip(ins).map { case ((c, _), i) =>
+          col(c).as(i) }, "rid", col("rid"), ins, specs.map(_._2), outs,
+          rev = rev)
+        .orderBy("rid").select((outs ++ gaps).map(col): _*).collect()
+        .map(_.toSeq.map(cell)).toSeq
+      finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
+    // the sequential fold, row by row in stream order
+    def sequential(rev: Boolean): Seq[Seq[Any]] = {
+      val acc = new Array[Any](specs.length)
+      val gap = new Array[Long](specs.length)
+      val order = if (rev) rows.reverse else rows
+      val out = order.map { r =>
+        specs.indices.foreach { j =>
+          val (c, k) = specs(j)
+          val v = r.get(Seq("x", "p", "d").indexOf(c) + 1)
+          if (v == null) gap(j) += 1
+          else {
+            gap(j) = 0
+            acc(j) = if (acc(j) == null || k == Last) v else (acc(j), v) match {
+              case (a: Double, b: Double) => k match {
+                case Sum => a + b; case Prod => a * b
+                case Max => if (b > a) b else a; case _ => if (b < a) b else a
+              }
+              case (a: java.math.BigDecimal, b: java.math.BigDecimal) =>
+                k match {
+                  case Sum => a.add(b)
+                  case Max => if (b.compareTo(a) > 0) b else a
+                  case _ => if (b.compareTo(a) < 0) b else a
+                }
+              case other => fail(s"unexpected cells $other")
+            }
+          }
+        }
+        (acc.toSeq ++ specs.indices.collect { case j if specs(j)._2 == Last =>
+          if (acc(j) == null) null else Double.box(gap(j).toDouble) })
+          .map(cell)
+      }
+      if (rev) out.reverse else out
+    }
+    for (rev <- Seq(false, true)) {
+      val (four, one) = (scanned(4, rev), scanned(1, rev))
+      val want = sequential(rev)
+      assert(four.length == n)
+      for ((got, name) <- Seq(four -> "4 slices", one -> "1 slice")) {
+        got.indices.find(i => got(i) != want(i)).foreach(i =>
+          fail(s"rev=$rev $name: row $i: got ${got(i)}, sequential ${want(i)}"))
+      }
+    }
   }
 }

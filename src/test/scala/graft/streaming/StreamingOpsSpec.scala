@@ -1026,4 +1026,31 @@ class StreamingOpsSpec extends SparkSpec {
       assert(math.abs(got(5L) - 4.768971332209106) < 1e-12)
     } finally q.stop()
   }
+
+  test("streaming ewm at alpha = 1 carries the last valid value, as the " +
+      "batch .ffill() does") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import StreamingOps.EwRow
+    val in = MemoryStream[EwRow]
+    val q = StreamingOps.ewmStream(in.toDS(), alpha = 1.0)
+      .toDF("key", "id", "mean", "variance")
+      .writeStream.format("memory").queryName("ew1_out")
+      .outputMode("append").start()
+    try {
+      // the recurrence reads 0·inf = NaN at the second cell; the carry
+      // reads the cell itself, across the micro-batch boundary too
+      in.addData(EwRow(1L, 0L, Double.PositiveInfinity), EwRow(1L, 1L, 1.0))
+      q.processAllAvailable()
+      in.addData(EwRow(1L, 2L, Double.NaN), EwRow(1L, 3L, 3.0))
+      q.processAllAvailable()
+      val got = spark.table("ew1_out").collect()
+        .map(r => r.getLong(1) -> r.getDouble(2)).toMap
+      assert(got(0L) == Double.PositiveInfinity)
+      assert(got(1L) == 1.0)
+      assert(got(2L) == 1.0)
+      assert(got(3L) == 3.0)
+    } finally q.stop()
+  }
 }
