@@ -52,13 +52,14 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
   private val std = !mode.adpEnabled
   private val ubp = mode.ubp
 
-  /** Column count above which `.rank()` switches from per-column
-    * value-equality joins to the single stacked (column-index, value)
-    * join. Per-column joins are fine at formula-typical widths (AQE
-    * broadcasts the tiny rank tables) but each Dataset.join re-resolves a
-    * self-join over a tree containing all previous joins — analysis cost
-    * explodes combinatorially (PROBE_r7.json: 50 columns never finished;
-    * the stacked plan compiles in constant node count at any width). */
+  /** Column count above which the over-budget `.rank()` fallback switches
+    * from per-column value-equality joins to the single stacked
+    * (column-index, value) join. Per-column joins are fine at
+    * formula-typical widths (AQE broadcasts the tiny rank tables) but each
+    * Dataset.join re-resolves a self-join over a tree containing all
+    * previous joins — analysis cost explodes combinatorially
+    * (PROBE_r7.json: 50 columns never finished; the stacked plan compiles
+    * in constant node count at any width). */
   private val WideRankThreshold = 16
 
   // ---- compile-time values ------------------------------------------------
@@ -616,6 +617,87 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           "pct=, na_option=, axis=)")
     }
     (meth, asc, pct, naOpt)
+  }
+
+  /** The count-map `.rank()` (every method but the positional 'first'):
+    * ONE bounded collect of the stacked (column, key) value counts — the
+    * NULL class included, which yields the row count — then each
+    * column's sorted distinct keys, exact Long prefix sums and final
+    * double ranks on the driver, applied as a pure lookup projection
+    * ([[graft.functions.RankLookup]]): no join and no shuffle in the
+    * result plan at any width. The rank expressions are the fallback's,
+    * term for term, so the bits agree. None — run the fallback — when a
+    * key is not DoubleType or a column holds more than
+    * `graft.percentile.approxAboveDistinct` distinct valid keys (the
+    * [[graft.operators.Prefix.runningQuantile]] budget; the collect
+    * brings at most width·(budget+1)+1 rows, and more than
+    * width·(budget+1) proves by pigeonhole that some column is over). */
+  private def rankCountMap(base: DataFrame, cols: Seq[(String, Column)],
+                           keys: Seq[Column], meth: String, pct: Boolean,
+                           naOpt: String): Option[Seq[(String, Column)]] = {
+    val stacked = base.select(posexplode(array(keys: _*))
+      .as(Seq("__ci", "__v")))
+    if (stacked.schema("__v").dataType != org.apache.spark.sql.types.DoubleType)
+      return None
+    val budget = base.sparkSession.conf
+      .getOption("graft.percentile.approxAboveDistinct")
+      .map(_.toInt).getOrElse(16384)
+    val cap = cols.length.toLong * (budget + 1)
+    val rows = stacked.groupBy(col("__ci"), col("__v")).count()
+      .limit((cap + 1).min(Int.MaxValue).toInt).collect()
+    if (rows.length > cap) return None
+    val byCol = rows.groupBy(_.getInt(0))
+    // every base row stacks one key per column, so any column's counts
+    // (its NULL class included) sum to the row count
+    val nRows = byCol.headOption.map(_._2.map(_.getLong(2)).sum).getOrElse(0L)
+    val perCol = cols.indices.map { i =>
+      byCol.getOrElse(i, Array.empty).filterNot(_.isNullAt(1))
+        .map(r => (r.getDouble(1) + 0.0, r.getLong(2)))
+        .sortBy(_._1)(Ordering.Double.TotalOrdering)
+    }
+    if (perCol.exists(_.length > budget)) return None
+    val na = naOpt != "keep"
+    Some(cols.zip(keys).zip(perCol).map { case (((lbl, c), key), kc) =>
+      val tot = kc.iterator.map(_._2).sum
+      val dtot = kc.length.toLong
+      // na_option: the NaN class is the rows with no valid key
+      val totD = tot.toDouble
+      val nan = nRows.toDouble - totD
+      val hasNan = if (nan > 0) 1.0 else 0.0
+      val shift =
+        if (naOpt != "top") 0.0 else if (meth == "dense") hasNan else nan
+      val denom =
+        if (!na) (if (meth == "dense") dtot else tot).toDouble
+        else if (meth == "dense") dtot.toDouble + hasNan
+        else nRows.toDouble
+      def fin(x: Double) = if (pct) x / denom else x
+      var cum = 0L
+      val ranks = kc.zipWithIndex.map { case ((_, n), j) =>
+        cum += n
+        val raw = meth match {
+          case "min"   => (cum - n + 1L).toDouble
+          case "max"   => cum.toDouble
+          case "dense" => (j + 1L).toDouble
+          case _       => (cum - n).toDouble + (n.toDouble + 1.0) / 2.0
+        }
+        fin(if (na) raw + shift else raw)
+      }
+      val look = graft.functions.ArrayOps.rank_lookup(key,
+        kc.map(_._1), ranks)
+      if (!na) (lbl, when(isnan(c), c).otherwise(look))
+      else {
+        val nanRank = (naOpt, meth) match {
+          case ("top", "average") => (nan + 1.0) / 2.0
+          case ("top", "max")     => nan
+          case ("top", _)         => 1.0 // min, dense
+          case (_, "average")     => totD + (nan + 1.0) / 2.0
+          case (_, "min")         => totD + 1.0
+          case (_, "max")         => totD + nan
+          case _                  => dtot.toDouble + 1.0 // dense
+        }
+        (lbl, when(invalidOf(c), lit(fin(nanRank))).otherwise(look))
+      }
+    })
   }
 
   /** (q, interpolation code) from `.rolling(n).quantile(q, ...)`'s args
@@ -1755,29 +1837,34 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           else r(0)
         }, ls)
 
-      // `.rank(...)` (E11 long tail): pandas column-wise rank — r11 adds
-      // the full keyword surface (method='average'/'min'/'max'/'first'/
-      // 'dense', ascending=0, pct=1; NaN excluded and returned as NaN).
-      // Value-based, so it compiles to grouped VALUE counts instead of a
-      // value-ordered global window (the txt_quantile/cln_winsor pattern):
-      // per column, distinct (value, count) pairs — bounded by the distinct
-      // cell values, never the row count — get their exclusive
-      // smaller-value totals from the distributed prefix
-      // ([[graft.operators.Prefix.runningAgg]]); every method except
-      // 'first' is a closed form of that same scan state
-      // (avg = #smaller + (n+1)/2, min = #smaller + 1, max = inclusive
-      // cum, dense = running distinct index), joined back on value
-      // equality (AQE broadcasts the small side). method='first' is the
-      // one POSITIONAL variant: rank = #smaller + tie position by
-      // original row order, where the tie position is a grouped
-      // distributed prefix of 1s over the row id within each
-      // (column, value) group — per-group equi-width slices over the
-      // row-id domain, so even an all-equal column parallelizes — and
-      // the row-keyed result joins back ONCE on the row id via the
-      // literal pivot (the wide-path shape). descending ranks are the
-      // ascending ranks of the NEGATED key (groupBy/join normalize −0.0
-      // to 0.0, so the key stays exact). Deterministic: no arbitrary-
-      // order dependence, no single-partition window anywhere.
+      // `.rank(...)` (E11 long tail): pandas column-wise rank — the full
+      // keyword surface (method='average'/'min'/'max'/'first'/'dense',
+      // ascending=0, pct=1, na_option='keep'/'top'/'bottom'). Value-based,
+      // so it compiles to grouped VALUE counts, never a value-ordered
+      // global window. descending ranks are the ascending ranks of the
+      // NEGATED key (groupBy and the lookup normalize −0.0 to 0.0, so the
+      // key stays exact); NaN cells are the NULL key class.
+      //   - count map (every method but 'first', each column within the
+      //     `graft.percentile.approxAboveDistinct` budget — the
+      //     runningQuantile budget, default 16384): ONE bounded collect of
+      //     the (column, key) counts, the NULL class included; per column
+      //     the driver sorts the keys, takes exact Long prefix sums and
+      //     closes each method (avg = #smaller + (n+1)/2, min = #smaller +
+      //     1, max = inclusive cum, dense = distinct index), then the
+      //     na_option shift/NaN-class rank and the pct division, in the
+      //     fallback's expression order; the result is a pure projection
+      //     of compiled lookups (`rankCountMap`) — no join, no shuffle.
+      //   - fallback (over budget, or a non-double key): the counts get
+      //     their prefix from the distributed running aggregate
+      //     ([[graft.operators.Prefix.runningAgg]]) and join back on value
+      //     equality per column (one stacked pivot join past
+      //     WideRankThreshold columns), plus a 1-row stats crossJoin for
+      //     na_option.
+      //   - method='first' is the one POSITIONAL variant: rank = #smaller
+      //     + tie position by original row order, the tie position a
+      //     grouped distributed prefix of 1s over the row id within each
+      //     (column, value) group, the row-keyed result joined back ONCE
+      //     on the row id via the literal pivot.
       // rank(axis=1) (r11 session 4): the row-wise rank as a pure
       // projection over the bounded column list — per cell, the counts
       // of row-mates strictly better / equal close every pandas method:
@@ -1873,11 +1960,16 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           val cNull = when(isnan(c), lit(null)).otherwise(c)
           if (asc) cNull else -cNull
         }
-        // ONE stacked pass over all matrix columns: (column-index, value)
-        // pairs → grouped value counts → grouped distributed prefix
-        // (partitioned by column index) → per-column rank tables carved
-        // out of the SAME subtree, which AQE stage reuse executes once
         val base0 = ctx.base.get
+        val mapped = if (meth == "first") None
+          else rankCountMap(base0, cols, cols.map { case (_, c) => keyOf(c) },
+            meth, pct, naOpt)
+        if (mapped.isDefined) CMatrix(mapped.get, isBool = false) else {
+        // the fallback — ONE stacked pass over all matrix columns:
+        // (column-index, value) pairs → grouped value counts → grouped
+        // distributed prefix (partitioned by column index) → per-column
+        // rank tables carved out of the SAME subtree, which AQE stage
+        // reuse executes once
         val ridName = s"__rk${tag}_rid"
         val stacked = base0.select(col(ctx.rowIdOut).as(ridName),
             posexplode(array(cols.map { case (_, c) => keyOf(c) }: _*))
@@ -2070,6 +2162,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
               else (lbl, naCell(c, i, col(a), litOf(Double.NaN)))
           }
           CMatrix(out, isBool = false)
+        }
         }
         }
       case ("rank", CVecD(vs, ls), rargs) =>

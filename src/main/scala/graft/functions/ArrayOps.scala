@@ -656,6 +656,48 @@ case class QuantileBucket(first: Expression, second: Expression,
     copy(first = f, second = s, third = t, fourth = q)
 }
 
+/** The count-map `.rank()` of [[graft.compile.FormulaCompiler]]: the rank
+  * of the double key `child` read from `ranks`, parallel to the sorted
+  * distinct `keys` both collected at plan time — one compiled binary
+  * search per row. Keys are normalized (+0.0, no NaN), as the lookup
+  * normalizes its input. A key absent from `keys` means the input changed
+  * between the count collect and this projection (a non-deterministic
+  * source): it throws rather than emit a wrong rank. */
+case class RankLookup(child: Expression, keys: Array[Double],
+                      ranks: Array[Double])
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  require(keys.length == ranks.length, "keys and ranks must align")
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = child.nullable
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == DoubleType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"rank_lookup expects double, got ${child.dataType.simpleString}")
+
+  override def nullSafeEval(in: Any): Any = lookup(in.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("rankLookup", this)
+    defineCodeGen(ctx, ev, c => s"$ref.lookup($c)")
+  }
+
+  def lookup(k: Double): Double = {
+    val i = java.util.Arrays.binarySearch(keys, k + 0.0)
+    if (i < 0) throw new IllegalStateException(
+      s"rank_lookup: value $k is absent from the collected value counts — " +
+        "the input changed between the count collect and the projection " +
+        "(non-deterministic source?). Refusing to emit a wrong rank")
+    ranks(i)
+  }
+
+  override def toString: String = s"rank_lookup($child, ${keys.length} keys)"
+
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
 /** Engine-portable rolling hash of a string array (one compiled loop per
   * row; the HOF formulation evaluates md5 per element INTERPRETED, measured
   * ~70× slower). Per token: h = md5_60("0:" + token) % 2^20 (first 15 md5
@@ -1101,6 +1143,12 @@ object ArrayOps {
                       parts: Int): Column =
     GraftColumnBridge.column(
       QuantileBucket(expr(all), expr(ord), expr(v), expr(tie), parts))
+
+  /** The rank of a double key among sorted distinct `keys`, read from the
+    * parallel `ranks` (compiled binary search; see [[RankLookup]]). */
+  def rank_lookup(key: Column, keys: Array[Double],
+                  ranks: Array[Double]): Column =
+    GraftColumnBridge.column(RankLookup(expr(key), keys, ranks))
 
   /** 1-bit binary quantization: 32 sign bits of half `half` as a long. */
   def sign_pack32(emb: Column, half: Int): Column =

@@ -452,7 +452,9 @@ object Prefix {
     * would throw under ANSI.
     *
     * Callers: the paths with no unique key or a VALUE order — the
-    * compiler's rank family (value-count prefix, 'first' tie positions),
+    * compiler's `.rank(method='first')` (value-count prefix and tie
+    * positions) and the over-budget `.rank()` fallback (the count map
+    * serves every other rank within the distinct-value budget),
     * [[graft.plans.GlobalRowNumberRule]], [[Sampling.tokenBudget]],
     * grouped [[Packing.lengthBatches]], [[positionalLagJoin]] and the
     * rolling prefix-sum fallback past the ring bound. The row-order
@@ -2570,18 +2572,21 @@ object Prefix {
     * monoid (per-slice partials combine by vector add — trivially
     * Chan-mergeable), over the column's distinct valid values.
     *
-    * Plan (the [[ewmScan]] two-phase shape): (0) per column, collect the
-    * sorted distinct valid domain, HARD-BOUNDED by
-    * `graft.percentile.approxAboveDistinct` (default 16384 here) via a
-    * `limit(budget+1)` scan — above it the operator raises cleanly
-    * naming the conf (an interpolated order statistic cannot be both
-    * exact and sub-linear-state on an unbounded domain; round/bucket the
-    * values first — the cln_mad discipline); (1) one narrow pass over
-    * the slice layout emits each slice's SPARSE count partial — the
-    * layout holds every slice in exactly one partition, so the driver
-    * receives ≤ slices·Σd entries no matter how the input was
-    * partitioned, with no aggregate before the collect; (2) the driver
-    * broadcasts exactly those sparse partials per slice (r14 — the r13
+    * Plan (the [[ewmScan]] two-phase shape): (1) one narrow pass over
+    * the slice layout emits each slice's SPARSE (column, value, count)
+    * partial — the layout holds every slice in exactly one partition, so
+    * the driver receives ≤ slices·Σd entries no matter how the input was
+    * partitioned, with no aggregate before the collect. Each column's
+    * domain is HARD-BOUNDED by `graft.percentile.approxAboveDistinct`
+    * (default 16384 here; `.rank()`'s count map reads the same budget):
+    * a slice over it stops counting and reports the column, and the
+    * driver raises cleanly naming the conf, as it does when the union of
+    * the slices' values is over it (an interpolated order statistic
+    * cannot be both exact and sub-linear-state on an unbounded domain;
+    * round/bucket the values first — the cln_mad discipline). The driver
+    * sorts each column's union into its domain and maps the partials onto
+    * domain indices — no separate domain job; (2) the driver broadcasts
+    * exactly those sparse partials per slice (r14 — the r13
     * dense combine materialized one Array[Long](d) snapshot PER SLICE on
     * the driver and broadcast the whole map, O(slices·Σd) longs on the
     * driver and every executor, and slice count grows linearly with
@@ -2615,95 +2620,76 @@ object Prefix {
       Some("runningQuantile"))
     val spark = base.sparkSession
     val parts = scan.parts
-    val sliced = scan.sliced
     val budget = spark.conf.getOption("graft.percentile.approxAboveDistinct")
       .map(_.toInt).getOrElse(16384)
 
-    // ---- phase 0: bounded sorted domains (normalize -0.0 → 0.0 so the
-    // emit's binary search and the distinct's grouping agree), scanned
-    // from the layout — the derived value columns exist only above it.
-    // r15 (guide §1.2 — fewer passes): ONE distinct job over exploded
-    // (column idx, value) pairs instead of one job PER COLUMN — the
-    // per-column loop paid width × the job floor (each distinct+limit is
-    // 2–3 AQE stage-jobs) for the same scan. The driver collect stays
-    // bounded: ≤ width·budget + 1 rows; exceeding that cap proves
-    // (pigeonhole) some column exceeds the budget, and the rare failure
-    // path re-runs the per-column scan to name it. ----
+    // ---- phase 1: one sparse count partial per slice — flattened
+    // (column, value bits, count) triples, values normalized -0.0 → 0.0
+    // so the driver's domains and the emit's binary search agree. Counts
+    // carry as Long end-to-end: a single value occurring > 2^31 times must
+    // not wrap the Fenwick seed, the quantile rank, or the min_periods
+    // gate. A slice with more than `budget` distinct values in a column
+    // stops counting and reports the column as one (j, 0, −1) triple, so
+    // the partial's state stays budget-bounded and the driver raises. ----
     val width = inNames.length
-    val vexprs = inNames.map(nm => col(nm) + lit(0.0))
-    val pairRows = sliced
-      .select(posexplode(array(vexprs: _*)).as(Seq("j", "v")))
-      .where(col("v").isNotNull && !isnan(col("v")))
-      .distinct().limit(width * budget + 1).collect()
     def domainOverflow(nm: String): Nothing = throw new IllegalArgumentException(
       s"'.expanding().quantile()' needs a bounded value domain: column " +
         s"'$nm' exceeds $budget distinct values " +
         s"(graft.percentile.approxAboveDistinct). An exact interpolated " +
         "running order statistic over an unbounded domain has no bounded " +
         "state — round or bucket the values first")
-    if (pairRows.length > width.toLong * budget) {
-      // some column is over budget — name the offender (failure path only)
-      inNames.foreach { nm =>
-        val n = sliced.select((col(nm) + lit(0.0)).as("v"))
-          .where(!isnan(col("v"))).distinct().limit(budget + 1).count()
-        if (n > budget) domainOverflow(nm)
-      }
-      domainOverflow(inNames.mkString(","))
-    }
-    val pairsByJ = pairRows.groupBy(_.getInt(0))
-    val domains: Array[Array[Double]] = inNames.indices.map { j =>
-      val a = pairsByJ.getOrElse(j, Array.empty[Row]).map(_.getDouble(1))
-      if (a.length > budget) domainOverflow(inNames(j))
-      java.util.Arrays.sort(a)
-      a
-    }.toArray
-    val offs = domains.scanLeft(0)(_ + _.length)
-    val minp = math.max(minPeriods, 1)
-    val bDomains = spark.sparkContext.broadcast(domains)
-
-    // ---- phase 1: one sparse count partial per slice, flattened
-    // (domain idx, count) pairs. Counts carry as Long end-to-end: a
-    // single value occurring > 2^31 times must not wrap the Fenwick
-    // seed, the quantile rank, or the min_periods gate. A binary-search
-    // MISS against the phase-0 domain is an invariant violation (the
-    // domain scan is a separate earlier action; a non-deterministic
-    // source recomputed between the two actions would otherwise yield
-    // silently wrong quantiles) — fail loudly instead of undercounting.
-    val totalD = offs.last
     val byPid = scan.partials[Long](LongType) { () =>
       new SlicePartial {
-        private val doms = bDomains.value
-        private val counts = scala.collection.mutable.HashMap.empty[Int, Long]
+        private val counts =
+          Array.fill(width)(scala.collection.mutable.HashMap.empty[Double, Long])
+        private var over = -1
         def step(r: Row): Unit = {
           var j = 0
-          while (j < width) {
+          while (j < width && over < 0) {
             if (!r.isNullAt(1 + j)) {
               val v = r.getDouble(1 + j) + 0.0
               if (!v.isNaN) {
-                val idx = java.util.Arrays.binarySearch(doms(j), v)
-                if (idx < 0) throw new IllegalStateException(
-                  s"runningQuantile: value $v (input column #$j) is absent " +
-                    "from the phase-0 sorted domain — the input changed " +
-                    "between the domain scan and the counting pass " +
-                    "(non-deterministic source?). Refusing to emit silently " +
-                    "wrong quantiles")
-                val flat = offs(j) + idx
-                counts.update(flat, counts.getOrElse(flat, 0L) + 1L)
+                val m = counts(j)
+                m.update(v, m.getOrElse(v, 0L) + 1L)
+                if (m.size > budget) over = j
               }
             }
             j += 1
           }
         }
         def result: Seq[Any] =
-          counts.iterator.flatMap { case (i, c) => Iterator(i.toLong, c) }
-            .toSeq
+          if (over >= 0) Seq(over.toLong, 0L, -1L)
+          else counts.indices.iterator.flatMap { j =>
+            counts(j).iterator.flatMap { case (v, c) =>
+              Iterator(j.toLong, java.lang.Double.doubleToRawLongBits(v), c)
+            }
+          }.toSeq
       }
     }
+    // ---- driver: the sorted per-column domains are the union of the
+    // slices' reported values; the partials map onto domain indices ----
+    val triples = byPid.map { case (pid, p) =>
+      pid -> p.grouped(3).map(t => (t(0).toInt,
+        java.lang.Double.longBitsToDouble(t(1)), t(2))).toArray
+    }
+    triples.valuesIterator.flatten.find(_._3 < 0)
+      .foreach(t => domainOverflow(inNames(t._1)))
+    val domains: Array[Array[Double]] = Array.tabulate(width) { j =>
+      val a = triples.valuesIterator.flatMap(_.iterator.collect {
+        case (`j`, v, _) => v }).toArray.distinct
+      if (a.length > budget) domainOverflow(inNames(j))
+      java.util.Arrays.sort(a)
+      a
+    }
+    val offs = domains.scanLeft(0)(_ + _.length)
+    val minp = math.max(minPeriods, 1)
+    val bDomains = spark.sparkContext.broadcast(domains)
+    val totalD = offs.last
     // combine bound, observable by specs: ≤ slices × d entries reach the
     // driver. An explicit throw, NOT a Scala assert: -Xdisable-assertions
     // builds must never silently disarm a scale invariant (r13 verdict;
     // the domain-miss checks set the pattern).
-    val entries = byPid.valuesIterator.map(_.length / 2).sum
+    val entries = triples.valuesIterator.map(_.length).sum
     lastQuantilePartialRows = entries
     if (entries > parts * totalD) throw new IllegalStateException(
       s"runningQuantile partials combine failed its bound: " +
@@ -2721,10 +2707,10 @@ object Prefix {
     // partials) everywhere.
     val incIdx = Array.fill(parts)(Array.emptyIntArray)
     val incCnt = Array.fill(parts)(Array.emptyLongArray)
-    byPid.foreach { case (pid, ps) =>
-      val p = ps.toArray
-      incIdx(pid) = Array.tabulate(p.length / 2)(t => p(2 * t).toInt)
-      incCnt(pid) = Array.tabulate(p.length / 2)(t => p(2 * t + 1))
+    triples.foreach { case (pid, ts) =>
+      incIdx(pid) = ts.map { case (j, v, _) =>
+        offs(j) + java.util.Arrays.binarySearch(domains(j), v) }
+      incCnt(pid) = ts.map(_._3)
     }
     lastQuantileBroadcastEntries = incIdx.map(_.length.toLong).sum
     val bIncoming = spark.sparkContext.broadcast((incIdx, incCnt))
@@ -2772,7 +2758,7 @@ object Prefix {
                 val idx = java.util.Arrays.binarySearch(doms(j), v)
                 if (idx < 0) throw new IllegalStateException(
                   s"runningQuantile: value $v (input column #$j) is absent " +
-                    "from the phase-0 sorted domain at emit — the input " +
+                    "from the slices' collected domain at emit — the input " +
                     "changed between actions (non-deterministic source?). " +
                     "Refusing to emit silently wrong quantiles")
                 fen.add(idx)

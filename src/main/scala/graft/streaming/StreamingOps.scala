@@ -290,12 +290,14 @@ object StreamingOps extends Serializable {
   }
 
   case class AnRow(key: Long, id: Long, value: Double)
-  case class AnState(n: Long, sum: Double, sumSq: Double)
+  /** Welford state: count, running mean, sum of squared deviations. */
+  case class AnState(n: Long, mean: Double, m2: Double)
   case class Anomaly(key: Long, id: Long, value: Double, zscore: Double)
 
-  /** Streaming per-key z-score anomaly gate: maintain running
-    * (count, sum, sum-of-squares) per key and emit rows that sit more than
-    * `z` standard deviations from the key's mean AS OF the rows already
+  /** Streaming per-key z-score anomaly gate: maintain a running Welford
+    * (count, mean, M2) per key — centered, so a large offset cannot cancel
+    * the variance the way raw power sums did — and emit rows that sit more
+    * than `z` standard deviations from the key's mean AS OF the rows already
     * seen (the prior-window convention — the incoming row is scored
     * against history, then folded in, so a single spike cannot dilute the
     * very statistics that should flag it). State is three numbers per key
@@ -316,14 +318,16 @@ object StreamingOps extends Serializable {
       val out = scala.collection.mutable.ListBuffer[Anomaly]()
       in.foreach { r =>
         if (st.n >= minN) {
-          val mean = st.sum / st.n
-          val variance = st.sumSq / st.n - mean * mean
+          val variance = st.m2 / st.n
           if (variance > 0) {
-            val zs = (r.value - mean) / math.sqrt(variance)
+            val zs = (r.value - st.mean) / math.sqrt(variance)
             if (math.abs(zs) > z) out += Anomaly(key, r.id, r.value, zs)
           }
         }
-        st = AnState(st.n + 1, st.sum + r.value, st.sumSq + r.value * r.value)
+        val n = st.n + 1
+        val d = r.value - st.mean
+        val mean = st.mean + d / n
+        st = AnState(n, mean, st.m2 + d * (r.value - mean))
       }
       state.update(st)
       out.iterator

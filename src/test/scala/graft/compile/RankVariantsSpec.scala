@@ -241,6 +241,70 @@ class RankVariantsSpec extends SparkSpec {
     }
   }
 
+  test("count-map rank equals the distributed fallback bit for bit: every " +
+      "method × ascending × pct × na_option on an 18-column matrix with " +
+      "ties, NaN, NULL, −0.0, ±inf and an all-NaN column") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(808)
+    val width = 18
+    val special = IndexedSeq[java.lang.Double](0.0, -0.0,
+      Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN, null,
+      1.5, -0.0, Double.PositiveInfinity, 1.5, -2.0)
+    val labels = (0 until width).map(j => s"c$j")
+    val data = (0 until 40).map { i =>
+      val cells: Seq[Any] = (0 until width).map {
+        case 0 => special(i % special.length)
+        case 1 => Double.NaN
+        case 2 => if (i % 4 == 0) null else java.lang.Double.valueOf(i % 3 - 1.0)
+        case _ =>
+          if (rnd.nextDouble() < 0.15) Double.NaN
+          else rnd.nextInt(5) - 2.0
+      }
+      Row.fromSeq(i.toLong +: cells)
+    }
+    val schema = StructType(StructField("__row_id__", LongType) +:
+      labels.map(StructField(_, DoubleType)))
+    val m = Matrix.of(spark.createDataFrame(
+      spark.sparkContext.parallelize(data, 3), schema), "__row_id__", labels)
+    // the reference reads NULL as NaN and −0.0 as 0.0 (its `distinct`
+    // would keep both zeros)
+    val inputs = labels.indices.map(j => data.map(r =>
+      if (r.isNullAt(1 + j)) Double.NaN else r.getDouble(1 + j) + 0.0))
+    // (cells per row in row-id order as Option[bits] — NULL is None —
+    // and whether the optimized plan holds a join)
+    def run(f: String): (Seq[Seq[Option[Long]]], Boolean) = {
+      val MatrixResult(df, rowId, ls, _) =
+        new FormulaEvaluator(reg("s" -> m)).evaluateFormula(f): @unchecked
+      val rows = df.collect().toSeq.sortBy(_.getAs[Long](rowId)).map(r =>
+        ls.map { l =>
+          val k = r.fieldIndex(l)
+          if (r.isNullAt(k)) None
+          else Some(java.lang.Double.doubleToLongBits(r.getDouble(k)))
+        })
+      (rows, df.queryExecution.optimizedPlan.collect { case j: Join => j }
+        .nonEmpty)
+    }
+    for (meth <- Seq("average", "min", "max", "dense");
+         asc <- Seq(true, false); pct <- Seq(false, true);
+         naOpt <- Seq("keep", "top", "bottom")) {
+      val f = s"s.rank(method='$meth', ascending=${if (asc) 1 else 0}, " +
+        s"pct=${if (pct) 1 else 0}, na_option='$naOpt')"
+      val (mapped, mapJoin) = run(f)
+      spark.conf.set("graft.percentile.approxAboveDistinct", "1")
+      val (fallback, fbJoin) =
+        try run(f) finally spark.conf.unset("graft.percentile.approxAboveDistinct")
+      assert(!mapJoin, s"$f: the count-map plan holds a join")
+      assert(fbJoin, s"$f: a budget of 1 must force the joined fallback")
+      assert(mapped == fallback, s"$f: count map and fallback differ")
+      labels.indices.foreach { j =>
+        assertSeq(mapped.map(_(j).fold(Double.NaN)(java.lang.Double.longBitsToDouble)),
+          refRank(inputs(j), meth, asc, pct, naOpt))
+      }
+    }
+  }
+
   test("vector path mirrors every variant") {
     import graft.model.Vec
     val vs = IndexedSeq(3.0, 1.0, 3.0, Double.NaN, 2.0, 3.0, 1.0)

@@ -6,12 +6,14 @@ import graft.SparkSpec
 import graft.api.FormulaEvaluator
 import graft.model.Matrix
 
-/** The wide-matrix `.rank()` path: above [[FormulaCompiler]]'s width
-  * threshold the per-column value-equality joins are re-planned as ONE
-  * stacked (column-index, value) join + pivot-back (PROBE_r7: the
-  * per-column joins never finished ANALYSIS at 50 columns — each
-  * Dataset.join re-resolves a self-join over all previous ones). Values
-  * here are checked against a driver-computed pandas average rank. */
+/** The wide-matrix `.rank()` paths. Within the distinct-value budget the
+  * count map is a join-free lookup projection at any width. Over it, the
+  * fallback re-plans the per-column value-equality joins above
+  * [[FormulaCompiler]]'s width threshold as ONE stacked (column-index,
+  * value) join + pivot-back (PROBE_r7: the per-column joins never
+  * finished ANALYSIS at 50 columns — each Dataset.join re-resolves a
+  * self-join over all previous ones). Each test runs both paths; values
+  * are checked against a driver-computed pandas average rank. */
 class WideRankSpec extends SparkSpec {
 
   private val nRows = 40
@@ -35,6 +37,15 @@ class WideRankSpec extends SparkSpec {
     Matrix.of(df, "__row_id__", labels)
   }
 
+  /** Runs `body` on the count map (`fallback` = false, the default
+    * budget) and on the joined fallback (a budget of 1 forces it). */
+  private def bothPaths(body: Boolean => Unit): Unit = {
+    body(false)
+    spark.conf.set("graft.percentile.approxAboveDistinct", "1")
+    try body(true)
+    finally spark.conf.unset("graft.percentile.approxAboveDistinct")
+  }
+
   /** pandas method='average' ascending rank, NaN excluded and kept NaN */
   private def driverRank(col: Seq[Double]): Seq[Double] = {
     val ok = col.filter(!_.isNaN).sorted
@@ -45,15 +56,17 @@ class WideRankSpec extends SparkSpec {
   }
 
   test("wide .rank() matches the driver-computed average rank, with NaN") {
-    val ev = new FormulaEvaluator(reg("m" -> wideMatrix), fillInvalid = false)
-    val MatrixResult(df, rowId, labels, _) =
-      ev.evaluateFormula("m.rank()"): @unchecked
-    assert(labels.size == nCols)
-    val got = cells(df, rowId, labels)
-    for (c <- 0 until nCols) {
-      val expect = driverRank((0 until nRows).map(r => cell(r, c)))
-      for (r <- 0 until nRows)
-        assertCell(got(r.toLong)(s"c$c"), expect(r))
+    bothPaths { _ =>
+      val ev = new FormulaEvaluator(reg("m" -> wideMatrix), fillInvalid = false)
+      val MatrixResult(df, rowId, labels, _) =
+        ev.evaluateFormula("m.rank()"): @unchecked
+      assert(labels.size == nCols)
+      val got = cells(df, rowId, labels)
+      for (c <- 0 until nCols) {
+        val expect = driverRank((0 until nRows).map(r => cell(r, c)))
+        for (r <- 0 until nRows)
+          assertCell(got(r.toLong)(s"c$c"), expect(r))
+      }
     }
   }
 
@@ -70,24 +83,30 @@ class WideRankSpec extends SparkSpec {
     val df = spark.createDataFrame(
       new java.util.ArrayList[Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(data).asJava), schema)
-    val ev = new FormulaEvaluator(
-      reg("m" -> Matrix.of(df, "__row_id__", labels)), fillInvalid = false)
-    val MatrixResult(res, rowId, outLabels, _) =
-      ev.evaluateFormula("m.rank()"): @unchecked
-    val got = cells(res, rowId, outLabels)
-    assert(outLabels.forall(l => got(3L)(l).isNaN), "all-NaN row must stay NaN")
-    assert(got(0L)("c0") == 1.0) // sanity: other rows still ranked
+    bothPaths { _ =>
+      val ev = new FormulaEvaluator(
+        reg("m" -> Matrix.of(df, "__row_id__", labels)), fillInvalid = false)
+      val MatrixResult(res, rowId, outLabels, _) =
+        ev.evaluateFormula("m.rank()"): @unchecked
+      val got = cells(res, rowId, outLabels)
+      assert(outLabels.forall(l => got(3L)(l).isNaN), "all-NaN row must stay NaN")
+      assert(got(0L)("c0") == 1.0) // sanity: other rows still ranked
+    }
   }
 
   test("wide .rank() compiles in bounded time and plan size") {
-    val ev = new FormulaEvaluator(reg("m" -> wideMatrix), fillInvalid = false)
-    val t0 = System.nanoTime()
-    val MatrixResult(df, _, _, _) = ev.evaluateRaw("m.rank()"): @unchecked
-    val plan = df.queryExecution.executedPlan.toString
-    val secs = (System.nanoTime() - t0) / 1e9
-    assert(secs < 60.0, s"wide rank took ${secs}s to compile+plan")
-    // exactly TWO joins at any width: stack⋈rank-tables, pivot⋈base
-    val joins = "(?i)join".r.findAllIn(plan).size
-    assert(plan.nonEmpty && joins > 0)
+    bothPaths { fallback =>
+      val ev = new FormulaEvaluator(reg("m" -> wideMatrix), fillInvalid = false)
+      val t0 = System.nanoTime()
+      val MatrixResult(df, _, _, _) = ev.evaluateRaw("m.rank()"): @unchecked
+      val plan = df.queryExecution.executedPlan.toString
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(secs < 60.0, s"wide rank took ${secs}s to compile+plan")
+      // the fallback: exactly TWO joins at any width (stack⋈rank-tables,
+      // pivot⋈base); the count map: none
+      val joins = "(?i)join".r.findAllIn(plan).size
+      if (fallback) assert(plan.nonEmpty && joins > 0)
+      else assert(plan.nonEmpty && joins == 0, plan)
+    }
   }
 }

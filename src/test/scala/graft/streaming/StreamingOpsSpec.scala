@@ -711,6 +711,35 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming anomaly gate keeps its variance at a large offset " +
+      "(Welford state)") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // ten values cycling 0, 1, 2 (mean 0.9, population variance 0.69),
+    // then a spike at +10: z = 9.1 / √0.69 ≈ 10.955 at any offset — raw
+    // power sums cancel every digit of the variance at 1e9
+    for ((offset, name) <- Seq((0.0, "an_off0"), (1e9, "an_off9"))) {
+      val in = MemoryStream[StreamingOps.AnRow]
+      val q = StreamingOps.anomalyStream(in.toDS(), z = 2.0, minN = 10)
+        .toDF("key", "id", "value", "zscore")
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try {
+        in.addData((0 until 10).map(i =>
+          StreamingOps.AnRow(1L, i.toLong, offset + i % 3)): _*)
+        q.processAllAvailable()
+        in.addData(StreamingOps.AnRow(1L, 10L, offset + 10.0))
+        q.processAllAvailable()
+        val got = spark.table(name).collect()
+          .map(r => (r.getLong(1), r.getDouble(3))).toSeq
+        assert(got.map(_._1) == Seq(10L), s"offset $offset: $got")
+        assert(math.abs(got.head._2 - 9.1 / math.sqrt(0.69)) < 1e-4,
+          s"offset $offset: z = ${got.head._2}")
+      } finally q.stop()
+    }
+  }
+
   test("streaming PSI equals batch psiDrift on an identical window slice") {
     val spark2 = spark
     import spark2.implicits._
