@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ast._
 import graft.functions.BigDec
 import graft.model._
-import graft.operators.Prefix.{RunKernel, RunKind}
+import graft.operators.Prefix.{EwmStat, Fuse, RunKernel, RunKind}
 
 /** Thrown when a formula references a name absent from the registry; the
   * analogue of the reference's decorated KeyError (coeff_maker.py:778-783). */
@@ -707,11 +707,10 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
   private val interpCodes = Map("linear" -> 0, "lower" -> 1, "higher" -> 2,
     "nearest" -> 3, "midpoint" -> 4)
 
-  /** `.rolling(n).rank(...)` options packed for the winrank emit (r11):
-    * method·4 + ascending·2 + pct. pandas rolling.rank supports exactly
-    * average/min/max (no dense/first — there is no stable positional
-    * identity inside a sliding window). */
-  private def rollingRankCode(args: List[CValue]): Int = {
+  /** `.rolling(n).rank(...)`'s window emit (r11). pandas rolling.rank
+    * supports exactly average/min/max (no dense/first — there is no
+    * stable positional identity inside a sliding window). */
+  private def rollingRank(args: List[CValue]): Fuse.Rank = {
     val (meth, asc, pct, naOpt) = rankArgs(args)
     // pandas Rolling.rank has no na_option parameter at all
     if (naOpt != "keep") throw new FormulaTypeException(
@@ -723,7 +722,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         s"'.rolling(n).rank(method='$other')' — pandas rolling.rank " +
           "supports 'average', 'min', 'max'")
     }
-    mc * 4 + (if (asc) 2 else 0) + (if (pct) 1 else 0)
+    Fuse.Rank(mc, asc, pct)
   }
 
   /** The interpolation code from a quantile arg list's keyword tail. */
@@ -752,12 +751,19 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
   }
 
   /** The rolling methods and the [[graft.operators.Prefix.winEmitter]]
-    * mode each runs (std is the square root of the winvar emit). */
-  private val rollingFuse = Map("sum" -> "winsum", "mean" -> "winmean",
-    "min" -> "winmin", "max" -> "winmax", "count" -> "wincount",
-    "median" -> "winmed", "std" -> "winvar", "var" -> "winvar",
-    "skew" -> "winskew", "kurt" -> "winkurt", "quantile" -> "winquant",
-    "rank" -> "winrank", "sem" -> "winsem")
+    * window each runs for its arguments (std is the square root of the
+    * variance emit). */
+  private val rollingWins: Map[String, List[CValue] => Fuse.Win] = Map(
+    "sum" -> (_ => Fuse.Sum), "mean" -> (_ => Fuse.Mean),
+    "min" -> (_ => Fuse.Min), "max" -> (_ => Fuse.Max),
+    "count" -> (_ => Fuse.Count), "median" -> (_ => Fuse.Median),
+    "std" -> (_ => Fuse.Var), "var" -> (_ => Fuse.Var),
+    "skew" -> (_ => Fuse.Skew), "kurt" -> (_ => Fuse.Kurt),
+    "sem" -> (_ => Fuse.Sem), "rank" -> rollingRank,
+    "quantile" -> { a =>
+      val (q, interp) = rollingQuantileArgs(a)
+      Fuse.Quantile(q, interp)
+    })
 
   /** Whether `.rolling(n).m(args)`'s argument list has m's shape:
     * quantile(q[, interpolation=]), rank(keywords…), the rest none. */
@@ -767,15 +773,6 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         args.nonEmpty && !args.head.isInstanceOf[CKw] && args.length <= 2
       case "rank" => args.forall(_.isInstanceOf[CKw])
       case _      => args.isEmpty
-    }
-
-  /** The window emit's (q, option code) for `.rolling(n).m(args)`:
-    * quantile's q and interpolation, rank's packed options. */
-  private def rollingMethodArgs(m: String, args: List[CValue]): (Double, Int) =
-    m match {
-      case "rank"     => (Double.NaN, rollingRankCode(args))
-      case "quantile" => rollingQuantileArgs(args)
-      case _          => (Double.NaN, 0)
     }
 
   /** A Series rolling twin: the batch window `emit` once per position
@@ -1689,7 +1686,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           ctx.base = Some(graft.operators.Prefix.positionalLagShared(
             ctx.base.get, derived, ctx.rowIdOut, col(ctx.rowIdOut),
             valNames, n, valNames.map(vn => s"${vn}_sh"),
-            fuse = if (fuse) "diff" else "none"))
+            fuse = if (fuse) Fuse.Diff else Fuse.Donor))
           val out = cols.zip(valNames).map { case ((lbl, _), vn) =>
             val sh = col(s"${vn}_sh")
             // beyond-the-edge rows: NaN in std (the pandas fill), NULL
@@ -1742,7 +1739,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
               c.cast("double").as(vn) }
             ctx.base = Some(graft.operators.Prefix.positionalLagShared(
               ctx.base.get, derived, ctx.rowIdOut, col(ctx.rowIdOut),
-              valNames, n, valNames.map(vn => s"${vn}_sh"), fuse = "pct"))
+              valNames, n, valNames.map(vn => s"${vn}_sh"), fuse = Fuse.Pct))
             CMatrix(cols.zip(valNames).map { case ((lbl, _), vn) =>
               (lbl, col(s"${vn}_sh"))
             }, isBool = false)
@@ -2858,15 +2855,14 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         CExpandD(vs, ls, expandingMinPeriods(args))
 
       case (m, CRoll(cols, n, minp, center), rollArgs)
-          if rollingFuse.contains(m) && rollingArgsFit(m, rollArgs) =>
+          if rollingWins.contains(m) && rollingArgsFit(m, rollArgs) =>
         // r11: quantile(q, interpolation=) — pandas' five order-statistic
-        // interpolations at arbitrary q on the winmed sorted ring;
-        // skew/kurt — standardized moments on the winvar two-pass
+        // interpolations at arbitrary q on the median's sorted ring;
+        // skew/kurt — standardized moments on the variance two-pass
         // (window-local mean; exact under trends where pandas'
         // power-sum kernel loses digits); rank (session 4) — the current
         // cell's rank among the window's valid cells on the same ring
-        // (method/ascending/pct packed into the emit's option int)
-        val (rq, rInterp) = rollingMethodArgs(m, rollArgs)
+        val win = rollingWins(m)(rollArgs)
         ctx.seqCounter += 1
         val tag = ctx.seqCounter
         val rid = col(ctx.rowIdOut)
@@ -2938,7 +2934,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           // min_periods valid-count gate (default n = hole-poisoning)
           // lives in the emit itself (r10: any 1 <= minp <= n).
           // std/var: the emit two-passes the ring window on ITS OWN mean
-          // (winvar) — exact under any trend or global offset, no
+          // (Fuse.Var) — exact under any trend or global offset, no
           // centering stage, no broadcast job (the global-mean centering
           // below survives only in the prefix-sum fallback, whose sums
           // cannot see individual windows)
@@ -2955,8 +2951,8 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           val lead = if (center) (n - 1) / 2 else 0
           ctx.base = Some(graft.operators.Prefix.positionalLagShared(
             ctx.base.get, derived, ctx.rowIdOut, rid, valIn, n - 1,
-            valIn.map(_ + "_w"), fuse = rollingFuse(m), winMinPeriods = minp,
-            winQ = rq, centerLead = lead, winInterp = rInterp))
+            valIn.map(_ + "_w"), fuse = win, winMinPeriods = minp,
+            centerLead = lead))
           val out = cols.zipWithIndex.map { case ((lbl, _), i) =>
             val s = col(valIn(i) + "_w")
             val cell = m match {
@@ -3099,7 +3095,7 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           ctx.base = Some(graft.operators.Prefix.positionalLagShared(
             ctx.base.get, derived, ctx.rowIdOut, rid, xIn ++ yIn, n - 1,
             xIn.map(_ + "_w"),
-            fuse = if (m == "cov") "wincov" else "wincorr",
+            fuse = if (m == "cov") Fuse.Cov else Fuse.Corr,
             winMinPeriods = minp, centerLead = lead))
           CMatrix(union.map { l =>
             val i = shared.indexOf(l)
@@ -3235,15 +3231,14 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         }
       // Series twin: the fused batch emit on one slice
       case (m, CRollD(vs, ls, n, minp, center), rollArgs)
-          if rollingFuse.contains(m) && rollingArgsFit(m, rollArgs) =>
-        val (rq, rInterp) = rollingMethodArgs(m, rollArgs)
+          if rollingWins.contains(m) && rollingArgsFit(m, rollArgs) =>
         // a 1-position sum/mean is the cell itself, as the matrix path's
         // n == 1 projection emits it (the emit's 0.0 + v drops a −0.0)
         val out =
           if (n == 1 && (m == "sum" || m == "mean")) vs
           else rollingTwin(vs.map(v => Array[Any](v)), n, center,
-            graft.operators.Prefix.winEmitter(rollingFuse(m), n - 1, minp,
-              rq, rInterp))
+            graft.operators.Prefix.winEmitter(rollingWins(m)(rollArgs), n - 1,
+              minp))
         CVecD(if (m == "std") out.map(math.sqrt) else out, ls)
       // Series twins: the matrix path's running scan / α = 0 Welford ewm
       // scan on one slice
@@ -3308,7 +3303,8 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
         }
         requireLen(vs.length, os.length)
         CVecD(rollingTwin(vs.indices.map(i => Array[Any](vs(i), os(i))), n,
-          center, graft.operators.Prefix.winEmitter("win" + m, n - 1, minp,
+          center, graft.operators.Prefix.winEmitter(
+            if (m == "cov") Fuse.Cov else Fuse.Corr, n - 1, minp,
             pairOff = 1)), ls)
       // the matrix path's α = 0 ewm polarization (unit weights: the
       // expanding Welford), through the Series ewm twin
@@ -3344,8 +3340,9 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
             when(invalidOf(c), litOf(Double.NaN))
               .otherwise(c.cast("double")).as(valIn(i))
           }
-          val stat = m match { case "mean" => "mean"; case "sum" => "sum"
-                               case _ => "var" }
+          val stat = m match { case "mean" => EwmStat.Mean
+                               case "sum" => EwmStat.Sum
+                               case _ => EwmStat.Var }
           ctx.base = Some(
             if (adjust) graft.operators.Prefix.ewmScan(ctx.base.get,
               derived, ctx.rowIdOut, rid, valIn, alpha,
@@ -3370,10 +3367,12 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           // with an empty history
           val k = graft.operators.Prefix.EwmKernel.entered(
             graft.operators.Prefix.EwmKernel.seed(1), alpha, adjust,
-            if (m == "std") "var" else m, minp)
+            m match { case "mean" => EwmStat.Mean; case "sum" => EwmStat.Sum
+                      case _ => EwmStat.Var }, minp)
           val cell = new Array[Any](1)
           CVecD(vs.map { v =>
-            k.cells(org.apache.spark.sql.Row(v), cell, 0)
+            k.cells(new org.apache.spark.sql.catalyst.expressions
+              .GenericInternalRow(Array[Any](v)), cell)
             val out = cell(0).asInstanceOf[Double]
             if (m == "std") math.sqrt(out) else out
           }, ls)
@@ -3438,10 +3437,10 @@ final class FormulaCompiler(registry: Map[String, NamedData], mode: NumericMode)
           ctx.base = Some(
             if (adjust) graft.operators.Prefix.ewmScan(ctx.base.get,
               derived, ctx.rowIdOut, rid, scanIns, alpha,
-              scanIns.map(_ + "_w"), "var", minp)
+              scanIns.map(_ + "_w"), EwmStat.Var, minp)
             else graft.operators.Prefix.ewmScanRecursive(ctx.base.get,
               derived, ctx.rowIdOut, rid, scanIns, alpha,
-              scanIns.map(_ + "_w"), "var", minp))
+              scanIns.map(_ + "_w"), EwmStat.Var, minp))
           CMatrix(union.map { l =>
             val i = shared.indexOf(l)
             if (i < 0) (l, litOf(Double.NaN))

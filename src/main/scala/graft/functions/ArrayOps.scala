@@ -651,6 +651,19 @@ case class QuantileBucket(first: Expression, second: Expression,
     nullSafeCodeGen(ctx, ev, (a, o, v, t) =>
       s"${ev.value} = graft.functions.GraftVec.quantileBucket($a, $o, $v, $t, $parts);")
 
+  /** The bounds render as their count, as [[RankLookup]] renders its keys:
+    * the memoized bound literal holds up to parts·256 structs, and every
+    * explain and plan-info string of a slice-scan plan would print them. */
+  override def toString: String = {
+    val bounds = first match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(
+          a: org.apache.spark.sql.catalyst.util.ArrayData, _) =>
+        s"${a.numElements()} bounds"
+      case other => other.toString
+    }
+    s"quantile_bucket($bounds, $second, $third, $fourth, $parts)"
+  }
+
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression) =
     copy(first = f, second = s, third = t, fourth = q)

@@ -12,7 +12,7 @@ import graft.functions.{DotProduct, DotProductExact, Md5Long60, MinHashSig,
   * tooling layered on the session) get the same fast paths as the Column
   * API in `graft.functions.ArrayOps` — callable as `dot_product(a, b)`,
   * `dot_product_exact(a, b)`, `rolling_hash_portable(arr)` — plus the
-  * optimizer rules and the custom-operator planner strategy.
+  * optimizer rules and the custom-operator planner strategies.
   *
   * Wire-up (any of the three works):
   * {{{
@@ -32,9 +32,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => CompiledDotProductRule)
     ext.injectOptimizerRule(_ => WindowTopKRule)
     ext.injectOptimizerRule(_ => GlobalRowNumberRule)
-    // physical strategy for the grouped top-k operator (TopKPerKeyNode →
-    // partial heaps → exchange → final heaps)
+    // physical strategies for the grouped top-k operator (TopKPerKeyNode →
+    // partial heaps → exchange → final heaps) and the slice scans
+    // (SliceScanNode → SliceScanExec)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
+    ext.injectPlannerStrategy(_ => SliceScanStrategy)
     GraftExtensions.functions.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         GraftExtensions.info(name, usage), builder))
@@ -116,7 +118,7 @@ object GraftExtensions {
     }
 
   /** Idempotently install the optimizer rules AND the custom-operator
-    * planner strategy on an EXISTING session (r9): `spark.experimental`
+    * planner strategies on an EXISTING session (r9): `spark.experimental`
     * is the runtime registration hook Spark provides for exactly this —
     * the rules land in the optimizer's "User Provided Optimizers" batch,
     * the strategy ahead of the built-in ones. After this call a plain
@@ -137,6 +139,7 @@ object GraftExtensions {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations ++ missing
     TopKPerKey.ensureStrategy(spark)
+    SliceScan.ensureStrategy(spark)
     ensureFunctions(spark)
   }
 }

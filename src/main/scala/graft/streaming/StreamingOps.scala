@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DoubleType
 import graft.operators.Prefix
+import graft.operators.Prefix.{EwmStat, Fuse}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
 /** Structured-Streaming forms of the pipeline operators (the reference is
   * strictly batch — SURVEY §2.8 — but a 100 TB training-data pipeline
@@ -347,7 +349,10 @@ object StreamingOps extends Serializable {
   private final class LastCarry(from: Double) {
     private val k = Prefix.RunKernel.entered(Seq(Prefix.RunKind.Last),
       Seq(DoubleType), Array[Any](if (from.isNaN) null else from, 0L))
-    def apply(v: Double): Double = { k.absorb(Row(if (v.isNaN) null else v)); last }
+    def apply(v: Double): Double = {
+      k.absorb(new GenericInternalRow(Array[Any](if (v.isNaN) null else v)))
+      last
+    }
     def last: Double =
       Option(k.exportState()(0)).fold(Double.NaN)(_.asInstanceOf[Double])
   }
@@ -468,7 +473,7 @@ object StreamingOps extends Serializable {
     def fn(key: Long, in: Iterator[RwRow],
            state: GroupState[RwState]): Iterator[RwOut] = {
       val st0 = state.getOption.getOrElse(RwState(Nil))
-      val emits = Seq("winsum", "winmean", "winmin", "winmax", "wincount")
+      val emits = Seq(Fuse.Sum, Fuse.Mean, Fuse.Min, Fuse.Max, Fuse.Count)
         .map(Prefix.winEmitter(_, n - 1, effMinp))
       var pending = st0.pending.toVector
       val (aggs, ring) = windowed(st0.ring.map(v => Array[Any](v)), n, in)(
@@ -499,10 +504,13 @@ object StreamingOps extends Serializable {
   case class EwState(mean: Seq[Double], variance: Seq[Double])
   case class EwOut(key: Long, id: Long, mean: Double, variance: Double)
 
+  /** One value as a kernel input row. */
+  private def row(v: Double) = new GenericInternalRow(Array[Any](v))
+
   /** The batch ewm emit kernel (adjust=True) on one key's micro-batch,
     * entered from the key's carried state or an empty history. */
   private def ewmKernel(carried: Option[Seq[Double]], width: Int,
-                        alpha: Double, stat: String,
+                        alpha: Double, stat: EwmStat,
                         minPeriods: Int): Prefix.EwmKernel =
     Prefix.EwmKernel.entered(
       carried.fold(Prefix.EwmKernel.seed(width))(_.toArray), alpha,
@@ -537,22 +545,24 @@ object StreamingOps extends Serializable {
     def fn(key: Long, in: Iterator[EwRow],
            state: GroupState[EwState]): Iterator[EwOut] = {
       val st = state.getOption
-      val vr = ewmKernel(st.map(_.variance), 1, alpha, "var", minPeriods)
-      val cell = new Array[Any](2)
+      val vr = ewmKernel(st.map(_.variance), 1, alpha, EwmStat.Var,
+        minPeriods)
+      val cell = new Array[Any](1)
       // the mean of one value, and the state the mean carries
       val (mean, meanState): (Double => Double, () => Seq[Double]) =
         if (ffill) {
           val carry = new LastCarry(st.fold(Double.NaN)(_.mean.head))
           (carry(_), () => Seq(carry.last))
         } else {
-          val k = ewmKernel(st.map(_.mean), 1, alpha, "mean", minPeriods)
-          (v => { k.cells(Row(v), cell, 0); cell(0).asInstanceOf[Double] },
+          val k = ewmKernel(st.map(_.mean), 1, alpha, EwmStat.Mean,
+            minPeriods)
+          (v => { k.cells(row(v), cell); cell(0).asInstanceOf[Double] },
             () => k.exportState().toSeq)
         }
       val out = in.toSeq.sortBy(_.id).map { r =>
         val m = mean(r.value)
-        vr.cells(Row(r.value), cell, 1)
-        EwOut(key, r.id, m, cell(1).asInstanceOf[Double])
+        vr.cells(row(r.value), cell)
+        EwOut(key, r.id, m, cell(0).asInstanceOf[Double])
       }
       state.update(EwState(meanState(), vr.exportState().toSeq))
       out.iterator
@@ -643,13 +653,13 @@ object StreamingOps extends Serializable {
     val nan = Double.NaN
     def fn(key: Long, in: Iterator[PairRow],
            state: GroupState[EwCovState]): Iterator[EwCovOut] = {
-      val k = ewmKernel(state.getOption.map(_.kernel), 4, alpha, "var",
-        minPeriods)
+      val k = ewmKernel(state.getOption.map(_.kernel), 4, alpha,
+        EwmStat.Var, minPeriods)
       val v = new Array[Any](4)
       val out = in.toSeq.sortBy(_.id).map { r =>
-        k.cells(
-          if (r.x.isNaN || r.y.isNaN) Row(nan, nan, nan, nan)
-          else Row(r.x + r.y, r.x - r.y, r.x, r.y), v, 0)
+        k.cells(new GenericInternalRow(
+          if (r.x.isNaN || r.y.isNaN) Array[Any](nan, nan, nan, nan)
+          else Array[Any](r.x + r.y, r.x - r.y, r.x, r.y)), v)
         val Seq(vs, vd, vx, vy) = v.toSeq.map(_.asInstanceOf[Double])
         val cov = (vs - vd) / 4.0
         EwCovOut(key, r.id, cov, cov / math.sqrt(vx * vy))
@@ -682,7 +692,7 @@ object StreamingOps extends Serializable {
     import spark.implicits._
     def fn(key: Long, in: Iterator[PairRow],
            state: GroupState[RpState]): Iterator[RpOut] = {
-      val emits = Seq("wincov", "wincorr", "winsem")
+      val emits = Seq(Fuse.Cov, Fuse.Corr, Fuse.Sem)
         .map(Prefix.winEmitter(_, n - 1, effMinp, pairOff = 1))
       val carried = state.getOption.fold(Vector.empty[(Double, Double)])(
         _.ring).map { case (x, y) => Array[Any](x, y) }

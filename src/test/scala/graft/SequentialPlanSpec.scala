@@ -261,4 +261,31 @@ class SequentialPlanSpec extends SparkSpec {
       }
     }
   }
+
+  /** Rounding-boundary pins at sf0.1: e11_ewadj, e11_ewadjv, e11_ewvar and
+    * e11_rkurt round to 5–6 dp with cells within a few ULPs of a rounding
+    * boundary there, so a change of association order in the slice scans
+    * can flip an oracle cell. The unrounded result bits are pinned as
+    * digests (row-id order, NaN canonical, NULL marked) on the suite's 4
+    * slices, so such drift fails here first. */
+  test("sf0.1 rounding-boundary queries keep their golden bits") {
+    val sf01 = sf.replace("sf0.001", "sf0.1")
+    val golden = Map(
+      "qty.ewm(1, adjust=0).mean()" -> -2003184495,
+      "qty.ewm(1, adjust=0).var()" -> -1207513063,
+      "qty.ewm(1).var()" -> -1115146702,
+      "qty.rolling(6, min_periods=4).kurt()" -> -1908723540)
+    val got = golden.keys.map { f =>
+      val ev = new graft.api.FormulaEvaluator(
+        QueryCatalog.registry(spark, sf01), fillInvalid = true)
+      val graft.compile.MatrixResult(df, rid, lbls, _) =
+        ev.evaluateFormula(f): @unchecked
+      f -> scala.util.hashing.MurmurHash3.orderedHash(
+        df.orderBy(rid).select(lbls.map(org.apache.spark.sql.functions.col): _*)
+          .collect().toSeq.flatMap(r => lbls.indices.map(i =>
+            if (r.isNullAt(i)) "null"
+            else java.lang.Double.doubleToLongBits(r.getDouble(i)))))
+    }.toMap
+    assert(got == golden, s"sf0.1 boundary digests moved: $got")
+  }
 }

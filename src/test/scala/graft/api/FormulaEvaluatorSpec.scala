@@ -298,7 +298,7 @@ class FormulaEvaluatorSpec extends SparkSpec {
   }
 
   test(".cumsum()/.cummax() in bounded ADP mode (decimal prefix offsets)") {
-    // exercises Prefix.runningScan's java.math.BigDecimal fold: the
+    // exercises Prefix.runningScan's Decimal fold: the
     // decimal partials collected per slice must combine exactly
     val ev = new FormulaEvaluator(
       reg("a" -> fixA, "i" -> fixI), adpEnabled = true)

@@ -287,7 +287,7 @@ class PrefixSpec extends SparkSpec {
     }
     def run(): Seq[java.lang.Double] =
       Prefix.positionalLag(df, "k", col("k"), Seq("v"), 2, Seq("d"),
-          fuse = "diff")
+          fuse = Prefix.Fuse.Diff)
         .orderBy(col("k")).select(col("d")).collect()
         .map(r => if (r.isNullAt(0)) null else Double.box(r.getDouble(0)))
         .toSeq
@@ -436,7 +436,7 @@ class PrefixSpec extends SparkSpec {
     }
     def run(): Seq[java.lang.Double] =
       Prefix.positionalLag(df, "k", col("k"), Seq("v"), 2, Seq("p"),
-          fuse = "pct")
+          fuse = Prefix.Fuse.Pct)
         .orderBy(col("k")).select(col("p")).collect()
         .map(r => if (r.isNullAt(0)) null else Double.box(r.getDouble(0)))
         .toSeq

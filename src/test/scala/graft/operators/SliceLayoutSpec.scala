@@ -19,14 +19,14 @@ import org.apache.spark.sql.types._
   *      order or any emitted value;
   *   2. the plan contract: every shared emit consumes the cached layout
   *      with NO exchange between the in-memory scan and the
-  *      mapPartitions emitter (the per-query exchange + sort is gone);
+  *      SliceScanExec emitter (the per-query exchange + sort is gone);
   *   3. reuse: two different shared queries over the same base register
   *      exactly one layout; and the per-session registry stays bounded
   *      by its cap under distinct bases, evicting the least recently
   *      used layout;
   *   4. freshness: a Spark overwrite of a parquet source is seen by the
   *      next shared-layout scan over a re-read of that path;
-  *   5. the skeleton's one-partition-per-slice guard on the collected
+  *   5. the scan's one-partition-per-slice guard on the collected
   *      partials;
   *   6. the running scan's combine: every fold, forward and reversed,
   *      emits the same bits on four slices as on one, equal to a
@@ -80,10 +80,10 @@ class SliceLayoutSpec extends SparkSpec {
     val names = Seq("va", "vb")
     val d = derived(df, names)
     val legacy = Prefix.positionalLag(df.select(col("*") +: d: _*), "rid",
-      col("rid"), names, 4, names.map(_ + "_w"), fuse = "winmean",
+      col("rid"), names, 4, names.map(_ + "_w"), fuse = Prefix.Fuse.Mean,
       winMinPeriods = 2)
     val shared = Prefix.positionalLagShared(df, d, "rid", col("rid"),
-      names, 4, names.map(_ + "_w"), fuse = "winmean", winMinPeriods = 2)
+      names, 4, names.map(_ + "_w"), fuse = Prefix.Fuse.Mean, winMinPeriods = 2)
     assertSame(legacy, shared, names.map(_ + "_w"))
   }
 
@@ -94,9 +94,9 @@ class SliceLayoutSpec extends SparkSpec {
     for (n <- Seq(3, -2)) {
       val legacy = Prefix.positionalLag(df.select(col("*") +: d: _*),
         "rid", col("rid"), names, n, names.map(_ + "_s"),
-        fuse = if (n > 0) "diff" else "none")
+        fuse = if (n > 0) Prefix.Fuse.Diff else Prefix.Fuse.Donor)
       val shared = Prefix.positionalLagShared(df, d, "rid", col("rid"),
-        names, n, names.map(_ + "_s"), fuse = if (n > 0) "diff" else "none")
+        names, n, names.map(_ + "_s"), fuse = if (n > 0) Prefix.Fuse.Diff else Prefix.Fuse.Donor)
       assertSame(legacy, shared, names.map(_ + "_s"))
     }
   }
@@ -128,12 +128,13 @@ class SliceLayoutSpec extends SparkSpec {
       ("ewmScanRecursive", "mean") -> 1189695060,
       ("ewmScanRecursive", "var") -> -512093451)
     fourSlices {
-      for (stat <- Seq("mean", "var")) {
+      for ((stat, st) <- Seq("mean" -> Prefix.EwmStat.Mean,
+          "var" -> Prefix.EwmStat.Var)) {
         assert(digest(Prefix.ewmScan(df, d, "rid", col("rid"), names, 0.3,
-          outs, stat, 2), outs) == golden(("ewmScan", stat)),
+          outs, st, 2), outs) == golden(("ewmScan", stat)),
           s"ewmScan $stat moved off its golden digest")
         assert(digest(Prefix.ewmScanRecursive(df, d, "rid", col("rid"),
-          names, 0.3, outs, stat, 2), outs) ==
+          names, 0.3, outs, st, 2), outs) ==
           golden(("ewmScanRecursive", stat)),
           s"ewmScanRecursive $stat moved off its golden digest")
       }
@@ -157,11 +158,11 @@ class SliceLayoutSpec extends SparkSpec {
     val outs = names.map(_ + "_w")
     val scans = Seq(
       "positionalLagShared" -> Prefix.positionalLagShared(df, d, "rid",
-        col("rid"), names, 2, outs, fuse = "winsum", winMinPeriods = 1),
+        col("rid"), names, 2, outs, fuse = Prefix.Fuse.Sum, winMinPeriods = 1),
       "ewmScan" -> Prefix.ewmScan(df, d, "rid", col("rid"), names, 0.3,
-        outs, "var", 2),
+        outs, Prefix.EwmStat.Var, 2),
       "ewmScanRecursive" -> Prefix.ewmScanRecursive(df, d, "rid",
-        col("rid"), names, 0.3, outs, "mean", 2),
+        col("rid"), names, 0.3, outs, Prefix.EwmStat.Mean, 2),
       "runningQuantile" -> Prefix.runningQuantile(df, d, "rid", col("rid"),
         names, 0.5, 0, outs, 1),
       "runningScan" -> Prefix.runningScan(df, d, "rid", col("rid"), names,
@@ -170,10 +171,10 @@ class SliceLayoutSpec extends SparkSpec {
         names, Seq(Prefix.RunKind.Max, Prefix.RunKind.Last), outs,
         rev = true))
     import org.apache.spark.sql.execution.SparkPlan
-    // find the MapPartitions emitter and walk its subtree: it must reach
+    // find the SliceScanExec emitter and walk its subtree: it must reach
     // an InMemoryTableScan without crossing a shuffle exchange
     def findEmit(p: SparkPlan): Option[SparkPlan] =
-      if (p.getClass.getSimpleName.startsWith("MapPartitions")) Some(p)
+      if (p.getClass.getSimpleName.startsWith("SliceScanExec")) Some(p)
       else p.children.iterator.map(findEmit).collectFirst {
         case Some(x) => x }
     def collapse(p: SparkPlan): SparkPlan = p match {
@@ -193,7 +194,7 @@ class SliceLayoutSpec extends SparkSpec {
       shared.count() // materialize the layout so the final plan is real
       val plan = shared.queryExecution.executedPlan
       val emit = findEmit(collapse(plan))
-      assert(emit.isDefined, s"$name: no MapPartitions emitter in:\n$plan")
+      assert(emit.isDefined, s"$name: no SliceScanExec emitter in:\n$plan")
       assert(scanBelow(emit.get),
         s"$name: shared emit does not sit on the cached layout:\n${emit.get}")
     }
@@ -205,16 +206,16 @@ class SliceLayoutSpec extends SparkSpec {
     val d1 = derived(df, names)
     val d2 = Seq((col("a") * 2).as(names(0)), (col("b") * 3).as(names(1)))
     Prefix.positionalLagShared(df, d1, "rid", col("rid"), names, 2,
-      names.map(_ + "_w"), fuse = "winsum", winMinPeriods = 1).count()
+      names.map(_ + "_w"), fuse = Prefix.Fuse.Sum, winMinPeriods = 1).count()
     val afterOne = Prefix.sliceLayouts(spark).size
     Prefix.ewmScan(df, d2, "rid", col("rid"), names, 0.5,
-      names.map(_ + "_e"), "mean", 0).count()
+      names.map(_ + "_e"), Prefix.EwmStat.Mean, 0).count()
     assert(Prefix.sliceLayouts(spark).size == afterOne,
       "a second shared query over the same base registered a new layout")
     // distinct bases may not grow the registry past its cap
     (0 until 20).foreach { i =>
       Prefix.positionalLagShared(frame(60 + i), d1, "rid", col("rid"),
-        names, 1, names.map(_ + "_w"), fuse = "winsum",
+        names, 1, names.map(_ + "_w"), fuse = Prefix.Fuse.Sum,
         winMinPeriods = 1).count()
     }
     // the shared suite session may already sit AT the cap from earlier
@@ -253,7 +254,7 @@ class SliceLayoutSpec extends SparkSpec {
     def scan(): (Double, Double) = {
       val r = Prefix.positionalLagShared(spark.read.parquet(path),
         Seq(col("v").as("vv")), "rid", col("rid"), Seq("vv"), 2,
-        Seq("vv_w"), fuse = "winsum", winMinPeriods = 1)
+        Seq("vv_w"), fuse = Prefix.Fuse.Sum, winMinPeriods = 1)
         .agg(sum("v"), sum("vv_w")).head()
       (r.getDouble(0), r.getDouble(1))
     }
@@ -268,14 +269,15 @@ class SliceLayoutSpec extends SparkSpec {
   }
 
   test("a slice partial arriving from two partitions is refused") {
-    val one = Array(Row(0, Seq(1.0)), Row(2, Seq(2.0)))
-    assert(Prefix.slicePartials[Double](one, 4) ==
+    import graft.plans.SliceScan.slicePartials
+    val one = Seq(0 -> Seq(1.0), 2 -> Seq(2.0))
+    assert(slicePartials(one.iterator, 4) ==
       Map(0 -> Seq(1.0), 2 -> Seq(2.0)))
     val dup = intercept[IllegalStateException](
-      Prefix.slicePartials[Double](one :+ Row(0, Seq(3.0)), 4))
+      slicePartials((one :+ (0 -> Seq(3.0))).iterator, 4))
     assert(dup.getMessage.contains("two partitions"))
     intercept[IllegalStateException](
-      Prefix.slicePartials[Double](Array(Row(4, Seq(1.0))), 4))
+      slicePartials(Iterator(4 -> Seq(1.0)), 4))
   }
 
   test("runningScan: every fold, forward and reversed, emits the same " +
