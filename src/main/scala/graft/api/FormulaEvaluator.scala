@@ -1,11 +1,16 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.{Failure, Try}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.ast.{FormulaAst, FormulaParser}
 import graft.compile._
 import graft.model._
-import graft.validate.ResultValidator
+import graft.validate.{ResultValidator, ValidationStats}
 
 /** The engine's single-query facade — the Spark-native counterpart of the
   * reference's `FormulaEvaluator` (coeff_maker.py:572-840).
@@ -88,14 +93,20 @@ final class FormulaEvaluator(
   /** X2: evaluate a formula end-to-end: parse → compile to one Spark plan →
     * validate (single-pass stats) → optional fill. Returns the result and
     * leaves warnings on `validator.lastWarning`. */
-  def evaluateFormula(formula: String): EvalResult = {
+  def evaluateFormula(formula: String): EvalResult = evaluate(formula, validator.stats)
+
+  /** [[evaluateFormula]] with the validator's stats taken from `statsOf`
+    * (see [[ResultValidator.validate]]). */
+  private[api] def evaluate(formula: String,
+                            statsOf: (DataFrame, Seq[String]) => ValidationStats)
+      : EvalResult = {
     val ast = parseFormula(formula)
     if (verbose && ast.containsOp("/"))
       System.err.println(
         s"[graft] formula '$formula' contains division; division by zero " +
           "produces invalid (Inf/NaN) cells that the validator will flag.")
     val raw = decorated(formula)(compiler.compile(ast))
-    val (validated, _) = validator.validate(raw, ast, formula, registry)
+    val (validated, _) = validator.validate(raw, ast, formula, registry, statsOf)
     validated
   }
 
@@ -124,6 +135,13 @@ object FormulaEvaluator {
       case ScalarResult(x)           => oneRow(Seq("value"), Seq(x))
     }
   }
+
+  /** The frame of a matrix or row result. */
+  private[api] def frameOf(result: EvalResult): Option[DataFrame] = result match {
+    case MatrixResult(df, _, _, _) => Some(df)
+    case RowResult(df, _)          => Some(df)
+    case _                         => None
+  }
 }
 
 /** Batch driver over a formula table — the counterpart of the reference's
@@ -150,6 +168,13 @@ object FormulaEvaluator {
   * Ignored when chaining (later formulas depend on earlier results). Each
   * task gets its own evaluator so validator state isn't shared across
   * threads.
+  *
+  * Each formula is computed once. Where the validator needs its stats
+  * (`fillInvalid = false`, or `verbose`), the stats pass IS the parquet
+  * write of the raw result to a staging directory under
+  * `spark.sql.warehouse.dir` (`_graft_staging/<uuid>/…`), the stats
+  * observed on that same job; [[writeResults]] then commits the staged
+  * copy by a rename instead of computing the formula a second time.
   */
 final class CoefficientCalculator(
     dataDict: Map[String, NamedData],
@@ -177,15 +202,118 @@ final class CoefficientCalculator(
   val evaluator = new FormulaEvaluator(dataDict, adpEnabled, decimalPrecision,
                                        fillInvalid, verbose, unboundedExponent)
 
+  private def spark = coefficientMap.sparkSession
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
+
+  /** Where this calculator stages results:
+    * `<spark.sql.warehouse.dir>/_graft_staging/<uuid>`, made on first use
+    * and deleted when the JVM closes its FileSystems. */
+  private[api] lazy val stagingRoot: Path = {
+    val root = new Path(spark.conf.get("spark.sql.warehouse.dir"),
+      s"_graft_staging/${java.util.UUID.randomUUID()}")
+    val fs = root.getFileSystem(hadoopConf)
+    fs.mkdirs(root)
+    fs.deleteOnExit(root)
+    root
+  }
+
+  /** Staged copies not yet committed, by the result frame they hold
+    * (compared by reference). */
+  private val staged = new java.util.IdentityHashMap[DataFrame, Path]()
+  private val stageSeq = new java.util.concurrent.atomic.AtomicLong()
+  /** How long a staged write waits for its observed stats before it runs
+    * the validator's own stats job instead. */
+  private val observationWait = 30.seconds
+
+  private def delete(dir: Path): Unit = dir.getFileSystem(hadoopConf).delete(dir, true)
+
+  /** Deletes every staged copy not yet committed. */
+  private def discardStaged(): Unit = staged.synchronized {
+    staged.values.forEach(delete(_))
+    staged.clear()
+  }
+
+  /** `f` over `items` in order: on a pool of up to `parallelism` threads
+    * when there are two or more, where every call finishes before the
+    * first failure in item order is rethrown. */
+  private def onPool[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    if (parallelism <= 1 || items.size <= 1) items.map(f) else {
+      val pool = Executors.newFixedThreadPool(math.min(parallelism, items.size))
+      try {
+        val futures = items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) }))
+        futures.map(fu => Try(fu.get()).recoverWith {
+          case e: ExecutionException => Failure(e.getCause)
+        }).map(_.get)
+      } finally pool.shutdown()
+    }
+
   /** S4 sink: write every computed coefficient to `outDir/<name>` parquet
     * (the reference returns an in-memory dict and writes nothing; at scale
-    * the results are tables, so persisting is the natural sink). */
+    * the results are tables, so persisting is the natural sink). A result
+    * this calculator staged is committed by renaming its copy into place
+    * (replacing what is there, then refreshing cached reads of the path
+    * as Spark's own overwrite does); any other result, a second write of
+    * one, or a target on another FileSystem is written from its plan.
+    * Several results are written on the `parallelism` pool. */
   def writeResults(results: scala.collection.Map[String, EvalResult],
                    outDir: String): Unit =
-    results.foreach { case (name, result) =>
-      FormulaEvaluator.asDataFrame(result, coefficientMap.sparkSession)
-        .write.mode("overwrite").parquet(s"$outDir/$name")
+    onPool(results.toSeq) { case (name, result) =>
+      val target = s"$outDir/$name"
+      val copy = FormulaEvaluator.frameOf(result)
+        .flatMap(df => staged.synchronized(Option(staged.remove(df))))
+      if (!copy.exists(commit(_, new Path(target)))) {
+        copy.foreach(delete)
+        FormulaEvaluator.asDataFrame(result, spark)
+          .write.mode("overwrite").parquet(target)
+      }
     }
+
+  /** Moves a staged copy to `target` in place of what is there; false,
+    * with nothing moved, when the two are on different FileSystems or the
+    * rename fails. */
+  private def commit(copy: Path, target: Path): Boolean = {
+    val fs = target.getFileSystem(hadoopConf)
+    fs.getUri == copy.getFileSystem(hadoopConf).getUri && {
+      fs.delete(target, true)
+      fs.mkdirs(target.getParent)
+      val moved = Try(fs.rename(copy, target)).getOrElse(false)
+      if (moved) spark.catalog.refreshByPath(target.toString)
+      moved
+    }
+  }
+
+  /** Evaluates `formula` with its stats pass, if it has one, run as the
+    * parquet write of the raw result to a fresh staging directory, the
+    * stats observed on that job. The copy is kept for [[writeResults]]
+    * only when the validated result is the very frame staged (not a fill);
+    * it is deleted when validation raises. A write that fails leaves the
+    * stats to the validator's own job, which raises as it always did. */
+  private def evaluateStaged(ev: FormulaEvaluator, formula: String): EvalResult = {
+    var copy = Option.empty[(DataFrame, Path)]
+    def stage(df: DataFrame, cols: Seq[String]): ValidationStats =
+      ev.validator.aggregates(df, cols).fold(ValidationStats.Empty) { a =>
+        val dir = new Path(stagingRoot, stageSeq.incrementAndGet().toString)
+        val obs = new Observation()
+        val observed = Try {
+          df.observe(obs, a.columns.head, a.columns.tail: _*).write.parquet(dir.toString)
+          copy = Some(df -> dir)
+          // the observation completes on the listener bus, after the write
+          Await.ready(obs.future, observationWait)
+          obs.get
+        }
+        if (copy.isEmpty) delete(dir)
+        observed.fold(_ => ev.validator.stats(df, cols), a.read)
+      }
+    val result = try ev.evaluate(formula, stage) catch {
+      case e: Throwable => copy.foreach(c => delete(c._2)); throw e
+    }
+    copy.foreach { case (df, dir) =>
+      if (FormulaEvaluator.frameOf(result).exists(_ eq df))
+        staged.synchronized(staged.put(df, dir))
+      else delete(dir)
+    }
+    result
+  }
 
   /** F3/F4: whether a table row runs against `registry` — an empty
     * formula or unknown variables skip it with the reference's notice. */
@@ -203,8 +331,15 @@ final class CoefficientCalculator(
     }
 
   /** X3: the batch loop. The formula table is tiny and driver-resident; each
-    * formula compiles to an independent Spark job. */
+    * formula compiles to an independent Spark job. Staged copies of the
+    * previous batch that were never written are deleted first, and those of
+    * a batch that fails with it. */
   def computeCoefficients(): scala.collection.immutable.ListMap[String, EvalResult] = {
+    discardStaged()
+    try batch() catch { case e: Throwable => discardStaged(); throw e }
+  }
+
+  private def batch(): scala.collection.immutable.ListMap[String, EvalResult] = {
     val rows = coefficientMap
       .select(col(resultNameCol).cast("string"), col(formulaNameCol).cast("string"))
       .collect()
@@ -215,7 +350,7 @@ final class CoefficientCalculator(
     var dict = dataDict
     rows.foreach { case (name, formula) =>
       if (runnable(name, formula, ev.registry)) {
-        val result = ev.evaluateFormula(formula)
+        val result = evaluateStaged(ev, formula)
         out = out + (name -> result)
         System.err.println(s"[graft] computed coefficient '$name' = $formula")
         if (chainResults) asNamedData(result).foreach { nd =>
@@ -233,28 +368,18 @@ final class CoefficientCalculator(
     * table order wins). */
   private def computeConcurrent(rows: Array[(String, String)])
       : scala.collection.immutable.ListMap[String, EvalResult] = {
-    val todo = rows.filter { case (name, formula) =>
+    val todo = rows.toSeq.filter { case (name, formula) =>
       runnable(name, formula, evaluator.registry)
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    try {
-      val futures = todo.map { case (name, formula) =>
-        (name, formula, pool.submit(new java.util.concurrent.Callable[EvalResult] {
-          def call(): EvalResult =
-            new FormulaEvaluator(dataDict, adpEnabled, decimalPrecision,
-              fillInvalid, verbose, unboundedExponent).evaluateFormula(formula)
-        }))
-      }
-      var out = scala.collection.immutable.ListMap.empty[String, EvalResult]
-      futures.foreach { case (name, formula, f) =>
-        val result = try f.get() catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        }
-        out = out + (name -> result)
+    val results = onPool(todo) { case (_, formula) =>
+      evaluateStaged(new FormulaEvaluator(dataDict, adpEnabled, decimalPrecision,
+        fillInvalid, verbose, unboundedExponent), formula)
+    }
+    todo.zip(results).foldLeft(scala.collection.immutable.ListMap.empty[String, EvalResult]) {
+      case (out, ((name, formula), result)) =>
         System.err.println(s"[graft] computed coefficient '$name' = $formula")
-      }
-      out
-    } finally pool.shutdown()
+        out + (name -> result)
+    }
   }
 
   /** Chaining wrap: matrix results keep their lazy plan; 1-row reductions

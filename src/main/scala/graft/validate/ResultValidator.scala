@@ -21,6 +21,20 @@ final case class ValidationStats(totalCells: Long, invalidCount: Long,
     if (totalCells == 0) 0.0 else 100.0 * invalidCount / totalCells
 }
 
+object ValidationStats {
+  /** A frame with no cell column: nothing to count, nothing invalid. */
+  val Empty: ValidationStats = ValidationStats(0L, 0L, hasNan = false, hasInf = false)
+}
+
+/** The aggregate columns of [[ResultValidator.aggregates]] (named `n`,
+  * `inv`, `nan`, `inf`) over `width` cell columns, and how to read their
+  * values back, by name, into [[ValidationStats]]. */
+final case class StatAggregates(columns: Seq[Column], width: Int) {
+  def read(value: String => Any): ValidationStats =
+    ValidationStats(value("n").asInstanceOf[Long] * width, value("inv").asInstanceOf[Long],
+      value("nan").asInstanceOf[Boolean], value("inf").asInstanceOf[Boolean])
+}
+
 /** Per-cell validity subsystem (SURVEY §2.4 V1–V9) — the reference's
   * signature feature, re-expressed as Spark aggregates + projections.
   *
@@ -46,10 +60,13 @@ final class ResultValidator(mode: NumericMode, fillInvalid: Boolean, verbose: Bo
     if (std) c === lit(Double.PositiveInfinity) || c === lit(Double.NegativeInfinity)
     else lit(false)
 
-  /** V1+V2+V3 in one pass: one job, one tree-aggregate, no per-check rescan.
+  /** The V1+V2+V3 aggregates over a frame's cell columns, or None when it
+    * has none: one definition for every source of the stats, whether the
+    * validator's own aggregate job ([[stats]]) or an observation riding
+    * another action over the same frame (the calculator's staged write).
     * BOOLEAN columns (any/all reductions, r8) carry no invalid states and
     * are excluded — a bool cell is never NULL/NaN/±Inf by construction. */
-  def stats(df: DataFrame, valueCols0: Seq[String]): ValidationStats = {
+  def aggregates(df: DataFrame, valueCols0: Seq[String]): Option[StatAggregates] = {
     val valueCols = valueCols0.filter(c => df.schema(c).dataType match {
       case org.apache.spark.sql.types.DoubleType => true
       case _: org.apache.spark.sql.types.DecimalType => true
@@ -59,18 +76,23 @@ final class ResultValidator(mode: NumericMode, fillInvalid: Boolean, verbose: Bo
         mode.cellType == org.apache.spark.sql.types.StringType
       case _ => false // bool reductions carry no invalid states
     })
-    if (valueCols.isEmpty) return ValidationStats(0L, 0L,
-      hasNan = false, hasInf = false)
-    val inv = valueCols.map(c => sum(invalidCol(col(c)).cast("long")))
-      .reduce(_ + _)
-    val nan = valueCols.map(c => max(nanCol(col(c)))).reduce(greatest(_, _))
-    val inf = valueCols.map(c => max(infCol(col(c)))).reduce(greatest(_, _))
-    val row = df.agg(count(lit(1)).as("n"), coalesce(inv, lit(0L)).as("inv"),
-                     coalesce(nan, lit(false)).as("nan"),
-                     coalesce(inf, lit(false)).as("inf")).head()
-    ValidationStats(row.getLong(0) * valueCols.length, row.getLong(1),
-                    row.getBoolean(2), row.getBoolean(3))
+    if (valueCols.isEmpty) None else {
+      val inv = valueCols.map(c => sum(invalidCol(col(c)).cast("long")))
+        .reduce(_ + _)
+      val nan = valueCols.map(c => max(nanCol(col(c)))).reduce(greatest(_, _))
+      val inf = valueCols.map(c => max(infCol(col(c)))).reduce(greatest(_, _))
+      Some(StatAggregates(Seq(count(lit(1)).as("n"), coalesce(inv, lit(0L)).as("inv"),
+        coalesce(nan, lit(false)).as("nan"), coalesce(inf, lit(false)).as("inf")),
+        valueCols.length))
+    }
   }
+
+  /** V1+V2+V3 in one pass: one job, one tree-aggregate, no per-check rescan. */
+  def stats(df: DataFrame, valueCols: Seq[String]): ValidationStats =
+    aggregates(df, valueCols).fold(ValidationStats.Empty) { a =>
+      val row = df.agg(a.columns.head, a.columns.tail: _*).head()
+      a.read(row.getAs[Any](_: String))
+    }
 
   /** V4: replace NaN/±Inf/NULL with zero — one narrow projection (the
     * reference ADP path loops per cell, coeff_maker.py:262-313; ours stays
@@ -87,9 +109,14 @@ final class ResultValidator(mode: NumericMode, fillInvalid: Boolean, verbose: Bo
     * force the stats pass (verbose mode) rather than read a sentinel.
     * Boolean frames, scalars and driver vectors follow the reference's
     * bypass/cheap paths (coeff_maker.py:183-185 [verified]).
+    * `statsOf` is where a matrix or row result's stats come from: by
+    * default [[stats]]' own aggregate job; a caller that runs an action
+    * over the frame anyway may observe [[aggregates]] on it instead.
     */
   def validate(result: EvalResult, ast: FormulaAst, formulaStr: String,
-               registry: Map[String, NamedData]): (EvalResult, Option[Long]) = {
+               registry: Map[String, NamedData],
+               statsOf: (DataFrame, Seq[String]) => ValidationStats = stats)
+      : (EvalResult, Option[Long]) = {
     lastWarning = None
     result match {
       // Fast path: when filling silently, the fill projection is semantically
@@ -103,12 +130,12 @@ final class ResultValidator(mode: NumericMode, fillInvalid: Boolean, verbose: Bo
       case RowResult(df, labels) if fillInvalid && !verbose =>
         (fillRow(df, labels), None)
       case MatrixResult(df, rowId, labels, false) =>
-        val st = stats(df, labels)
+        val st = statsOf(df, labels)
         if (verbose) logDetails(st, formulaStr)
         finish(result, st, ast, formulaStr, registry,
                fill = MatrixResult(fillDf(df, rowId, labels), rowId, labels, isBool = false))
       case RowResult(df, labels) =>
-        val st = stats(df, labels)
+        val st = statsOf(df, labels)
         if (verbose) logDetails(st, formulaStr)
         finish(result, st, ast, formulaStr, registry, fill = fillRow(df, labels))
       case VecResult(v) =>

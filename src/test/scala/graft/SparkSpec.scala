@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
@@ -72,6 +73,35 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val fixE = mat3(Seq.fill(3)(Seq(0.0, 0.0, 0.0)))
   lazy val fixG = mat3(Seq(Seq(6, 0, 0), Seq(0, 2, 0), Seq(0, 0, 7)).map(_.map(_.toDouble)))
   lazy val fixI = mat3(Seq(Seq(7, Double.NaN, 1), Seq(9, 5, 9), Seq(7, 8, Double.NaN)))
+
+  /** The Spark jobs `body` starts: jobs of a job group seen by a listener,
+    * read once a marker job started after `body` has been seen (listener
+    * events arrive in order). */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"spec-jobs-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .orNull
+        if (g != null) seen.merge(g, 1, (a: Integer, b: Integer) => a + b)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.containsKey(group + "-marker") &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.containsKey(group + "-marker"),
+        "the marker job never reached the listener")
+      (out, Option(seen.get(group)).map(_.intValue).getOrElse(0))
+    } finally sc.removeSparkListener(listener)
+  }
 
   def reg(entries: (String, NamedData)*): Map[String, NamedData] = entries.toMap
 }

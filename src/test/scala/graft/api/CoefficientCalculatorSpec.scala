@@ -156,4 +156,145 @@ class CoefficientCalculatorSpec extends SparkSpec {
     val MatrixResult(df2, rid2, lb2, _) = out2("b2"): @unchecked
     assert(cells(df2, rid2, lb2)(0L)("c0") == 20.0) // (1+1)*10
   }
+
+  // ---- the staged commit: each validated formula is computed once --------
+
+  /** Fixtures a, b, c and i (FIXTURES.md §A) as column groups of ONE
+    * backing frame, so that a formula over them plans no join and an
+    * action over it is one Spark job. */
+  private lazy val shared: Map[String, NamedData] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val names = Seq("a" -> fixA, "b" -> fixB, "c" -> fixC, "i" -> fixI)
+    val cols = for ((n, _) <- names; j <- 0 until 3) yield s"$n$j"
+    val vals = names.map { case (_, m) => cells(m.base, m.rowId, m.labels) }
+    val rows = (0L until 3L).map(r =>
+      Row.fromSeq(r +: (for (v <- vals; j <- 0 until 3) yield v(r)(s"c$j"))))
+    val base = spark.createDataFrame(java.util.List.of(rows: _*), StructType(
+      StructField("__row_id__", LongType) +: cols.map(StructField(_, DoubleType))))
+    names.map { case (n, _) =>
+      n -> Matrix(base, "__row_id__", (0 until 3).map(j => (s"c$j", s"$n$j")))
+    }.toMap
+  }
+
+  private def tmpDir(): String =
+    java.nio.file.Files.createTempDirectory("graft_sink").toString
+
+  /** What a calculator has staged and not yet committed. */
+  private def stagedCopies(calc: CoefficientCalculator): Seq[String] = {
+    val root = calc.stagingRoot
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Nil else fs.listStatus(root).map(_.getPath.getName).toSeq
+  }
+
+  /** The parquet part files under a directory. */
+  private def partFiles(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).toSet.flatten.filter(_.startsWith("part-"))
+
+  /** A written result's rows, sorted, every cell as a string. */
+  private def rowsAt(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.mkString("|")).toSeq.sorted
+
+  test("staged commit: an ADP batch of k matrix formulas runs k jobs, its write none") {
+    val fm = formulaTable("m1" -> "a * b + c", "m2" -> "a - b", "m3" -> "a * 2")
+    val calc = new CoefficientCalculator(shared, fm, adpEnabled = true)
+    val (out, computeJobs) = jobsOf(calc.computeCoefficients())
+    assert(computeJobs == 3)
+    assert(stagedCopies(calc).size == 3)
+    val dir = tmpDir()
+    val (_, writeJobs) = jobsOf(calc.writeResults(out, dir))
+    assert(writeJobs == 0)
+    assert(stagedCopies(calc).isEmpty)
+    val got = cells(spark.read.parquet(s"$dir/m1"), "__row_id__", Seq("c0", "c1", "c2"))
+    assert(got(0L)("c0") == 3.0 && got(1L)("c2") == 26.0)
+    // the returned results keep their lazy plans
+    val MatrixResult(df, rowId, labels, _) = out("m1"): @unchecked
+    assert(cells(df, rowId, labels) == got)
+  }
+
+  test("staged commit: a standard-mode cumsum runs its slice-scan partial pass once") {
+    val fm = formulaTable("cs" -> "i.cumsum()")
+    def calc = new CoefficientCalculator(shared, fm, adpEnabled = false)
+    calc.computeCoefficients() // warm the slice layout and its bounds
+    val c = calc
+    val dir = tmpDir()
+    val (_, jobs) = jobsOf(c.writeResults(c.computeCoefficients(), dir))
+    // the partial pass (a nested job) and the staged write; a separate
+    // stats action would run both again
+    assert(jobs == 2)
+    val got = cells(spark.read.parquet(s"$dir/cs"), "__row_id__", Seq("c0", "c1", "c2"))
+    assert(got(2L)("c0") == 23.0 && got(1L)("c2") == 10.0 && got(2L)("c2").isNaN)
+  }
+
+  test("staged commit: a cached read of the target sees the new rows, renamed or rewritten") {
+    val dir = tmpDir()
+    /** Computes and writes `m`; true when the staged copy was renamed there. */
+    def write(formula: String, fill: Boolean): Boolean = {
+      val calc = new CoefficientCalculator(shared, formulaTable("m" -> formula),
+        adpEnabled = false, fillInvalid = fill)
+      val out = calc.computeCoefficients()
+      val copy = stagedCopies(calc)
+        .flatMap(n => partFiles(s"${calc.stagingRoot.toUri.getPath}/$n")).toSet
+      calc.writeResults(out, dir)
+      copy.nonEmpty && copy == partFiles(s"$dir/m")
+    }
+    def cellAt(rowId: Long): Double =
+      cells(spark.read.parquet(s"$dir/m"), "__row_id__", Seq("c0"))(rowId)("c0")
+    write("a * 2", fill = false)
+    val cached = spark.read.parquet(s"$dir/m").cache()
+    try {
+      assert(cached.count() == 3 && cellAt(1L) == 8.0)
+      assert(write("a * 3", fill = false)) // the rename commit
+      assert(cellAt(1L) == 12.0)
+      assert(!write("a * 4", fill = true)) // a fill result: a plain write
+      assert(cellAt(1L) == 16.0)
+    } finally cached.unpersist()
+  }
+
+  test("staging hygiene: copies go with a failed batch, the next batch and the write") {
+    val failing = new CoefficientCalculator(reg("a" -> fixA, "e" -> fixE),
+      formulaTable("ok" -> "a + 1", "d" -> "a / e", "ok2" -> "a * 2"), adpEnabled = false)
+    assertThrows[graft.validate.AllInvalidResultException](failing.computeCoefficients())
+    assert(stagedCopies(failing).isEmpty)
+
+    val calc = new CoefficientCalculator(shared,
+      formulaTable("m" -> "a * 2", "n" -> "a + 1"), adpEnabled = false)
+    val first = calc.computeCoefficients()
+    val firstCopies = stagedCopies(calc)
+    assert(firstCopies.size == 2)
+    val second = calc.computeCoefficients()
+    assert(stagedCopies(calc).size == 2 && stagedCopies(calc).intersect(firstCopies).isEmpty)
+    val (dir1, dir2) = (tmpDir(), tmpDir())
+    calc.writeResults(second, dir1)
+    assert(stagedCopies(calc).isEmpty)
+    // the first batch's copies are gone: its results are written from their plans
+    calc.writeResults(first, dir2)
+    assert(rowsAt(s"$dir1/m") == rowsAt(s"$dir2/m"))
+  }
+
+  test("staging hygiene: writing one result twice gives identical parquet") {
+    val calc = new CoefficientCalculator(shared, formulaTable("m" -> "a / i"),
+      adpEnabled = false)
+    val out = calc.computeCoefficients()
+    val (dir1, dir2) = (tmpDir(), tmpDir())
+    assert(jobsOf(calc.writeResults(out, dir1))._2 == 0) // the rename commit
+    assert(jobsOf(calc.writeResults(out, dir2))._2 == 1) // a plain write
+    assert(partFiles(s"$dir1/m").size == partFiles(s"$dir2/m").size)
+    assert(spark.read.parquet(s"$dir1/m").schema == spark.read.parquet(s"$dir2/m").schema)
+    assert(rowsAt(s"$dir1/m") == rowsAt(s"$dir2/m"))
+  }
+
+  test("writeResults writes a multi-result map on the pool as it does one by one") {
+    val fm = formulaTable("m" -> "a / i", "v" -> "i.sum()", "s" -> "1 + 2")
+    def written(par: Int): Map[String, Seq[String]] = {
+      val calc = new CoefficientCalculator(shared, fm,
+        adpEnabled = false, fillInvalid = true, parallelism = par)
+      val dir = tmpDir()
+      calc.writeResults(calc.computeCoefficients(), dir)
+      Seq("m", "v", "s").map(n => n -> rowsAt(s"$dir/$n")).toMap
+    }
+    val (seq1, par4) = (written(1), written(4))
+    assert(seq1 == par4)
+    assert(seq1("m").size == 3 && seq1("s") == Seq("3.0"))
+  }
 }

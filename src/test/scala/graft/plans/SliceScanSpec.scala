@@ -5,7 +5,6 @@ import graft.api.FormulaEvaluator
 import graft.compile.MatrixResult
 import graft.model.Matrix
 import graft.operators.Prefix
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -43,35 +42,6 @@ class SliceScanSpec extends SparkSpec {
       case MatrixResult(df, _, _, _) => df
       case other => fail(s"$f: expected a matrix result, got $other")
     }
-
-  /** The Spark jobs `body` starts: jobs of a job group seen by a listener,
-    * read once a marker job started after `body` has been seen (listener
-    * events arrive in order). */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"slice-scan-spec-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .orNull
-        if (g != null) seen.merge(g, 1, (a: Integer, b: Integer) => a + b)
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "body")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.containsKey(group + "-marker") &&
-          System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.containsKey(group + "-marker"),
-        "the marker job never reached the listener")
-      (out, Option(seen.get(group)).map(_.intValue).getOrElse(0))
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Every node of a final physical plan, through adaptive wrappers and
     * query stages. */

@@ -86,4 +86,24 @@ class ResultValidatorSpec extends SparkSpec {
     val VecResult(v) = ev.evaluateFormula("s1 / s2"): @unchecked
     assert(v.values == IndexedSeq(0.0, 0.0)) // Inf and NaN both filled
   }
+
+  test("stats observed on another action equal the aggregate job's") {
+    val std = mat3(Seq(
+      Seq(1.0, Double.NaN, 3.0),
+      Seq(Double.PositiveInfinity, 5.0, 6.0),
+      Seq(7.0, 8.0, Double.NegativeInfinity))).base
+    val dec = new FormulaEvaluator(reg("a" -> fixA, "g" -> fixG), adpEnabled = true)
+      .evaluateRaw("a / g") match { case MatrixResult(df, _, _, _) => df }
+    val adp = new ResultValidator(NumericMode(true, 35, false), fillInvalid = false,
+      verbose = false)
+    for ((v, df) <- Seq(validator() -> std, validator() -> fixA.base, adp -> dec)) {
+      val cols = Seq("c0", "c1", "c2")
+      val a = v.aggregates(df, cols).get
+      val obs = new org.apache.spark.sql.Observation()
+      df.observe(obs, a.columns.head, a.columns.tail: _*).write.format("noop")
+        .mode("overwrite").save()
+      assert(a.read(obs.get) == v.stats(df, cols))
+    }
+    assert(adp.stats(dec, Seq("c0", "c1", "c2")).invalidCount == 6)
+  }
 }
