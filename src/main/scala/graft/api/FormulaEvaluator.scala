@@ -169,12 +169,14 @@ object FormulaEvaluator {
   * task gets its own evaluator so validator state isn't shared across
   * threads.
   *
-  * Each formula is computed once. Where the validator needs its stats
-  * (`fillInvalid = false`, or `verbose`), the stats pass IS the parquet
-  * write of the raw result to a staging directory under
-  * `spark.sql.warehouse.dir` (`_graft_staging/<uuid>/…`), the stats
-  * observed on that same job; [[writeResults]] then commits the staged
-  * copy by a rename instead of computing the formula a second time.
+  * Each formula is computed once when its result is sunk. Where the
+  * validator needs its stats and fills nothing (`fillInvalid = false`),
+  * the stats pass IS the parquet write of the raw result to a staging
+  * directory under `spark.sql.warehouse.dir` (`_graft_staging/<uuid>/…`),
+  * the stats observed on that same job; [[writeResults]] then commits the
+  * staged copy by a rename instead of computing the formula a second time.
+  * The trade: every validated result is written at compute time, also
+  * one the caller never passes to [[writeResults]].
   */
 final class CoefficientCalculator(
     dataDict: Map[String, NamedData],
@@ -205,12 +207,15 @@ final class CoefficientCalculator(
   private def spark = coefficientMap.sparkSession
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
-  /** Where this calculator stages results:
-    * `<spark.sql.warehouse.dir>/_graft_staging/<uuid>`, made on first use
-    * and deleted when the JVM closes its FileSystems. */
+  /** The directory this calculator's staging root is made under:
+    * `<spark.sql.warehouse.dir>/_graft_staging`. */
+  private[api] var stagingParent: Path =
+    new Path(spark.conf.get("spark.sql.warehouse.dir"), "_graft_staging")
+
+  /** Where this calculator stages results: `<stagingParent>/<uuid>`, made
+    * on first use and deleted when the JVM closes its FileSystems. */
   private[api] lazy val stagingRoot: Path = {
-    val root = new Path(spark.conf.get("spark.sql.warehouse.dir"),
-      s"_graft_staging/${java.util.UUID.randomUUID()}")
+    val root = new Path(stagingParent, java.util.UUID.randomUUID().toString)
     val fs = root.getFileSystem(hadoopConf)
     fs.mkdirs(root)
     fs.deleteOnExit(root)
@@ -225,7 +230,9 @@ final class CoefficientCalculator(
     * the validator's own stats job instead. */
   private val observationWait = 30.seconds
 
-  private def delete(dir: Path): Unit = dir.getFileSystem(hadoopConf).delete(dir, true)
+  /** Deletes a staged copy, at best: a cleanup that fails never replaces
+    * the result or the error it cleans up after. */
+  private def delete(dir: Path): Unit = Try(dir.getFileSystem(hadoopConf).delete(dir, true))
 
   /** Deletes every staged copy not yet committed. */
   private def discardStaged(): Unit = staged.synchronized {
@@ -254,14 +261,15 @@ final class CoefficientCalculator(
     * (replacing what is there, then refreshing cached reads of the path
     * as Spark's own overwrite does); any other result, a second write of
     * one, or a target on another FileSystem is written from its plan.
-    * Several results are written on the `parallelism` pool. */
+    * Several results are written on the `parallelism` pool: every write
+    * runs, then the first failure in map order is rethrown. */
   def writeResults(results: scala.collection.Map[String, EvalResult],
                    outDir: String): Unit =
     onPool(results.toSeq) { case (name, result) =>
       val target = s"$outDir/$name"
       val copy = FormulaEvaluator.frameOf(result)
         .flatMap(df => staged.synchronized(Option(staged.remove(df))))
-      if (!copy.exists(commit(_, new Path(target)))) {
+      if (!copy.exists(c => Try(commit(c, new Path(target))).getOrElse(false))) {
         copy.foreach(delete)
         FormulaEvaluator.asDataFrame(result, spark)
           .write.mode("overwrite").parquet(target)
@@ -285,23 +293,29 @@ final class CoefficientCalculator(
   /** Evaluates `formula` with its stats pass, if it has one, run as the
     * parquet write of the raw result to a fresh staging directory, the
     * stats observed on that job. The copy is kept for [[writeResults]]
-    * only when the validated result is the very frame staged (not a fill);
-    * it is deleted when validation raises. A write that fails leaves the
-    * stats to the validator's own job, which raises as it always did. */
+    * only when the validated result is the very frame staged; it is
+    * deleted when validation raises. A fill-mode calculator stages
+    * nothing, since a fill replaces the staged frame of every result that
+    * has invalid cells.
+    * Any staging failure (the staging root, the write, the observation)
+    * leaves the stats to the validator's own job, which raises as it
+    * always did. */
   private def evaluateStaged(ev: FormulaEvaluator, formula: String): EvalResult = {
+    if (fillInvalid) return ev.evaluateFormula(formula)
     var copy = Option.empty[(DataFrame, Path)]
     def stage(df: DataFrame, cols: Seq[String]): ValidationStats =
       ev.validator.aggregates(df, cols).fold(ValidationStats.Empty) { a =>
-        val dir = new Path(stagingRoot, stageSeq.incrementAndGet().toString)
+        var dir = Option.empty[Path]
         val obs = new Observation()
         val observed = Try {
-          df.observe(obs, a.columns.head, a.columns.tail: _*).write.parquet(dir.toString)
-          copy = Some(df -> dir)
+          dir = Some(new Path(stagingRoot, stageSeq.incrementAndGet().toString))
+          df.observe(obs, a.columns.head, a.columns.tail: _*).write.parquet(dir.get.toString)
+          copy = dir.map(df -> _)
           // the observation completes on the listener bus, after the write
           Await.ready(obs.future, observationWait)
           obs.get
         }
-        if (copy.isEmpty) delete(dir)
+        if (copy.isEmpty) dir.foreach(delete)
         observed.fold(_ => ev.validator.stats(df, cols), a.read)
       }
     val result = try ev.evaluate(formula, stage) catch {

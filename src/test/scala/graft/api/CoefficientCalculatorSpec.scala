@@ -251,6 +251,39 @@ class CoefficientCalculatorSpec extends SparkSpec {
     } finally cached.unpersist()
   }
 
+  test("staged commit: a staging root that cannot be made falls back to the stats job") {
+    import org.apache.hadoop.fs.Path
+    val blocker = java.io.File.createTempFile("graft_staging", ".file") // not a directory
+    blocker.deleteOnExit()
+    // a scheme with no FileSystem, and a parent that is a regular file
+    for (parent <- Seq(new Path("nofs://nowhere/staging"), new Path(blocker.toURI))) {
+      val calc = new CoefficientCalculator(shared,
+        formulaTable("m" -> "a * 2", "n" -> "a + 1"), adpEnabled = false)
+      calc.stagingParent = parent
+      val (out, computeJobs) = jobsOf(calc.computeCoefficients())
+      // the stats job per formula, its aggregate's map stage a job of its own
+      assert(computeJobs == 4, s"under $parent")
+      val dir = tmpDir()
+      assert(jobsOf(calc.writeResults(out, dir))._2 == 2) // written from the plans
+      assert(cells(spark.read.parquet(s"$dir/m"), "__row_id__", Seq("c0"))(1L)("c0") == 8.0)
+      val failing = new CoefficientCalculator(reg("a" -> fixA, "e" -> fixE),
+        formulaTable("d" -> "a / e"), adpEnabled = false)
+      failing.stagingParent = parent
+      assertThrows[graft.validate.AllInvalidResultException](failing.computeCoefficients())
+    }
+  }
+
+  test("staged commit: a verbose fill-mode calculator stages nothing") {
+    val calc = new CoefficientCalculator(shared, formulaTable("m" -> "a * 2"),
+      adpEnabled = false, fillInvalid = true, verbose = true)
+    val (out, computeJobs) = jobsOf(calc.computeCoefficients())
+    assert(computeJobs == 2) // the validator's stats job and its map stage
+    assert(stagedCopies(calc).isEmpty)
+    val dir = tmpDir()
+    assert(jobsOf(calc.writeResults(out, dir))._2 == 1) // written from the plan
+    assert(cells(spark.read.parquet(s"$dir/m"), "__row_id__", Seq("c0"))(1L)("c0") == 8.0)
+  }
+
   test("staging hygiene: copies go with a failed batch, the next batch and the write") {
     val failing = new CoefficientCalculator(reg("a" -> fixA, "e" -> fixE),
       formulaTable("ok" -> "a + 1", "d" -> "a / e", "ok2" -> "a * 2"), adpEnabled = false)
